@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry``    — flagship KG-construction query (pages -> quads) at sf0.001.
-``queries``  — one callable per implemented operator (SURVEY.md section 2 +
-               training-data ops); each takes (spark, sf_dir) -> DataFrame.
+``queries``  — one callable per KG-construction lane; each takes
+               (spark, sf_dir) -> DataFrame.
 ``oracle_sql`` — DuckDB ANSI-SQL twins. The synthetic pages table is built
                from ``documents`` with pure SQL string expressions
                (sources/pages.py), so the *expected quads* are exactly
@@ -39,15 +39,9 @@ from jsonld_streaming_parser_js_spark.operators.parse import (
 )
 from jsonld_streaming_parser_js_spark.operators import bgp
 from jsonld_streaming_parser_js_spark.operators import canonicalize as canon
-from jsonld_streaming_parser_js_spark.operators import dedup
 from jsonld_streaming_parser_js_spark.operators import inference
-from jsonld_streaming_parser_js_spark.operators import similarity
-from jsonld_streaming_parser_js_spark.operators import skew
-from jsonld_streaming_parser_js_spark.operators import stats
-from jsonld_streaming_parser_js_spark.operators import textstats
 
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
-SIM_QUERY_IDS = [0, 1, 2, 3, 4]
 
 # fuzzy-canonicalization MinHash shape, shared by the lane AND its DuckDB
 # oracle (r7 drift sweep: the oracle's rows-per-band derives from these)
@@ -69,10 +63,6 @@ def _quads(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -120,9 +110,6 @@ def _errors_lenient(spark, sf_dir):
     parsed = parse_blocks(extract_blocks(_pages(spark, sf_dir)), CONTEXTS)
     return errors_only(parsed)
 
-
-def _q_kg_errors(spark, sf_dir):
-    return _errors_lenient(spark, sf_dir).orderBy("url", "blk")
 
 
 def _q_kg_error_channels(spark, sf_dir):
@@ -177,69 +164,6 @@ def _errors_strict(spark, sf_dir):
     parsed = parse_blocks(_strict_blocks(spark, sf_dir), CONTEXTS,
                           parser_options=ParserOptions(strict_values=True))
     return errors_only(parsed)
-
-
-def _q_kg_quads_by_predicate(spark, sf_dir):
-    """Per-(pred, rdf:type-object) counts — the r7 merge of the old
-    kg_quads_by_predicate + kg_type_counts lanes: summing over rdf_type
-    reproduces the per-predicate rollup; filtering pred = rdf:type
-    reproduces the type-instance counts. One algebraic groupBy."""
-    return stats.quads_by_predicate_and_type(_quads(spark, sf_dir))
-
-
-def _q_kg_rollups(spark, sf_dir):
-    """Three KG governance rollups in one long-format lane (r7 registry
-    consolidation of kg_host_stats / kg_distinct_objects /
-    kg_entity_degree — each keeps its full former value oracle):
-
-    - view='host': per-domain quad volume + distinct entities (the
-      crawl-governance view; hosts are the natural partition unit)
-    - view='pred_distinct_objects': skew-safe two-phase distinct-object
-      count per predicate (uniform (pred, obj) dedup shuffle first)
-    - view='entity_degree': top-50 subjects by out-degree
-
-    All algebraic aggs with map-side partials; the union is of three
-    tiny aggregate outputs, never of corpus-sized inputs."""
-    q = _quads(spark, sf_dir)
-    host = F.regexp_extract("url", r"^https?://([^/]+)", 1)
-    hosts = (q.groupBy(host.alias("key"))
-             .agg(F.count("*").alias("m1"),
-                  F.countDistinct("subj").alias("m2"))
-             .select(F.lit("host").alias("view"), "key", "m1", "m2"))
-    dobj = (stats.distinct_objects_per_predicate(q)
-            .select(F.lit("pred_distinct_objects").alias("view"),
-                    F.col("pred").alias("key"),
-                    F.col("n_distinct_objects").alias("m1"),
-                    F.lit(0).cast("long").alias("m2")))
-    deg = (stats.entity_out_degree(q, limit=50)
-           .select(F.lit("entity_degree").alias("view"),
-                   F.col("subj").alias("key"),
-                   F.col("n_quads").alias("m1"),
-                   F.col("n_preds").alias("m2")))
-    return (hosts.unionByName(dobj).unionByName(deg)
-            .orderBy("view", "key"))
-
-
-def _q_kg_author_labels(spark, sf_dir):
-    labels = (_docs(spark, sf_dir)
-              .select((F.col("doc_id") % 7).alias("site"),
-                      (F.col("doc_id") % 50).alias("k"))
-              .distinct()
-              .select(
-                  F.concat(F.lit("<https://ex"), F.col("site").cast("string"),
-                           F.lit(".example.org/author/"),
-                           F.col("k").cast("string"),
-                           F.lit(">")).alias("entity"),
-                  F.concat(F.lit("Author "),
-                           F.col("k").cast("string")).alias("label")))
-    return stats.join_labels(_quads(spark, sf_dir), labels,
-                             "<http://schema.org/author>")
-
-
-def _q_kg_lineage(spark, sf_dir):
-    parsed = parse_blocks(extract_blocks(_pages(spark, sf_dir)), CONTEXTS)
-    return stats.per_url_lineage(
-        quads_only(parsed).dropDuplicates(), errors_only(parsed))
 
 
 def _q_kg_quads_i18n(spark, sf_dir):
@@ -351,285 +275,6 @@ def _q_kg_canonical_fuzzy(spark, sf_dir):
         _entity_quads(spark, sf_dir), min_jaccard=0.6,
         num_hashes=CANON_NUM_HASHES, bands=CANON_BANDS)
     return mapping.orderBy("node")
-
-
-def _q_dedup_exact(spark, sf_dir):
-    return (dedup.exact_dedup(_docs(spark, sf_dir))
-            .orderBy("text_md5"))
-
-
-def _q_dedup_ngram_jaccard(spark, sf_dir):
-    return (dedup.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.1)
-            .orderBy("doc_a", "doc_b"))
-
-
-def _q_dedup_minhash_lsh(spark, sf_dir):
-    return (dedup.minhash_lsh_pairs(_docs(spark, sf_dir), threshold=0.5)
-            .orderBy("doc_a", "doc_b"))
-
-
-def _q_dedup_simhash(spark, sf_dir):
-    return (dedup.simhash_near_pairs(_docs(spark, sf_dir), max_hamming=3)
-            .orderBy("doc_a", "doc_b"))
-
-
-def _q_dedup_neardup(spark, sf_dir):
-    """All three TEXT near-dup detectors in ONE lane (r7 registry
-    consolidation — frees slots for the entailment/BGP lanes while the
-    oracle still checks the UNION of the three former lanes'
-    assertions):
-
-    - method='ngram':   token-set Jaccard >= 0.1 within prefix blocks
-    - method='minhash': banded MinHash-LSH candidates, est_jaccard >= 0.5
-    - method='simhash': 64-bit SimHash pairs at Hamming distance <= 3
-
-    ``score`` is the method's own measure cast to double (jaccard |
-    est_jaccard | hamming) — the per-method value assertions are
-    unchanged, only stacked.
-
-    r8: legs are built UNSORTED (the kg_error_channels lesson, guide
-    §2.4): a per-leg orderBy under the union is NOT eliminated by
-    Catalyst, so each leg would pay a range-partition Exchange (plus
-    the range sampling pass over its whole subtree) that the outer
-    orderBy then redoes anyway. The single-method lanes keep their
-    sorted form for direct callers."""
-    ng = (dedup.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.1)
-          .select(F.lit("ngram").alias("method"), "doc_a", "doc_b",
-                  F.col("jaccard").cast("double").alias("score")))
-    mh = (dedup.minhash_lsh_pairs(_docs(spark, sf_dir), threshold=0.5)
-          .select(F.lit("minhash").alias("method"), "doc_a", "doc_b",
-                  F.col("est_jaccard").cast("double").alias("score")))
-    sh = (dedup.simhash_near_pairs(_docs(spark, sf_dir), max_hamming=3)
-          .select(F.lit("simhash").alias("method"), "doc_a", "doc_b",
-                  F.col("hamming").cast("double").alias("score")))
-    return (ng.unionByName(mh).unionByName(sh)
-            .orderBy("method", "doc_a", "doc_b"))
-
-
-def _q_text_stats(spark, sf_dir):
-    """Token counts + language-ID + fingerprint in ONE scan (r7 merge of
-    the token_count / lang_id / fingerprint lanes; the oracle checks all
-    seven columns, the union of the three former oracles)."""
-    return textstats.text_profile(_docs(spark, sf_dir)).orderBy("doc_id")
-
-
-def _q_text_quality(spark, sf_dir):
-    """Quality features for EVERY document plus the composite filter
-    verdict (r7 merge of text_quality + text_quality_filter): ``kept`` is
-    true iff the doc is its exact-dedup group's keeper AND passes the
-    quality thresholds — the old filter lane's rows are exactly the rows
-    with kept=true, so both guarantees survive in one lane."""
-    docs = _docs(spark, sf_dir)
-    q = textstats.quality_score(docs)
-    keep = (dedup.exact_dedup(docs)
-            .select(F.col("keep_doc_id").alias("doc_id"),
-                    F.lit(True).alias("_keeper")))
-    return (q.join(keep, "doc_id", "left")
-            .withColumn("kept",
-                        F.coalesce("_keeper", F.lit(False))
-                        & (F.col("n_tokens") >= 10)
-                        & (F.col("punct_ratio") <= 0.2))
-            .drop("_keeper")
-            .orderBy("doc_id"))
-
-
-def _q_text_boilerplate(spark, sf_dir):
-    """Repeated-span boilerplate detection (k-gram document frequency) —
-    the exact-substring dedup signal for training corpora."""
-    return (textstats.boilerplate_spans(_docs(spark, sf_dir))
-            .orderBy("doc_id"))
-
-
-def _q_text_pii(spark, sf_dir):
-    """PII / contamination pre-filter counts (emails, phone-shaped,
-    IPv4-shaped, SSN-shaped) — training-data hygiene stage."""
-    return textstats.pii_scan(_docs(spark, sf_dir)).orderBy("doc_id")
-
-
-def _q_sim_topk_cosine(spark, sf_dir):
-    emb = _tbl(spark, sf_dir, "embeddings")
-    return (similarity.brute_force_topk(emb, SIM_QUERY_IDS, k=5)
-            .orderBy("query_id", "rank"))
-
-
-def _q_sim_ivf_topk(spark, sf_dir):
-    """IVF-flat ANN: deterministic coarse quantizer -> inverted lists ->
-    nprobe-bounded exact search (the second scale path beside
-    hyperplane-LSH; full value oracle, no recall assumption)."""
-    emb = _tbl(spark, sf_dir, "embeddings")
-    return (similarity.ivf_topk(emb, SIM_QUERY_IDS, k=5)
-            .orderBy("query_id", "rank"))
-
-
-def _q_sim_ivf_recall(spark, sf_dir):
-    """Measured recall@5 of the IVF-flat ANN lane against its exact twin
-    (`brute_force_topk` computes the ground truth): one row
-    (n_hits, n_exact, recall). An approximate index whose recall is never
-    measured is a silent quality hole — this lane closes it, mirroring
-    dedup_embedding_lsh_recall. Hit = (query_id, neighbor_id) appears in
-    BOTH top-5 lists; both lists rank on rounded cos_sim with neighbor_id
-    tie-break, so the intersection is deterministic cross-engine. The
-    query set is a bounded probe (|Q| queries, one corpus scan per side),
-    so the audit itself stays runnable at corpus scale."""
-    emb = _tbl(spark, sf_dir, "embeddings")
-    ivf = (similarity.ivf_topk(emb, SIM_QUERY_IDS, k=5)
-           .select("query_id", "neighbor_id")
-           .withColumn("_hit", F.lit(1)))
-    exact = (similarity.brute_force_topk(emb, SIM_QUERY_IDS, k=5)
-             .select("query_id", "neighbor_id"))
-    # single left join + one agg: the expensive exact corpus scan appears
-    # ONCE in the plan (a separate n_exact count would embed it twice)
-    return (exact.join(ivf, ["query_id", "neighbor_id"], "left")
-            .agg(F.count("_hit").alias("n_hits"),
-                 F.count(F.lit(1)).alias("n_exact"))
-            .select("n_hits", "n_exact",
-                    F.round(F.col("n_hits")
-                            / F.greatest(F.col("n_exact"), F.lit(1)), 6)
-                    .alias("recall")))
-
-
-def _q_sim_lsh_topk(spark, sf_dir):
-    emb = _tbl(spark, sf_dir, "embeddings")
-    return (similarity.lsh_topk(emb, SIM_QUERY_IDS, k=5)
-            .orderBy("query_id", "rank"))
-
-
-def _q_sim_topk(spark, sf_dir):
-    """ALL THREE top-k similarity-search paths in one lane (r7 registry
-    consolidation; each keeps its full former value oracle):
-
-    - method='brute': exact baseline — broadcast queries, one corpus scan
-    - method='ivf': IVF-flat ANN — deterministic coarse quantizer,
-      nprobe-bounded in-list search (centroids inlined as literals)
-    - method='lsh': hyperplane-LSH ANN — bucket-restricted search
-
-    r8: legs built UNSORTED (per-leg orderBy under a union survives
-    Catalyst and costs a range Exchange + sampling pass per leg — the
-    kg_error_channels lesson); the outer orderBy defines the order."""
-    emb = _tbl(spark, sf_dir, "embeddings")
-    legs = [
-        similarity.brute_force_topk(emb, SIM_QUERY_IDS, k=5)
-        .withColumn("method", F.lit("brute")),
-        similarity.ivf_topk(emb, SIM_QUERY_IDS, k=5)
-        .withColumn("method", F.lit("ivf")),
-        similarity.lsh_topk(emb, SIM_QUERY_IDS, k=5)
-        .withColumn("method", F.lit("lsh")),
-    ]
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    return (out.select("method", "query_id", "neighbor_id", "rank",
-                       "cos_sim")
-            .orderBy("method", "query_id", "rank"))
-
-
-def _q_ann_recall(spark, sf_dir):
-    """BOTH approximate-index recall audits in one lane (r7 registry
-    consolidation): method='embedding_lsh' measures the near-dup LSH
-    candidate filter against its exact all-pairs twin on the
-    deterministic 1/4 md5 sample; method='ivf' measures IVF-flat
-    recall@5 against the brute-force top-k. An approximate index whose
-    recall is never measured is a silent quality hole — these rows keep
-    it measured per run, each against its fully SQL-replayed oracle."""
-    lsh = (_q_dedup_embedding_lsh_recall(spark, sf_dir)
-           .select(F.lit("embedding_lsh").alias("method"),
-                   F.col("n_lsh").alias("n_approx"), "n_exact", "recall"))
-    ivf = (_q_sim_ivf_recall(spark, sf_dir)
-           .select(F.lit("ivf").alias("method"),
-                   F.col("n_hits").alias("n_approx"), "n_exact", "recall"))
-    return lsh.unionByName(ivf).orderBy("method")
-
-
-def _q_kg_predicate_profile(spark, sf_dir):
-    """Per-predicate object-kind profile (KG quality-assurance view):
-    how many IRI / literal / bnode objects, language-tagged and typed
-    literals each predicate carries. One algebraic groupBy over the
-    lexical term prefixes — the schema-drift detector a production KG
-    pipeline runs after every crawl wave.
-
-    The corpus is the standard pages table UNION an adversarial block set
-    whose literal CONTENT contains escaped-quote sequences (``\\"@en``,
-    ``\\"^^<iri>``) — real web text does this, and a substring test
-    misclassifies it. Lang/datatype markers can only appear after the
-    literal's CLOSING quote, i.e. at the very END of the lexical term
-    (content quotes are serialized escaped as ``\\"``, so an escaped quote
-    never ends the term) — hence the END-ANCHORED tests below."""
-    from jsonld_streaming_parser_js_spark.sources.pages import (
-        adv_literal_blocks)
-    adv = quads_only(parse_blocks(adv_literal_blocks(spark, sf_dir), {}))
-    q = _quads(spark, sf_dir).unionByName(adv)
-    is_iri = F.col("obj").startswith("<").cast("long")
-    is_bnode = F.col("obj").startswith("_:").cast("long")
-    is_lit = F.col("obj").startswith('"').cast("long")
-    is_lang = F.col("obj").rlike('"@[A-Za-z][A-Za-z0-9-]*$').cast("long")
-    is_typed = F.col("obj").rlike('"\\^\\^<[^>]*>$').cast("long")
-    return (q.groupBy("pred")
-            .agg(F.count("*").alias("n_objs"),
-                 F.sum(is_iri).alias("n_iri"),
-                 F.sum(is_lit).alias("n_literal"),
-                 F.sum(is_bnode).alias("n_bnode"),
-                 F.sum(is_lang).alias("n_lang_tagged"),
-                 F.sum(is_typed).alias("n_typed"))
-            .orderBy("pred"))
-
-
-SAMPLE_RATES = {"en": 0.35, "de": 1.0, "zh": 0.0}
-SAMPLE_DEFAULT = 0.1
-
-# the standard 13-gram decontamination rule; the oracle's gram width
-# derives from THIS name (r7 drift sweep)
-DECON_N = 13
-
-# >= DECON_N lowercase words so the decontamination sentinel yields
-# full n-grams
-DECON_SENTINEL = (" shared benchmark passage used for contamination"
-                  " detection across this synthetic corpus evaluation"
-                  " suite revision seven")
-
-
-def _q_text_sample_stratified(spark, sf_dir):
-    """Deterministic per-stratum sampling (the source-mixing op of a
-    training-data recipe): md5-threshold keep-rule per lang — zero RNG
-    state, identical across engines/reruns/partitionings; narrow filter
-    with no shuffle."""
-    return (textstats.stratified_sample(_docs(spark, sf_dir),
-                                        SAMPLE_RATES, SAMPLE_DEFAULT)
-            .select("doc_id", "lang")
-            .orderBy("doc_id"))
-
-
-def _q_text_decontaminate(spark, sf_dir):
-    """Benchmark decontamination (13-gram overlap rule): docs sharing
-    any word 13-gram with the eval set are flagged. The corpus plants
-    the eval sentinel on doc_id%41 in {0,1}: %41==0 docs ARE the eval
-    set, %41==1 docs are known-contaminated, everything else is clean
-    unless it genuinely overlaps. Eval grams broadcast; the corpus
-    never shuffles."""
-    corpus = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.expr("text || CASE WHEN doc_id % 41 <= 1"
-               f" THEN '{DECON_SENTINEL}' ELSE '' END").alias("text"))
-    ev = corpus.where(F.expr("doc_id % 41 = 0"))
-    checked = corpus.where(F.expr("doc_id % 41 <> 0"))
-    return (textstats.contamination_flags(checked, ev, n=DECON_N)
-            .select("doc_id",
-                    F.col("n_hits").cast("long").alias("n_hits"),
-                    "contaminated")
-            .orderBy("doc_id"))
-
-
-def _q_text_repetition(spark, sf_dir):
-    """Gopher-style within-document repetition quality signals (new
-    r7): fraction of characters in the most frequent word 2-gram plus
-    the occurrence-weighted duplicated-5-gram character ratio — the
-    published repetition-removal rules for web-crawl corpora (PAPERS.md
-    training-data quality literature). One corpus scan, two
-    uniform-key shuffles (operators/textstats.repetition_signals); the
-    oracle recomputes the grams, the struct-max tie-break and both
-    ratios exactly in DuckDB."""
-    return (textstats.repetition_signals(
-        _docs(spark, sf_dir).select("doc_id", "text"))
-        .orderBy("doc_id"))
 
 
 def _q_kg_nquads_roundtrip(spark, sf_dir):
@@ -823,20 +468,6 @@ def _q_kg_upsert_wave(spark, sf_dir):
     return (store.unionByName(wave_diff(base, wave, wave_keys=keys))
             .orderBy("change", "url", "blk", "pred", "obj"))
 
-
-def _q_approx_distinct_hll(spark, sf_dir):
-    """Approximate-aggregate lane: deterministic md5-HyperLogLog distinct
-    count of KG subjects (operators/sketch.py) AUDITED against the exact
-    count in the same row. Unlike engine-native HLLs (hash functions
-    differ), the md5-derived sketch is value-identical in DuckDB, so
-    even the approximate operator gets an exact oracle. At 100 TB this
-    is the distinct-count tool: registers merge across any partitioning
-    with a <=m-row shuffle instead of re-shuffling the key universe."""
-    from jsonld_streaming_parser_js_spark.operators.sketch import (
-        hll_distinct)
-    return hll_distinct(_quads(spark, sf_dir), "subj", b=8)
-
-
 def _q_kg_nquads(spark, sf_dir):
     """N-Quads serialization sink: the full KG rendered as W3C N-Quads
     statements (pure JVM concat over the lexical quad columns — the
@@ -847,24 +478,6 @@ def _q_kg_nquads(spark, sf_dir):
         to_nquads)
     return (to_nquads(_quads(spark, sf_dir))
             .orderBy("url", "blk", "line"))
-
-
-def _q_kg_skew_salted_join(spark, sf_dir):
-    """Hot-predicate join under EXPLICIT salting (north-star: 'salted
-    repartitioning plus AQE skew-join splitting'). The corpus puts ~50% of
-    fact rows on one predicate (the real Zipf head: rdf:type/name); the
-    dim join runs on (pred, salt) so the hot key spreads over 8 reducer
-    partitions instead of one straggler. Value-checked against a plain
-    (unsalted) SQL join — salting must not change inner-join semantics.
-    The AQE-skew-split twin (plan evidence, SortMergeJoin(skew=true)) is
-    machine-checked in tests/test_spark_pipeline.py + EXPLAIN.md."""
-    fact = skew.skewed_pred_corpus(_docs(spark, sf_dir))
-    dim = skew.pred_dim(fact)
-    joined = skew.salted_join(fact, dim, "pred", n_salts=8)
-    return (joined.groupBy("pred", "pred_tag")
-            .agg(F.count("*").alias("n_rows"),
-                 F.sum(F.col("doc_id") + F.col("i")).alias("sum_key"))
-            .orderBy("pred"))
 
 
 def _q_kg_graph_views(spark, sf_dir):
@@ -889,337 +502,6 @@ def _q_kg_graph_views(spark, sf_dir):
         F.col("dst").alias("c3"), F.col("graph").alias("c4"))
     return (nodes.unionByName(edges)
             .orderBy("view", "c1", "c2", "c3", "c4"))
-
-
-def _q_dedup_embedding_cosine(spark, sf_dir):
-    emb = _tbl(spark, sf_dir, "embeddings")
-    return (similarity.embedding_near_pairs(emb, threshold=0.4)
-            .orderBy("id_a", "id_b"))
-
-
-def _q_dedup_embedding_lsh(spark, sf_dir):
-    """The 100 TB shape: hyperplane-bucketed candidates -> exact cosine
-    verify (two plane seeds union'd for recall). Never all-pairs — compare
-    dedup_embedding_cosine, its exact all-pairs oracle twin."""
-    emb = _tbl(spark, sf_dir, "embeddings")
-    return (similarity.embedding_lsh_pairs(emb, threshold=0.4)
-            .orderBy("id_a", "id_b"))
-
-
-def _q_dedup_embedding(spark, sf_dir):
-    """Embedding near-dup pairs, BOTH paths in one lane (r7 registry
-    consolidation): method='exact' is the all-pairs sf-scale oracle twin
-    (all-pairs BY DESIGN); method='lsh' is the hyperplane-bucketed scale
-    path (cartesian x0, EXPLAIN-checked on the underlying operator).
-
-    r8: legs built UNSORTED (per-leg orderBy under a union survives
-    Catalyst — the kg_error_channels lesson); the outer orderBy rules."""
-    emb = _tbl(spark, sf_dir, "embeddings")
-    ex = (similarity.embedding_near_pairs(emb, threshold=0.4)
-          .withColumn("method", F.lit("exact")))
-    lsh = (similarity.embedding_lsh_pairs(emb, threshold=0.4)
-           .withColumn("method", F.lit("lsh")))
-    return (ex.unionByName(lsh)
-            .select("method", "id_a", "id_b", "cos_sim")
-            .orderBy("method", "id_a", "id_b"))
-
-
-# cleaning-chain corpus: base documents + four injected row classes, each
-# designed to be dropped by exactly one gate of the chain. The injected
-# texts are pure SQL string expressions — identical strings feed Spark
-# (via F.expr) and the DuckDB oracle, so the whole chain is value-checked.
-_NEAR_TEXT_SQL = "text || ' lorem ipsum dolor'"
-_PII_TEXT_SQL = ("'record ' || CAST(doc_id AS STRING)"
-                 " || ' please contact agent ' || CAST(doc_id AS STRING)"
-                 " || ' at agent' || CAST(doc_id AS STRING)"
-                 " || '@example.com for account review and removal today'")
-_TINY_TEXT_SQL = "'tiny ' || CAST(doc_id AS STRING)"
-
-
-def _chain_corpus(spark, sf_dir):
-    """documents + exact copies (%5, dropped by exact dedup) + near-dup
-    copies (%7, appended tokens, dropped by MinHash) + PII rows (%11,
-    email-bearing, dropped by the PII gate) + tiny rows (%13, 2 tokens,
-    dropped by the quality filter)."""
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-
-    def inj(mod, offset, text_sql):
-        return (d.where(F.col("doc_id") % mod == 0)
-                .select((F.col("doc_id") + offset).alias("doc_id"),
-                        F.expr(text_sql).alias("text")))
-
-    return (d.unionByName(inj(5, 200000, "text"))
-            .unionByName(inj(7, 300000, _NEAR_TEXT_SQL))
-            .unionByName(inj(11, 400000, _PII_TEXT_SQL))
-            .unionByName(inj(13, 500000, _TINY_TEXT_SQL)))
-
-
-def _q_pipeline_clean_corpus(spark, sf_dir):
-    """End-to-end training-data cleaning lane: quality filter -> exact
-    dedup -> MinHash near-dup drop -> PII gate, composed as ONE pipeline
-    over one corpus scan (operators/cleaning.py). Every injected corpus
-    class is dropped by its designated gate; the DuckDB oracle replays all
-    four stages (including the full MinHash signature recompute) in SQL."""
-    from jsonld_streaming_parser_js_spark.operators.cleaning import (
-        clean_corpus)
-    return clean_corpus(_chain_corpus(spark, sf_dir)).orderBy("doc_id")
-
-
-def _q_mm_media_stats(spark, sf_dir):
-    """Multimodal metadata aggregation: binary column never decoded, pure
-    JVM byte-length stats (the scan prunes to kind+payload)."""
-    from jsonld_streaming_parser_js_spark.operators import multimodal as mm
-    return mm.media_stats(mm.media_from_documents(spark, sf_dir))
-
-
-def _q_mm_features(spark, sf_dir):
-    """Arrow-batched decode-stub features over the binary column; the
-    sha256-derived first feature lane is value-checked against DuckDB
-    (CAST(round(f0*255)) recovers the exact hash byte despite float32)."""
-    from jsonld_streaming_parser_js_spark.operators import multimodal as mm
-    feats = mm.extract_features(mm.media_from_documents(spark, sf_dir))
-    return (feats.select(
-        "media_id", "kind", "n_bytes",
-        F.round(F.element_at("feature", 1) * 255)
-        .cast("int").alias("f0_byte"))
-        .orderBy("media_id"))
-
-
-_MM_DECODE_STATS = {
-    "wav": ["n_samples", "sample_rate", "duration_ms", "peak", "sum_abs"],
-    "ppm": ["width", "height", "sum_r", "sum_g", "sum_b"],
-    "png": ["width", "height", "sum_r", "sum_g", "sum_b"],
-}
-
-
-def _q_mm_decode(spark, sf_dir):
-    """ALL THREE real media decoders in one long-format lane (r7 registry
-    consolidation of mm_decode_wav/ppm/png; every former stat is still a
-    value-checked row — (fmt, media_id, stat, value)):
-
-    - fmt='wav': real RIFF/PCM parse (stdlib wave + NumPy) — decoded
-      waveform stats are exact integers
-    - fmt='ppm': binary PPM (P6) header tokenizer + NumPy raster
-    - fmt='png': full PNG decoder (CRC-verified chunk walk, zlib
-      inflate, Paeth/Average/Sub/Up unfiltering — stdlib only); the
-      synth twin filters each row differently so filter inversion is
-      genuinely exercised, and decoded sums equal the PPM closed forms
-
-    Binary payloads are decoded partition-locally (mapInPandas), never
-    shuffled; the unpivot to long format is a narrow projection."""
-    from jsonld_streaming_parser_js_spark.operators import multimodal as mm
-    docs = _tbl(spark, sf_dir, "documents")
-    audio_ids = (docs.where(F.col("doc_id") % 3 == 1)
-                 .select(F.col("doc_id").alias("media_id")))
-    image_ids = (docs.where(F.col("doc_id") % 3 == 0)
-                 .select(F.col("doc_id").alias("media_id")))
-    wide = {"wav": mm.wav_stats_from_ids(audio_ids),
-            "ppm": mm.ppm_stats_from_ids(image_ids),
-            "png": mm.png_stats_from_ids(image_ids)}
-    out = None
-    for fmt, df in wide.items():
-        stats_ = _MM_DECODE_STATS[fmt]
-        stack = ", ".join(f"'{s}', CAST({s} AS BIGINT)" for s in stats_)
-        leg = df.selectExpr(
-            f"'{fmt}' AS fmt", "media_id",
-            f"stack({len(stats_)}, {stack}) AS (stat, value)")
-        out = leg if out is None else out.unionByName(leg)
-    return out.orderBy("fmt", "media_id", "stat")
-
-
-def _q_tpch_q1(spark, sf_dir):
-    li = _tbl(spark, sf_dir, "lineitem")
-    return (li.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("date"))
-            .groupBy("l_returnflag", "l_linestatus")
-            .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-                 F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-                 F.round(F.sum(F.col("l_extendedprice")
-                               * (1 - F.col("l_discount"))), 2)
-                 .alias("sum_disc_price"),
-                 F.count("*").alias("count_order"))
-            .orderBy("l_returnflag", "l_linestatus"))
-
-
-def _q_tpch_q3(spark, sf_dir):
-    cust = _tbl(spark, sf_dir, "customer")
-    orders = _tbl(spark, sf_dir, "orders")
-    li = _tbl(spark, sf_dir, "lineitem")
-    return (li.join(orders, li.l_orderkey == orders.o_orderkey)
-            .join(F.broadcast(cust.where(F.col("c_mktsegment")
-                                         == "BUILDING")),
-                  orders.o_custkey == F.col("c_custkey"))
-            .where(F.col("o_orderdate")
-                   < F.lit("1995-03-15").cast("date"))
-            .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-            .agg(F.round(F.sum(F.col("l_extendedprice")
-                               * (1 - F.col("l_discount"))), 2)
-                 .alias("revenue"))
-            .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-            .limit(10))
-
-
-def _q_tpch_q5(spark, sf_dir):
-    """TPC-H Q5 (local supplier volume): the 5-way join chain. Fact
-    table (lineitem) never shuffles for the dims — customer/supplier/
-    nation/region are broadcast (EXPLAIN: BHJ chain, zero SMJ); only the
-    final groupBy aggregates, map-side partials first."""
-    c = _tbl(spark, sf_dir, "customer")
-    o = _tbl(spark, sf_dir, "orders")
-    l = _tbl(spark, sf_dir, "lineitem")
-    s = _tbl(spark, sf_dir, "supplier")
-    n = _tbl(spark, sf_dir, "nation")
-    r = _tbl(spark, sf_dir, "region")
-    j = (l.join(F.broadcast(o.where(
-            (F.col("o_orderdate") >= "1996-01-01")
-            & (F.col("o_orderdate") < "1997-01-01"))),
-            F.col("l_orderkey") == F.col("o_orderkey"))
-         .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
-         .join(F.broadcast(s),
-               (F.col("l_suppkey") == F.col("s_suppkey"))
-               & (F.col("c_nationkey") == F.col("s_nationkey")))
-         .join(F.broadcast(n),
-               F.col("s_nationkey") == F.col("n_nationkey"))
-         .join(F.broadcast(r.where(F.col("r_name") == "ASIA")),
-               F.col("n_regionkey") == F.col("r_regionkey")))
-    return (j.groupBy("n_name")
-            .agg(F.round(F.sum(F.col("l_extendedprice")
-                               * (1 - F.col("l_discount"))), 2)
-                 .alias("revenue"))
-            .orderBy(F.desc("revenue"), "n_name"))
-
-
-def _q_window_top_orders(spark, sf_dir):
-    from pyspark.sql import Window
-    orders = _tbl(spark, sf_dir, "orders")
-    w = (Window.partitionBy("o_custkey")
-         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey")))
-    return (orders.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= 3)
-            .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
-            .orderBy("o_custkey", "rn"))
-
-
-def _q_events_sessionize(spark, sf_dir):
-    """Per-user sessionization (30-min inactivity gap) by TWO methods
-    under a ``method`` discriminator, each half hash-checked against the
-    same oracle:
-
-    - ``lag``: lag + gap-flag + running sum assigns session ids, then
-      per-session aggregates — two window passes over one sort.
-    - ``native``: Spark's built-in ``session_window`` gap aggregation —
-      JVM-side session assignment merged inside the aggregate
-      (post-shuffle MergingSessions), the same operator the streaming
-      engine uses for watermarked session aggs. Both halves are
-      ONE-Exchange plans; which is faster depends on data shape
-      (BENCH.md "method A/B", three corpora measured). Note the
-      measured anti-claim: the partial agg keys on the per-event
-      window struct, so map-side combine collapses only events that
-      share a (key, truncated-second) — effectively nothing unless
-      the data is burst-heavy — and the 2-timestamp struct rides
-      every shuffled row (+19% bytes on the 60 s-stride long-session
-      corpus). Native's edge is the single post-shuffle merge pass
-      and streaming, not shuffle reduction.
-
-    Semantics pinned to the oracle's whole-second gap > 1800: the native
-    half truncates ts to seconds (every fixture event has sub-second
-    precision, so this is load-bearing) and uses the 1800 s gap —
-    ``session_window`` merges at diff <= gap (measured on this cluster:
-    a 1801 s whole-second pair merges under gap 1801, i.e. the window
-    end is inclusive), so gap 1800 on truncated seconds == "same session
-    iff whole-second diff <= 1800" exactly. session_seq is row_number
-    over session start (sessions are disjoint time ranges, so start
-    order is the lag twin's id order)."""
-    ev = _tbl(spark, sf_dir, "events")
-    lag_half = _sessionize_lag(ev).withColumn("method", F.lit("lag"))
-    native_half = _sessionize_native(ev).withColumn(
-        "method", F.lit("native"))
-    return (lag_half.unionByName(native_half)
-            .orderBy("method", "user_id", "session_seq"))
-
-
-def _sessionize_lag(ev):
-    """The lag+running-sum half of events_sessionize, factored out so
-    the EXPLAIN audit plans the SHIPPED query. One Exchange: the window
-    shuffles on user_id, and the groupBy's (user_id, session_seq)
-    clustering is satisfied by that partitioning (subset rule), so the
-    aggregate reuses it."""
-    from pyspark.sql import Window
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # tz-free epoch for TIMESTAMP_NTZ: an NTZ-to-NTZ timestampdiff never
-    # consults the session timezone (a cast via TIMESTAMP would shift by
-    # a DST-dependent offset that does NOT cancel across transitions),
-    # and whole-second truncation matches the oracle's floor(epoch(ts))
-    epoch = F.expr(
-        "timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")
-    gap = epoch - F.lag(epoch).over(w)
-    new_sess = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-    sess = (ev.withColumn("new_sess", new_sess)
-            .withColumn("session_seq",
-                        F.sum("new_sess").over(
-                            w.rowsBetween(Window.unboundedPreceding, 0))))
-    return (sess.groupBy("user_id", "session_seq")
-            .agg(F.count("*").alias("n_events"),
-                 F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss")
-                 .alias("session_start"),
-                 F.round(F.sum("value"), 2).alias("sum_value")))
-
-
-def _sessionize_native(ev):
-    """The session_window half of events_sessionize, factored out so the
-    EXPLAIN audit plans the SHIPPED query (tools/explain_audit.py), not a
-    stand-in. The seq-assignment Window runs over the already-collapsed
-    session table (one row per session), so its extra shuffle moves
-    sessions, not events."""
-    from pyspark.sql import Window
-    tss = F.date_trunc("second", "ts")
-    sw = Window.partitionBy("user_id").orderBy(F.col("sw.start"))
-    return (
-        ev.select("user_id", tss.alias("tss"), "value")
-        .groupBy("user_id",
-                 F.session_window("tss", "1800 seconds").alias("sw"))
-        .agg(F.count("*").alias("n_events"),
-             F.date_format(F.min("tss"), "yyyy-MM-dd HH:mm:ss")
-             .alias("session_start"),
-             F.round(F.sum("value"), 2).alias("sum_value"))
-        .select("user_id",
-                F.row_number().over(sw).cast("long").alias("session_seq"),
-                "n_events", "session_start", "sum_value"))
-
-
-def _q_streaming_sessionize(spark, sf_dir):
-    """The STREAMING twin of events_sessionize, run under BOTH tail-flush
-    mechanisms and discriminated by a ``flush`` column: ``sentinel``
-    (O(users) end-of-input sentinel rows close open sessions) and
-    ``timeout`` (GroupStateTimeout.EventTimeTimeout — idle sessions are
-    evicted by the watermark via the state store's timeout machinery, the
-    unbounded-stream production pattern; stream end needs only ONE O(1)
-    watermark-advancer row). Each is a real file-source Structured
-    Streaming job (4 ordered micro-batches, applyInPandasWithState state
-    straddling batch boundaries) and each half must value-hash-match the
-    same DuckDB sessionization oracle as the batch twin."""
-    import shutil
-    import tempfile
-    from jsonld_streaming_parser_js_spark.streaming.stateful import (
-        streaming_sessionize)
-    halves = []
-    for mode in ("sentinel", "timeout"):
-        work = tempfile.mkdtemp(prefix=f"stream-sess-{mode}-")
-        try:
-            out = streaming_sessionize(
-                spark, f"{sf_dir}/events.parquet", work, flush=mode)
-            # fully materialize BEFORE the temp inputs/outputs are
-            # deleted — a cache() can be evicted and would recompute from
-            # removed files. Driver-side collect is safe here: the
-            # session table is one row per (user, session), orders of
-            # magnitude smaller than events (9.5k rows at sf=0.01), and
-            # this query is the bounded-input streaming ORACLE lane, not
-            # the production path.
-            out = out.withColumn("flush", F.lit(mode))
-            rows = out.orderBy("user_id", "session_seq").collect()
-            halves.append(spark.createDataFrame(rows, out.schema))
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
-    return halves[0].unionByName(halves[1])
 
 
 def _q_streaming_kg_quads(spark, sf_dir):
@@ -1282,129 +564,33 @@ def _q_streaming_quad_rates(spark, sf_dir):
         shutil.rmtree(work, ignore_errors=True)
 
 
-def _q_dedup_embedding_lsh_recall(spark, sf_dir):
-    """Honest recall audit of the LSH scale path against its exact twin,
-    on a DETERMINISTIC ~1/4 id sample: one row (n_lsh, n_exact, recall).
-    LSH is a candidate filter — recall < 1 is the documented trade, now
-    measured per run. Sampling keeps the exact side O((n/4)^2), so the
-    audit itself stays runnable at corpus scale (the unsampled all-pairs
-    form remains available as the sf-scale oracle twin,
-    ``dedup_embedding_cosine``); pair-level recall on an id sample is an
-    unbiased estimate because endpoints are sampled independently of
-    their similarity."""
-    emb = similarity.deterministic_id_sample(
-        _tbl(spark, sf_dir, "embeddings"), "vec_id", mod=4)
-    # LSH output is verified by exact cosine, so it is a strict subset of
-    # the all-pairs result: recall = n_lsh / n_exact. One declarative plan,
-    # no driver-side actions.
-    lsh = (similarity.embedding_lsh_pairs(emb, threshold=0.4)
-           .agg(F.count("*").alias("n_lsh")))
-    exact = (similarity.embedding_near_pairs(emb, threshold=0.4)
-             .agg(F.count("*").alias("n_exact")))
-    return (lsh.crossJoin(exact)
-            .select("n_lsh", "n_exact",
-                    F.round(F.col("n_lsh")
-                            / F.greatest(F.col("n_exact"), F.lit(1)), 6)
-                    .alias("recall")))
-
-
-def _q_events_hourly(spark, sf_dir):
-    ev = _tbl(spark, sf_dir, "events")
-    return (ev.groupBy("event_type",
-                       F.date_format(F.date_trunc("hour", "ts"),
-                                     "yyyy-MM-dd HH:mm:ss").alias("hour"))
-            .agg(F.count("*").alias("n_events"),
-                 F.round(F.sum("value"), 2).alias("sum_value"))
-            .orderBy("event_type", "hour"))
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # REGISTRY SIZE CONTRACT (r7, verdict ask #1): the driver's
-    # correctness harness records rows for the FIRST 50 entries only, so
-    # the registry is consolidated to <= 50 lanes — every lane gets a
-    # fresh driver row every round and the old tail-rotation bookkeeping
-    # is gone. Merged lanes (see each docstring) check the UNION of
-    # their former assertions: kg_quads_memo (+memo_shared),
-    # kg_error_channels (lenient+strict+http), kg_quads_by_predicate
-    # (+type_counts), kg_graph_views (nodes+edges), kg_rollups
-    # (host+distinct_objects+entity_degree), kg_quads_i18n
-    # (datatype+compound), text_stats (token_count+langid+fingerprint),
-    # text_quality (+quality_filter), sim_topk (brute+ivf+lsh),
-    # ann_recall (embedding_lsh+ivf), dedup_embedding (exact+lsh),
-    # mm_decode (wav+ppm+png), streaming_quad_rates (+late twin).
-    # Deliberately DROPPED (not merged): text_extract_identity — its
-    # only assertion (every url extracts) is subsumed by
-    # kg_extract_blocks' full value check of the same extraction, and
-    # the extracted_text operator keeps its pytest
-    # (tests/test_spark_pipeline.py). Ordering stays changed-first as
-    # belt-and-braces. The two consolidation-freed slots hold the r7
-    # additions text_repetition + kg_nquads_roundtrip — registry is at
-    # exactly 50. Three lanes are REDEFINED late in r7 (each a
-    # discriminator-column union, ordered changed-first):
-    # streaming_sessionize (flush = sentinel | EventTimeTimeout
-    # eviction), events_sessionize (method = lag | native
-    # session_window), kg_upsert_wave (change = store | added |
-    # removed via wave_diff with crawled-url wave_keys).
-    # Late-r7 session 3: the three text near-dup lanes (ngram/minhash/
-    # simhash) merged into dedup_neardup (method discriminator,
-    # score = each method's own measure as double) to free two slots
-    # for the KG-tier additions kg_rdfs_entailment (RDFS forward
-    # chaining, operators/inference.py) and kg_bgp_query
-    # (triple-pattern conjunctive query, operators/bgp.py) — the
-    # registry stays at exactly 50.
+    # Merged lanes (see each docstring) check the UNION of their former
+    # assertions: kg_quads_memo (+memo_shared), kg_error_channels
+    # (lenient+strict+http), kg_graph_views (nodes+edges), kg_quads_i18n
+    # (datatype+compound), kg_upsert_wave (store+added+removed),
+    # streaming_quad_rates (+late twin).
     return {
-        # -- changed/merged this round (r7) --
-        "kg_rdfs_entailment": _q_kg_rdfs_entailment,
-        "kg_bgp_query": _q_kg_bgp_query,
-        "dedup_neardup": _q_dedup_neardup,
-        "text_repetition": _q_text_repetition,
-        "kg_nquads_roundtrip": _q_kg_nquads_roundtrip,
-        "streaming_sessionize": _q_streaming_sessionize,
-        "kg_upsert_wave": _q_kg_upsert_wave,
-        "events_sessionize": _q_events_sessionize,
-        "kg_quads_memo": _q_kg_quads_memo,
-        "kg_error_channels": _q_kg_error_channels,
-        "kg_quads_by_predicate": _q_kg_quads_by_predicate,
-        "kg_graph_views": _q_kg_graph_views,
-        "kg_rollups": _q_kg_rollups,
-        "kg_quads_i18n": _q_kg_quads_i18n,
-        "text_stats": _q_text_stats,
-        "text_quality": _q_text_quality,
-        "sim_topk": _q_sim_topk,
-        "ann_recall": _q_ann_recall,
-        "dedup_embedding": _q_dedup_embedding,
-        "mm_decode": _q_mm_decode,
-        "streaming_quad_rates": _q_streaming_quad_rates,
-        # -- carried lanes (unchanged; all inside the 50-row window) --
         "kg_quads": _q_kg_quads,
-        "kg_predicate_profile": _q_kg_predicate_profile,
-        "kg_skew_salted_join": _q_kg_skew_salted_join,
+        "kg_quads_memo": _q_kg_quads_memo,
+        "kg_extract_blocks": _q_kg_extract_blocks,
+        "kg_error_channels": _q_kg_error_channels,
+        "kg_quads_i18n": _q_kg_quads_i18n,
+        "kg_http_quads": _q_kg_http_quads,
+        "kg_ndjson_quads": _q_kg_ndjson_quads,
         "kg_canonical_clusters": _q_kg_canonical_clusters,
         "kg_quads_canonical": _q_kg_quads_canonical,
         "kg_canonical_fuzzy": _q_kg_canonical_fuzzy,
-        "approx_distinct_hll": _q_approx_distinct_hll,
-        "kg_block_templates": _q_kg_block_templates,
-        "kg_pagerank": _q_kg_pagerank,
-        "text_sample_stratified": _q_text_sample_stratified,
-        "text_decontaminate": _q_text_decontaminate,
-        "kg_lineage": _q_kg_lineage,
-        "kg_http_quads": _q_kg_http_quads,
-        "kg_ndjson_quads": _q_kg_ndjson_quads,
         "kg_nquads": _q_kg_nquads,
-        "kg_extract_blocks": _q_kg_extract_blocks,
-        "kg_author_labels": _q_kg_author_labels,
-        "dedup_exact": _q_dedup_exact,
-        "text_boilerplate": _q_text_boilerplate,
-        "text_pii": _q_text_pii,
-        "pipeline_clean_corpus": _q_pipeline_clean_corpus,
-        "mm_media_stats": _q_mm_media_stats,
-        "mm_features": _q_mm_features,
-        "tpch_q1": _q_tpch_q1,
-        "tpch_q3": _q_tpch_q3,
-        "tpch_q5": _q_tpch_q5,
-        "window_top_orders": _q_window_top_orders,
-        "events_hourly": _q_events_hourly,
+        "kg_nquads_roundtrip": _q_kg_nquads_roundtrip,
+        "kg_upsert_wave": _q_kg_upsert_wave,
+        "kg_block_templates": _q_kg_block_templates,
+        "kg_graph_views": _q_kg_graph_views,
+        "kg_pagerank": _q_kg_pagerank,
+        "kg_rdfs_entailment": _q_kg_rdfs_entailment,
+        "kg_bgp_query": _q_kg_bgp_query,
         "streaming_kg_quads": _q_streaming_kg_quads,
+        "streaming_quad_rates": _q_streaming_quad_rates,
     }
 
 
@@ -1481,25 +667,12 @@ def _with_quads(select: str) -> str:
     return f"WITH {_D_CTE}, {_expected_quads_cte()}\n{select}"
 
 
-_LANG_SQL_VOTES = {
-    lang: (f"CAST(length(regexp_extract_all(lower(text),"
-           f" '\\b({'|'.join(words)})\\b')) AS INT)")
-    for lang, words in textstats.LANG_MARKERS.items()
-}
-
-
 def oracle_sql() -> dict[str, str]:
-    s_art = "'<' || url || '#article>'"
     oracles: dict[str, str] = {}
 
     oracles["kg_quads"] = _with_quads(
         "SELECT url, blk, subj, pred, obj, graph FROM q"
         " ORDER BY url, blk, pred, obj")
-
-    from jsonld_streaming_parser_js_spark.operators.sketch import (
-        hll_distinct_sql)
-    oracles["approx_distinct_hll"] = hll_distinct_sql(
-        _with_quads("SELECT subj FROM q"), "subj", b=8)
 
     from jsonld_streaming_parser_js_spark.sources.pages import (
         MALFORMED_BLOCK, block_b_sql, block_c_sql, shared_org_block_sql)
@@ -1520,83 +693,6 @@ SELECT regexp_extract(url, '^https?://([^/]+)', 1) AS host,
        CAST(count(DISTINCT url) AS BIGINT) AS n_pages
 FROM blk_rows GROUP BY 1, 2 HAVING count(DISTINCT url) >= 10
 ORDER BY host, template_md5"""
-
-    # round(), not int(): must match stratified_sample's threshold
-    # arithmetic exactly (0.35e6 truncates to 349999 in binary64)
-    rate_case = " ".join(
-        f"WHEN lang = '{s}' THEN {round(r * 1_000_000)}"
-        for s, r in sorted(SAMPLE_RATES.items()))
-    oracles["text_sample_stratified"] = f"""
-SELECT doc_id, lang FROM documents
-WHERE ('0x' || substr(md5(CAST(doc_id AS STRING)), 1, 8))::BIGINT
-        % 1000000
-      < CASE {rate_case} ELSE {round(SAMPLE_DEFAULT * 1_000_000)} END
-ORDER BY doc_id"""
-
-    _decon_toks = "regexp_extract_all(lower(text), '[a-z0-9]+')"
-    _decon_grams = (
-        "SELECT doc_id, unnest(list_transform("
-        f" range(1, greatest(len(toks) - {DECON_N - 1}, 0) + 1),"
-        f" i -> md5(array_to_string(toks[i:i+{DECON_N - 1}], ' ')))) AS g"
-        " FROM (SELECT doc_id, {toks} AS toks FROM {src})")
-    oracles["text_decontaminate"] = f"""
-WITH c AS (
-  SELECT doc_id, text || CASE WHEN doc_id % 41 <= 1
-           THEN '{DECON_SENTINEL}' ELSE '' END AS text
-  FROM documents
-),
-ev AS (SELECT * FROM c WHERE doc_id % 41 = 0),
-chk AS (SELECT * FROM c WHERE doc_id % 41 <> 0),
-eg AS (SELECT DISTINCT g FROM
-       ({_decon_grams.format(toks=_decon_toks, src="ev")})),
-dg AS ({_decon_grams.format(toks=_decon_toks, src="chk")}),
-hits AS (SELECT doc_id, count(DISTINCT g) AS n_hits
-         FROM dg JOIN eg USING (g) GROUP BY doc_id)
-SELECT chk.doc_id,
-       CAST(COALESCE(n_hits, 0) AS BIGINT) AS n_hits,
-       COALESCE(n_hits, 0) > 0 AS contaminated
-FROM chk LEFT JOIN hits USING (doc_id) ORDER BY doc_id"""
-
-    # text_repetition: same tokenizer, same gram construction, same
-    # struct-max tie-break (field-lexicographic compare in BOTH
-    # engines → ties on cnt pick the lexicographically greatest gram),
-    # same occurrence-weighted dup-5-gram rule. BIGINT/BIGINT division
-    # is DOUBLE in both engines; round(x, 6) agrees (half-up vs
-    # half-away coincide for non-negative values).
-    oracles["text_repetition"] = """
-WITH t AS (
-  SELECT doc_id, length(text) AS text_len,
-         regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-  FROM documents
-),
-g AS (
-  SELECT doc_id, 2 AS n,
-         unnest(list_transform(range(1, greatest(len(toks) - 1, 0) + 1),
-                i -> array_to_string(toks[i:i+1], ' '))) AS gram
-  FROM t
-  UNION ALL
-  SELECT doc_id, 5,
-         unnest(list_transform(range(1, greatest(len(toks) - 4, 0) + 1),
-                i -> array_to_string(toks[i:i+4], ' ')))
-  FROM t
-),
-c AS (SELECT doc_id, n, gram, count(*) AS cnt
-      FROM g GROUP BY doc_id, n, gram),
-p AS (SELECT doc_id,
-             max(CASE WHEN n = 2
-                 THEN struct_pack(cnt := cnt, gram := gram) END) AS top2,
-             sum(CASE WHEN n = 5 AND cnt > 1
-                 THEN cnt * length(gram) END) AS dup5
-      FROM c GROUP BY doc_id)
-SELECT t.doc_id,
-       CAST(len(toks) AS BIGINT) AS n_toks,
-       COALESCE(top2.gram, '') AS top_2gram,
-       round(COALESCE(top2.cnt * length(top2.gram), 0)
-             / greatest(text_len, 1), 6) AS top_2gram_frac,
-       round(COALESCE(dup5, 0) / greatest(text_len, 1), 6)
-         AS dup_5gram_ratio
-FROM t LEFT JOIN p USING (doc_id)
-ORDER BY doc_id"""
 
     # kg_nquads_roundtrip: rebuild the exact N-Quads line (the
     # kg_nquads oracle's concat) then re-parse it with the SAME
@@ -1756,43 +852,6 @@ UNION ALL
 SELECT 'shared', url, blk, subj, pred, obj, graph FROM qs
 ORDER BY corpus, url, blk, subj, pred, obj"""
 
-    # literal-kind tests are END-ANCHORED: a lexical term can only end
-    # with '"', '"@lang' or '"^^<iri>' — content dquotes are serialized
-    # escaped ('\"'), so an escaped quote never ENDS the term, and
-    # substring shapes like '\"@en' inside content cannot match. The
-    # adversarial advq corpus (escaped-quote content) enforces this.
-    bs = " || chr(92) || "
-    adv_rows = " UNION ALL ".join([
-        f"SELECT '<{_SCHEMA}comment>' AS pred,"
-        f" '\"say '{bs}'\"@en'{bs}'\" now ' || did || '\"' AS obj"
-        " FROM advd",
-        f"SELECT '<{_SCHEMA}description>',"
-        f" '\"num 7'{bs}'\"^^<http://x> end ' || did || '\"' FROM advd",
-        f"SELECT '<{_SCHEMA}name>',"
-        f" '\"real '{bs}'\"quoted'{bs}'\" tag ' || did || '\"@en'"
-        " FROM advd",
-        f"SELECT '<{_SCHEMA}weight>',"
-        f" '\"12'{bs}'\"^^<fake> ' || did || '\"^^<http://ex.org/dt>'"
-        " FROM advd",
-    ])
-    oracles["kg_predicate_profile"] = _with_quads(f"""
-, advd AS (SELECT CAST(doc_id AS STRING) AS did FROM documents
-           WHERE doc_id % 25 = 0)
-, allq AS (SELECT pred, obj FROM q UNION ALL {adv_rows})
-SELECT pred,
- CAST(count(*) AS BIGINT) AS n_objs,
- CAST(sum(CASE WHEN substr(obj, 1, 1) = '<' THEN 1 ELSE 0 END)
-   AS BIGINT) AS n_iri,
- CAST(sum(CASE WHEN substr(obj, 1, 1) = '"' THEN 1 ELSE 0 END)
-   AS BIGINT) AS n_literal,
- CAST(sum(CASE WHEN substr(obj, 1, 2) = '_:' THEN 1 ELSE 0 END)
-   AS BIGINT) AS n_bnode,
- CAST(sum(CASE WHEN regexp_matches(obj, '"@[A-Za-z][A-Za-z0-9-]*$')
-   THEN 1 ELSE 0 END) AS BIGINT) AS n_lang_tagged,
- CAST(sum(CASE WHEN regexp_matches(obj, '"\\^\\^<[^>]*>$')
-   THEN 1 ELSE 0 END) AS BIGINT) AS n_typed
-FROM allq GROUP BY pred ORDER BY pred""")
-
     oracles["kg_nquads"] = _with_quads(
         "SELECT url, blk,"
         " subj || ' ' || pred || ' ' || obj ||"
@@ -1831,66 +890,6 @@ SELECT 'strict' AS channel,
                        ELSE 'invalid language-tagged string' END AS error
 FROM documents WHERE doc_id % 4 < 3"""
     # _http_err needs response_url_sql; assembled below once rurl exists
-
-    # (pred, rdf:type-object) counts: summing over rdf_type reproduces
-    # the per-predicate rollup; pred = rdf:type rows are the old
-    # type_counts lane (r7 merge — union of both former oracles)
-    oracles["kg_quads_by_predicate"] = _with_quads(
-        f"SELECT pred,"
-        f" CASE WHEN pred = '<{RDF_NS}type>' THEN obj ELSE '' END"
-        f"   AS rdf_type,"
-        f" count(*) AS n_quads FROM q GROUP BY 1, 2"
-        f" ORDER BY n_quads DESC, pred, rdf_type")
-
-    # host / distinct-objects / entity-degree rollups in one long-format
-    # lane; each SELECT is the former standalone oracle verbatim
-    oracles["kg_rollups"] = _with_quads("""
-SELECT view, key, m1, m2 FROM (
-  SELECT 'host' AS view,
-         regexp_extract(url, '^https?://([^/]+)', 1) AS key,
-         CAST(count(*) AS BIGINT) AS m1,
-         CAST(count(DISTINCT subj) AS BIGINT) AS m2
-  FROM q GROUP BY 2
-  UNION ALL
-  SELECT 'pred_distinct_objects', pred,
-         CAST(count(DISTINCT obj) AS BIGINT), CAST(0 AS BIGINT)
-  FROM q GROUP BY pred
-  UNION ALL
-  SELECT * FROM (
-    SELECT 'entity_degree', subj, CAST(count(*) AS BIGINT),
-           CAST(count(DISTINCT pred) AS BIGINT)
-    FROM q GROUP BY subj
-    ORDER BY count(*) DESC, subj LIMIT 50)
-) ORDER BY view, key""")
-
-    oracles["kg_author_labels"] = _with_quads(
-        f"SELECT url, obj AS entity,"
-        f" 'Author ' || regexp_extract(obj, 'author/([0-9]+)>', 1) AS label"
-        f" FROM q WHERE pred = '<{_SCHEMA}author>'"
-        f" ORDER BY url, entity")
-
-    # All aggregates CAST to BIGINT: DuckDB's sum(length(...)) is HUGEINT
-    # and bare CASE arms are INTEGER — both hash-diverge from Spark's LONG
-    # in the driver's normalizer. n_errors comes from a real error-count
-    # CTE (same derivation as the kg_errors oracle), not a doc_id hack.
-    oracles["kg_lineage"] = _with_quads("""
-, qs AS (
-  SELECT url, CAST(count(*) AS BIGINT) AS n_quads,
-         CAST(count(DISTINCT blk) AS BIGINT) AS n_blocks,
-         CAST(sum(length(subj || '|' || pred || '|' || obj || '|' || graph))
-              AS BIGINT) AS bytes_checksum
-  FROM q GROUP BY url
-), es AS (
-  SELECT url, CAST(count(*) AS BIGINT) AS n_errors
-  FROM d WHERE doc_id % 17 = 0 GROUP BY url
-)
-SELECT coalesce(qs.url, es.url) AS url,
-       coalesce(qs.n_quads, CAST(0 AS BIGINT)) AS n_quads,
-       coalesce(qs.n_blocks, CAST(0 AS BIGINT)) AS n_blocks,
-       coalesce(qs.bytes_checksum, CAST(0 AS BIGINT)) AS bytes_checksum,
-       coalesce(es.n_errors, CAST(0 AS BIGINT)) AS n_errors
-FROM qs FULL OUTER JOIN es ON qs.url = es.url
-ORDER BY url""")
 
     i18n_s = "'<' || url || '#i18n>'"
     i18n_ns = "https://www.w3.org/ns/i18n#"
@@ -2083,122 +1082,6 @@ comp AS (
 SELECT node, component AS canonical FROM comp
 WHERE node <> component ORDER BY node"""
 
-    _bk, _bs, _bm = (textstats.BOILERPLATE_K, textstats.BOILERPLATE_STRIDE,
-                     textstats.BOILERPLATE_MIN_DOCS)
-    oracles["text_boilerplate"] = f"""
-WITH base AS (
-  SELECT doc_id, text,
-         greatest(CAST(floor((length(text) - {_bk}) / {_bs}) AS INT) + 1, 1)
-           AS n
-  FROM documents
-),
-g AS (  -- strided char k-grams, md5 keys (identical to the Spark side)
-  SELECT doc_id, md5(substr(text, (i - 1) * {_bs} + 1, {_bk})) AS g
-  FROM base, LATERAL unnest(range(1, n + 1)) AS t(i)
-  WHERE length(substr(text, (i - 1) * {_bs} + 1, {_bk})) = {_bk}
-),
-hot AS (
-  SELECT g FROM g GROUP BY g HAVING count(DISTINCT doc_id) >= {_bm}
-),
-per_doc AS (
-  SELECT g.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-         CAST(sum(CASE WHEN hot.g IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_boilerplate
-  FROM g LEFT JOIN hot ON g.g = hot.g
-  GROUP BY g.doc_id
-)
-SELECT d.doc_id, coalesce(p.n_grams, 0) AS n_grams,
-       coalesce(p.n_boilerplate, 0) AS n_boilerplate,
-       round(coalesce(p.n_boilerplate, 0) * 1.0
-             / greatest(coalesce(p.n_grams, 0), 1), 6) AS ratio
-FROM documents d LEFT JOIN per_doc p ON d.doc_id = p.doc_id
-ORDER BY d.doc_id"""
-
-    pii_cols = ",\n       ".join(
-        f"CAST(len(regexp_extract_all(coalesce(text, ''), '{pat}'))"
-        f" AS BIGINT) AS {name}"
-        for name, pat in textstats.PII_PATTERNS.items())
-    pii_flag = " OR ".join(f"{n} > 0" for n in textstats.PII_PATTERNS)
-    # one canonical regex per signal (textstats.PII_PATTERNS) consumed by
-    # BOTH engines: Spark via F.lit (no SQL escaping), DuckDB verbatim in
-    # a standard SQL string (no backslash processing)
-    oracles["text_pii"] = f"""
-WITH c AS (
-  SELECT doc_id, {pii_cols}
-  FROM documents
-)
-SELECT doc_id, n_emails, n_phones, n_ipv4, n_ssn_like,
-       ({pii_flag}) AS has_pii
-FROM c ORDER BY doc_id"""
-
-    oracles["dedup_exact"] = """
-SELECT md5(text) AS text_md5, min(doc_id) AS keep_doc_id,
-       count(*) AS n_dups
-FROM documents GROUP BY md5(text) ORDER BY text_md5"""
-
-    # ngram-Jaccard CTE, shared by the dedup_neardup merged oracle
-    # (the former standalone dedup_ngram_jaccard oracle, CTE renamed)
-    _ngram_cte = """ng_t AS (
-  SELECT doc_id, md5(substr(text, 1, 32)) AS blk_key,
-         list_filter(list_sort(list_distinct(
-           string_split_regex(lower(text), '[^a-z0-9]+'))),
-           x -> x <> '') AS toks
-  FROM documents
-)"""
-
-
-    # quality features for every doc + the composite filter verdict
-    # (r7 merge of text_quality + text_quality_filter: the old filter
-    # lane's rows are exactly the kept=true rows)
-    en_stop = _LANG_SQL_VOTES["en"]
-    oracles["text_quality"] = rf"""
-WITH qv AS (
-  SELECT doc_id,
-       CAST(length(text) AS INT) AS n_chars_computed,
-       CAST(length(regexp_extract_all(text, '\S+')) AS INT) AS n_tokens,
-       round(CAST(length(regexp_extract_all(text, '[^\w\s]')) AS DOUBLE)
-             / greatest(length(text), 1), 6) AS punct_ratio,
-       round(CAST(length(regexp_extract_all(text, '[A-Z]')) AS DOUBLE)
-             / greatest(length(text), 1), 6) AS upper_ratio,
-       round(CAST({en_stop} AS DOUBLE)
-             / greatest(length(regexp_extract_all(text, '\S+')), 1), 6)
-         AS stopword_ratio,
-       round(CAST(length(text) AS DOUBLE)
-             / greatest(length(regexp_extract_all(text, '\S+')), 1), 6)
-         AS mean_token_len
-  FROM documents
-),
-keep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text))
-SELECT qv.*,
-       (keep.doc_id IS NOT NULL
-        AND n_tokens >= 10 AND punct_ratio <= 0.2) AS kept
-FROM qv LEFT JOIN keep ON qv.doc_id = keep.doc_id
-ORDER BY qv.doc_id"""
-
-    # token counts + language-ID + fingerprint in one projection (r7
-    # merge of text_token_count + text_langid + text_fingerprint: all
-    # seven former columns, one scan)
-    votes = _LANG_SQL_VOTES
-    oracles["text_stats"] = rf"""
-WITH v AS (
-  SELECT doc_id, lang, text,
-         {votes['de']} AS n_de, {votes['en']} AS n_en,
-         {votes['es']} AS n_es, {votes['fr']} AS n_fr
-  FROM documents
-)
-SELECT doc_id,
-       CAST(length(regexp_extract_all(text, '\S+')) AS INT) AS ws_tokens,
-       CAST(length(regexp_extract_all(text,
-            '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS INT) AS bpeish_tokens,
-       lang,
-       CASE WHEN n_de = greatest(n_de, n_en, n_es, n_fr) THEN 'de'
-            WHEN n_en = greatest(n_en, n_es, n_fr) THEN 'en'
-            WHEN n_es = greatest(n_es, n_fr) THEN 'es'
-            ELSE 'fr' END AS pred_lang,
-       greatest(n_de, n_en, n_es, n_fr) AS votes,
-       md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fingerprint
-FROM v ORDER BY doc_id"""
-
     # node + edge views in one long-format lane (r7 merge): each branch
     # is the former standalone oracle verbatim, degrees cast to string
     # for the shared column shape
@@ -2227,525 +1110,6 @@ SELECT view, c1, c2, c3, c4 FROM (
   WHERE obj NOT LIKE '\"%'
 ) ORDER BY view, c1, c2, c3, c4""")
 
-    dot_ab = ("list_reduce(list_transform(range(1, len(a.embedding) + 1),"
-              " i -> CAST(a.embedding[i] AS DOUBLE)"
-              " * CAST(b.embedding[i] AS DOUBLE)), (acc, v) -> acc + v)")
-    norm = ("sqrt(list_reduce(list_transform({side}.embedding,"
-            " x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),"
-            " (acc, v) -> acc + v))")
-    _emb_exact_sql = f"""
-SELECT 'exact' AS method, a.vec_id AS id_a, b.vec_id AS id_b,
-       round(({dot_ab}) / greatest(({norm.format(side='a')})
-             * ({norm.format(side='b')}), 1e-12), 6) AS cos_sim
-FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE round(({dot_ab}) / greatest(({norm.format(side='a')})
-      * ({norm.format(side='b')}), 1e-12), 6) >= 0.4"""
-
-    ids = ", ".join(str(i) for i in SIM_QUERY_IDS)
-
-    # ONE cosine-SQL renderer for every similarity oracle: list_reduce is
-    # a left fold like Spark's aggregate(...), and the CASTs force float64
-    # like the Spark plan, so values agree bit-for-bit. Ranking everywhere
-    # uses the ROUNDED cos_sim + id tie-break — the exact ordering the
-    # Spark _topk_epilogue applies (ranking on the unrounded value would
-    # be a latent flake: two sims that round equal could rank either way).
-    def duck_cos(a: str, b: str) -> str:
-        d = (f"list_reduce(list_transform(range(1, len({a}) + 1),"
-             f" i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)),"
-             " (acc, v) -> acc + v)")
-        n1 = (f"sqrt(list_reduce(list_transform({a},"
-              " x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),"
-              " (acc, v) -> acc + v))")
-        n2 = (f"sqrt(list_reduce(list_transform({b},"
-              " x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),"
-              " (acc, v) -> acc + v))")
-        return f"(({d}) / greatest(({n1}) * ({n2}), 1e-12))"
-
-    _brute_ctes = f"""bq AS (
-  SELECT vec_id AS qid, embedding AS qe FROM embeddings
-  WHERE vec_id IN ({ids})
-),
-bp AS (
-  SELECT bq.qid, e.vec_id AS nid,
-         round({duck_cos('bq.qe', 'e.embedding')}, 6) AS cos_sim
-  FROM bq, embeddings e WHERE e.vec_id <> bq.qid
-),
-br AS (
-  SELECT qid AS query_id, nid AS neighbor_id, cos_sim,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY cos_sim DESC, nid) AS rank
-  FROM bp
-)"""
-
-    # IVF oracle re-derives the deterministic centroid set (md5 order) and
-    # replays assignment / nprobe / in-list search with the same float64
-    # left-folds — approximate op, EXACT verification, like the LSH lanes.
-    # CTE chain shared between sim_ivf_topk and the sim_ivf_recall audit.
-    ivf_ctes = f"""cents AS (
-  SELECT vec_id AS centroid_id, embedding AS c_emb
-  FROM embeddings ORDER BY md5(CAST(vec_id AS VARCHAR))
-  LIMIT {similarity.IVF_N_CENTROIDS}
-),
-asg0 AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         row_number() OVER (PARTITION BY e.vec_id
-                            ORDER BY {duck_cos('e.embedding', 'c.c_emb')}
-                            DESC, c.centroid_id) AS rn
-  FROM embeddings e, cents c
-),
-asg AS (SELECT vec_id, embedding, centroid_id FROM asg0 WHERE rn = 1),
-qp0 AS (
-  SELECT q.vec_id AS query_id, q.embedding AS qe, c.centroid_id,
-         row_number() OVER (PARTITION BY q.vec_id
-                            ORDER BY {duck_cos('q.embedding', 'c.c_emb')}
-                            DESC, c.centroid_id) AS rn
-  FROM embeddings q, cents c WHERE q.vec_id IN ({ids})
-),
-qp AS (SELECT query_id, qe, centroid_id FROM qp0 WHERE rn <= {similarity.IVF_NPROBE}),
-icand AS (
-  SELECT qp.query_id, a.vec_id AS neighbor_id,
-         round({duck_cos('qp.qe', 'a.embedding')}, 6) AS cos_sim
-  FROM asg a JOIN qp ON a.centroid_id = qp.centroid_id
-  WHERE a.vec_id <> qp.query_id
-),
-ir AS (
-  SELECT query_id, neighbor_id, cos_sim,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos_sim DESC, neighbor_id) AS rank
-  FROM icand
-)"""
-    # IVF recall@5 vs the exact brute-force twin: BOTH sides re-derived
-    # in SQL, intersected on (query_id, neighbor_id). Same rounded-sim +
-    # id tie-break ordering everywhere, so the set compare is
-    # deterministic. Assembled into the merged ann_recall oracle below
-    # (alongside the embedding-LSH recall chain).
-    _ivf_recall_ctes = f"""ivf AS (
-  SELECT query_id, neighbor_id FROM ir WHERE rank <= 5),
-eq AS (
-  SELECT vec_id AS qid, embedding AS qe FROM embeddings
-  WHERE vec_id IN ({ids})
-),
-ep AS (
-  SELECT q.qid, e.vec_id AS nid,
-         round({duck_cos('q.qe', 'e.embedding')}, 6) AS cos_sim
-  FROM eq q, embeddings e WHERE e.vec_id <> q.qid
-),
-er AS (
-  SELECT qid AS query_id, nid AS neighbor_id,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY cos_sim DESC, nid) AS rank
-  FROM ep
-),
-exact AS (SELECT query_id, neighbor_id FROM er WHERE rank <= 5),
-h AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_hits
-  FROM ivf JOIN exact USING (query_id, neighbor_id)
-),
-x AS (SELECT CAST(count(*) AS BIGINT) AS n_exact FROM exact)"""
-
-    # salted skew join: the oracle is the PLAIN (unsalted) join over the
-    # same deterministically rebuilt hot-predicate corpus — proving the
-    # salt split changes the physical plan, never the answer.
-    oracles["kg_skew_salted_join"] = f"""
-WITH f AS (
-  SELECT doc_id, i,
-         CASE WHEN (doc_id + i) % 2 = 0 THEN '<http://schema.org/name>'
-              ELSE '<http://ex.org/p'
-                   || CAST((doc_id * {skew.ROWS_PER_DOC} + i)
-                           % {skew.SPREAD} AS STRING) || '>'
-         END AS pred
-  FROM documents
-  CROSS JOIN generate_series(0, {skew.ROWS_PER_DOC - 1}) AS t(i)
-),
-dim AS (
-  SELECT DISTINCT pred, substr(md5(pred), 1, 8) AS pred_tag FROM f
-)
-SELECT f.pred, dim.pred_tag,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(sum(doc_id + i) AS BIGINT) AS sum_key
-FROM f JOIN dim ON f.pred = dim.pred
-GROUP BY f.pred, dim.pred_tag ORDER BY f.pred"""
-
-    mm_kind = ("CASE WHEN doc_id % 3 = 0 THEN 'image'"
-               " WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END")
-    oracles["mm_media_stats"] = f"""
-SELECT {mm_kind} AS kind,
-       CAST(count(*) AS BIGINT) AS n_items,
-       CAST(sum(octet_length(encode(text))) AS BIGINT) AS total_bytes,
-       round(avg(octet_length(encode(text))), 2) AS avg_bytes
-FROM documents GROUP BY 1 ORDER BY kind"""
-
-    oracles["mm_features"] = f"""
-SELECT doc_id AS media_id, {mm_kind} AS kind,
-       CAST(octet_length(encode(text)) AS INT) AS n_bytes,
-       ('0x' || substr(sha256(text), 1, 2))::INT AS f0_byte
-FROM documents ORDER BY media_id"""
-
-    # REAL-decode lanes merged into one long-format lane (r7): the
-    # oracle recomputes every decoded statistic from the payload
-    # generators' closed-form integer definitions (the Spark side parses
-    # actual WAV/PPM/PNG bytes — multimodal.decode_wav/decode_ppm/
-    # decode_png); the PNG rows decode to the SAME closed-form pixel
-    # sums as PPM (same raster, different container + filters).
-    _wav_cte = """
-SELECT doc_id AS media_id,
-       CAST(800 + (doc_id % 5) * 160 AS BIGINT) AS n_samples,
-       CAST(16000 AS BIGINT) AS sample_rate,
-       CAST((800 + (doc_id % 5) * 160) * 1000 // 16000 AS BIGINT)
-         AS duration_ms,
-       CAST(list_max([(doc_id * 31 + i * 7) % 65536 - 32768
-                      FOR i IN range(800 + (doc_id % 5) * 160)]) AS BIGINT)
-         AS peak,
-       CAST(list_sum([abs((doc_id * 31 + i * 7) % 65536 - 32768)
-                      FOR i IN range(800 + (doc_id % 5) * 160)]) AS BIGINT)
-         AS sum_abs
-FROM documents WHERE doc_id % 3 = 1"""
-    _ppm_cte = """
-SELECT doc_id AS media_id,
-       CAST(8 + (doc_id % 4) * 4 AS BIGINT) AS width,
-       CAST(6 + (doc_id % 3) * 2 AS BIGINT) AS height,
-       CAST((6 + (doc_id % 3) * 2)
-            * list_sum([(doc_id + x) % 256
-                        FOR x IN range(8 + (doc_id % 4) * 4)]) AS BIGINT)
-         AS sum_r,
-       CAST(list_sum([list_sum([(x * y) % 256
-                                FOR x IN range(8 + (doc_id % 4) * 4)])
-                      FOR y IN range(6 + (doc_id % 3) * 2)]) AS BIGINT)
-         AS sum_g,
-       CAST((8 + (doc_id % 4) * 4)
-            * list_sum([(doc_id * 3 + y) % 256
-                        FOR y IN range(6 + (doc_id % 3) * 2)]) AS BIGINT)
-         AS sum_b
-FROM documents WHERE doc_id % 3 = 0"""
-    _mm_rows = " UNION ALL ".join(
-        f"SELECT '{fmt}' AS fmt, media_id, '{s}' AS stat,"
-        f" {s} AS value FROM {src}"
-        for fmt, src in (("wav", "wavs"), ("ppm", "ppms"), ("png", "ppms"))
-        for s in _MM_DECODE_STATS[fmt])
-    oracles["mm_decode"] = f"""
-WITH wavs AS ({_wav_cte}),
-ppms AS ({_ppm_cte})
-SELECT fmt, media_id, stat, value FROM ({_mm_rows})
-ORDER BY fmt, media_id, stat"""
-
-    oracles["tpch_q1"] = """
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2) AS sum_qty,
-       round(sum(l_extendedprice), 2) AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-       count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= DATE '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus"""
-
-    oracles["tpch_q3"] = """
-SELECT l_orderkey, o_orderdate, o_orderpriority,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING' AND o_orderdate < DATE '1995-03-15'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, l_orderkey LIMIT 10"""
-
-    oracles["tpch_q5"] = """
-SELECT n_name, round(sum(l_extendedprice * (1 - l_discount)), 2)
-       AS revenue
-FROM customer JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE r_name = 'ASIA' AND o_orderdate >= DATE '1996-01-01'
-  AND o_orderdate < DATE '1997-01-01'
-GROUP BY n_name ORDER BY revenue DESC, n_name"""
-
-    oracles["window_top_orders"] = """
-SELECT o_custkey, o_orderkey, o_totalprice, CAST(rn AS INT) AS rn FROM (
-  SELECT o_custkey, o_orderkey, o_totalprice,
-         row_number() OVER (PARTITION BY o_custkey
-                            ORDER BY o_totalprice DESC, o_orderkey) AS rn
-  FROM orders
-) WHERE rn <= 3 ORDER BY o_custkey, rn"""
-
-    oracles["events_hourly"] = """
-SELECT event_type,
-       strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-       count(*) AS n_events,
-       round(sum(value), 2) AS sum_value
-FROM events GROUP BY 1, 2 ORDER BY event_type, hour"""
-
-    # -- signature-based ops: the signatures themselves are deterministic
-    # (fixed seeds, md5 token hashes), so the oracle RECOMPUTES the full
-    # algorithm in SQL — the (a,b) / hyperplane constants are inlined as
-    # literals into both engines. No recall assumption anywhere: a banding
-    # off-by-one or hash-family regression now breaks the value hash.
-
-    params = dedup._hash_params(dedup.NUM_HASHES)
-    param_rows = ", ".join(f"({j}, {a}, {b})"
-                           for j, (a, b) in enumerate(params))
-
-    def minhash_ctes(src: str, threshold: float) -> str:
-        """The full MinHash-LSH recompute as a CTE chain ending in
-        ``mh(doc_a, doc_b, est_jaccard)`` — parameterized on the source
-        relation so the standalone lane and the cleaning chain replay the
-        IDENTICAL algorithm (dedup.NUM_HASHES hashes, dedup.BANDS bands)."""
-        sh1 = dedup.SHINGLE - 1
-        rows = dedup.NUM_HASHES // dedup.BANDS
-        return f"""w AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ws
-  FROM {src}
-),
-g AS (  -- distinct word shingles; short docs degrade to one short gram
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           range(1, greatest(len(ws) - {sh1}, 1) + 1),
-           i -> array_to_string(list_slice(ws, i, i + {sh1}), ' ')))) AS gram
-  FROM w
-),
-hv AS (  -- 31-bit gram hash: first 4 md5 bytes, sign bit cleared
-  SELECT doc_id,
-         ('0x' || substr(md5(gram), 1, 8))::BIGINT & 2147483647 AS h
-  FROM g
-),
-params(j, a, b) AS (VALUES {param_rows}),
-sig AS (  -- minhash_j = min (a_j*h + b_j) mod M  (fits BIGINT: a,h < 2^31)
-  SELECT doc_id, j, min((a * h + b) % {dedup._MERSENNE}) AS m
-  FROM hv CROSS JOIN params GROUP BY doc_id, j
-),
-bands AS (
-  SELECT doc_id, j // {rows} AS band,
-         string_agg(CAST(m AS STRING), ',' ORDER BY j) AS bkey
-  FROM sig GROUP BY doc_id, j // {rows}
-),
-cand AS (
-  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b
-  FROM bands x JOIN bands y
-    ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id
-  GROUP BY 1, 2
-),
-mh AS (
-  SELECT c.doc_a, c.doc_b,
-         round(sum(CASE WHEN sa.m = sb.m THEN 1 ELSE 0 END)
-               / {dedup.NUM_HASHES}.0, 6)
-           AS est_jaccard
-  FROM cand c
-  JOIN sig sa ON sa.doc_id = c.doc_a
-  JOIN sig sb ON sb.doc_id = c.doc_b AND sb.j = sa.j
-  GROUP BY 1, 2
-  HAVING round(sum(CASE WHEN sa.m = sb.m THEN 1 ELSE 0 END)
-               / {dedup.NUM_HASHES}.0, 6)
-         >= {threshold}
-)"""
-
-    # merged near-dup oracle (r7 consolidation): one WITH holding the
-    # three former lanes' CTEs (ngram CTE renamed ng_t, simhash CTEs
-    # prefixed sh_ to avoid hv/sig collisions with minhash_ctes), then
-    # the UNION ALL of the three former SELECTs with a method
-    # discriminator — the per-method assertions are unchanged
-    oracles["dedup_neardup"] = f"""
-WITH {_ngram_cte},
-{minhash_ctes('documents', 0.5)},
-sh_tok AS (
-  SELECT doc_id,
-         unnest(list_distinct(regexp_extract_all(lower(text), '[a-z0-9]+')))
-           AS t
-  FROM documents
-),
-sh_hv AS (  -- 64-bit token hash: first 8 md5 bytes, big-endian
-  SELECT doc_id, ('0x' || substr(md5(t), 1, 16))::UBIGINT AS h FROM sh_tok
-),
-sh_votes AS (
-  SELECT doc_id, b.bit,
-         sum(CASE WHEN (h >> b.bit) & 1 = 1 THEN 1 ELSE -1 END) AS v
-  FROM sh_hv CROSS JOIN (SELECT unnest(range(64)) AS bit) b
-  GROUP BY doc_id, b.bit
-),
-sh_sig0 AS (
-  SELECT doc_id,
-         bit_or(CASE WHEN v > 0 THEN (1::UBIGINT << bit)
-                     ELSE 0::UBIGINT END) AS s
-  FROM sh_votes GROUP BY doc_id
-),
-sh_sig AS (  -- docs with zero tokens get signature 0, like the Spark kernel
-  SELECT d.doc_id, coalesce(sh_sig0.s, 0::UBIGINT) AS s
-  FROM documents d LEFT JOIN sh_sig0 ON d.doc_id = sh_sig0.doc_id
-)
-SELECT 'ngram' AS method, a.doc_id AS doc_a, b.doc_id AS doc_b,
-       round(len(list_intersect(a.toks, b.toks))
-             / greatest(len(list_distinct(list_concat(a.toks, b.toks))), 1),
-             6) AS score
-FROM ng_t a JOIN ng_t b ON a.blk_key = b.blk_key AND a.doc_id < b.doc_id
-WHERE round(len(list_intersect(a.toks, b.toks))
-            / greatest(len(list_distinct(list_concat(a.toks, b.toks))), 1),
-            6) >= 0.1
-UNION ALL
-SELECT 'minhash', doc_a, doc_b, est_jaccard FROM mh
-UNION ALL
-SELECT 'simhash', a.doc_id, b.doc_id,
-       CAST(bit_count(xor(a.s, b.s)) AS DOUBLE)
-FROM sh_sig a JOIN sh_sig b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.s, b.s)) <= 3
-ORDER BY method, doc_a, doc_b"""
-
-    # the cleaning chain: all four gates replayed in SQL over the same
-    # injected corpus (see _chain_corpus / _NEAR/_PII/_TINY_TEXT_SQL)
-    pii_any = " OR ".join(
-        f"len(regexp_extract_all(coalesce(text, ''), '{pat}')) > 0"
-        for pat in textstats.PII_PATTERNS.values())
-    oracles["pipeline_clean_corpus"] = rf"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 200000 AS doc_id, text FROM documents
-  WHERE doc_id % 5 = 0
-  UNION ALL
-  SELECT doc_id + 300000, {_NEAR_TEXT_SQL} FROM documents
-  WHERE doc_id % 7 = 0
-  UNION ALL
-  SELECT doc_id + 400000, {_PII_TEXT_SQL} FROM documents
-  WHERE doc_id % 11 = 0
-  UNION ALL
-  SELECT doc_id + 500000, {_TINY_TEXT_SQL} FROM documents
-  WHERE doc_id % 13 = 0
-),
-qf AS (
-  SELECT doc_id, text,
-         CAST(length(regexp_extract_all(text, '\S+')) AS INT) AS n_tokens,
-         round(CAST(length(regexp_extract_all(text, '[^\w\s]')) AS DOUBLE)
-               / greatest(length(text), 1), 6) AS punct_ratio
-  FROM corpus
-),
-s1 AS (SELECT * FROM qf WHERE n_tokens >= 10 AND punct_ratio <= 0.2),
-s2m AS (
-  SELECT *, min(doc_id) OVER (PARTITION BY md5(text)) AS keep FROM s1
-),
-s2 AS (
-  SELECT doc_id, text, n_tokens, punct_ratio FROM s2m WHERE doc_id = keep
-),
-{minhash_ctes('s2', 0.5)},
-drops AS (SELECT DISTINCT doc_b AS doc_id FROM mh)
-SELECT doc_id, n_tokens, punct_ratio
-FROM s2
-WHERE doc_id NOT IN (SELECT doc_id FROM drops)
-  AND NOT ({pii_any})
-ORDER BY doc_id"""
-
-    def duck_bucket(n_planes: int, seed: int) -> str:
-        """DuckDB twin of similarity.hyperplane_bucket_sql: identical plane
-        literals, identical left-fold summation order -> identical bits."""
-        planes = similarity.lsh_planes(n_planes, 64, seed)
-        terms = []
-        for j, plane in enumerate(planes):
-            arr = ", ".join(similarity._f64_lit(v) for v in plane)
-            dot = (f"list_reduce(list_transform(range(1, 65),"
-                   f" i -> CAST(embedding[i] AS DOUBLE) * ([{arr}])[i]),"
-                   f" (acc, v) -> acc + v)")
-            terms.append(f"(CASE WHEN {dot} > 0 THEN {1 << j} ELSE 0 END)")
-        return "(" + " + ".join(terms) + ")"
-
-    _lsh_topk_ctes = f"""lb AS (
-  SELECT vec_id, embedding, {duck_bucket(similarity.LSH_TOPK_PLANES, similarity.LSH_SEED)} AS bucket FROM embeddings
-),
-lq AS (
-  SELECT vec_id AS qid, embedding AS qe, bucket AS qb FROM lb
-  WHERE vec_id IN ({ids})
-),
-lp AS (
-  SELECT lq.qid, e.vec_id AS nid,
-         round({duck_cos('lq.qe', 'e.embedding')}, 6) AS cos_sim
-  FROM lq JOIN lb e ON e.bucket = lq.qb AND e.vec_id <> lq.qid
-),
-lr AS (
-  SELECT qid AS query_id, nid AS neighbor_id, cos_sim,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY cos_sim DESC, nid) AS rank
-  FROM lp
-)"""
-    # all three top-k paths in one lane (r7 merge): each chain is the
-    # former standalone oracle verbatim, tagged with its method
-    oracles["sim_topk"] = f"""
-WITH {_brute_ctes},
-{ivf_ctes},
-{_lsh_topk_ctes}
-SELECT method, query_id, neighbor_id, rank, cos_sim FROM (
-  SELECT 'brute' AS method, query_id, neighbor_id,
-         CAST(rank AS INT) AS rank, cos_sim FROM br WHERE rank <= 5
-  UNION ALL
-  SELECT 'ivf', query_id, neighbor_id, CAST(rank AS INT), cos_sim
-  FROM ir WHERE rank <= 5
-  UNION ALL
-  SELECT 'lsh', query_id, neighbor_id, CAST(rank AS INT), cos_sim
-  FROM lr WHERE rank <= 5
-) ORDER BY method, query_id, rank"""
-
-    lsh_tables = "\nUNION\n".join(
-        f"  SELECT x.vec_id AS id_a, y.vec_id AS id_b\n"
-        f"  FROM (SELECT vec_id,"
-        f" {duck_bucket(similarity.LSH_PAIR_PLANES, seed)} AS bucket"
-        f" FROM embeddings) x\n"
-        f"  JOIN (SELECT vec_id,"
-        f" {duck_bucket(similarity.LSH_PAIR_PLANES, seed)} AS bucket"
-        f" FROM embeddings) y\n"
-        f"    ON x.bucket = y.bucket AND x.vec_id < y.vec_id"
-        for seed in similarity.LSH_PAIR_SEEDS)
-    # exact all-pairs twin + LSH scale path in one lane (r7 merge):
-    # each branch is the former standalone oracle verbatim
-    oracles["dedup_embedding"] = f"""
-WITH cand AS (
-{lsh_tables}
-)
-SELECT method, id_a, id_b, cos_sim FROM (
-{_emb_exact_sql}
-UNION ALL
-SELECT 'lsh', c.id_a, c.id_b,
-       round(({dot_ab}) / greatest(({norm.format(side='a')})
-             * ({norm.format(side='b')}), 1e-12), 6) AS cos_sim
-FROM cand c
-JOIN embeddings a ON a.vec_id = c.id_a
-JOIN embeddings b ON b.vec_id = c.id_b
-WHERE round(({dot_ab}) / greatest(({norm.format(side='a')})
-      * ({norm.format(side='b')}), 1e-12), 6) >= 0.4
-) ORDER BY method, id_a, id_b"""
-
-    # shared session CTE: the single definition of the 30-min-gap
-    # semantics that the batch lane (both methods), the streaming lane
-    # (both flush mechanisms) and their Spark twins all reproduce
-    sessionize_cte = """
-WITH g AS (
-  SELECT user_id, event_id, ts, value,
-         CASE WHEN lag(ts) OVER w IS NULL
-              OR CAST(floor(epoch(ts)) AS BIGINT)
-                 - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) > 1800
-              THEN 1 ELSE 0 END AS new_sess
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-s AS (
-  SELECT user_id, ts, value,
-         sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                             ROWS UNBOUNDED PRECEDING) AS session_seq
-  FROM g
-)
-SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
-       CAST(count(*) AS BIGINT) AS n_events,
-       strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-       round(sum(value), 2) AS sum_value
-FROM s GROUP BY user_id, session_seq ORDER BY user_id, session_seq"""
-
-    # the batch lane computes the table twice (lag windows vs native
-    # session_window); each half must match the one CTE (hash compare is
-    # order-insensitive, so UNION ALL of the twin halves is safe)
-    oracles["events_sessionize"] = f"""
-SELECT 'lag' AS method, t.* FROM ({sessionize_cte}) t
-UNION ALL
-SELECT 'native' AS method, t.* FROM ({sessionize_cte}) t"""
-
-    # both streaming flush mechanisms must reproduce the same table
-    oracles["streaming_sessionize"] = f"""
-SELECT 'sentinel' AS flush, t.* FROM ({sessionize_cte}) t
-UNION ALL
-SELECT 'timeout' AS flush, t.* FROM ({sessionize_cte}) t"""
     # the streaming KG lane must produce byte-identical quads to batch
     oracles["streaming_kg_quads"] = oracles["kg_quads"]
 
@@ -2762,46 +1126,5 @@ JOIN (SELECT url, TIMESTAMP '2025-01-01 00:00:00'
              + (doc_id % 86400) * INTERVAL '1 second' AS wts FROM d) ts
   USING (url)
 GROUP BY 1 ORDER BY 1""")
-
-    # BOTH approximate-index recall audits in one lane (r7 merge).
-    # embedding_lsh: deterministic ~1/4 md5(vec_id) sample (mirrors
-    # similarity.deterministic_id_sample — same stratum math); ivf:
-    # recall@5 vs the brute-force top-k (chains assembled above).
-    samp = ("('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT"
-            " % 4 = 0")
-    lsh_tables_sampled = lsh_tables.replace(
-        "FROM embeddings)", f"FROM embeddings WHERE {samp})")
-    oracles["ann_recall"] = f"""
-WITH se AS (
-  SELECT * FROM embeddings WHERE {samp}
-),
-scand AS (
-{lsh_tables_sampled}
-),
-lshv AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_lsh
-  FROM scand c
-  JOIN se a ON a.vec_id = c.id_a
-  JOIN se b ON b.vec_id = c.id_b
-  WHERE round(({dot_ab}) / greatest(({norm.format(side='a')})
-        * ({norm.format(side='b')}), 1e-12), 6) >= 0.4
-),
-exactv AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_exact
-  FROM se a JOIN se b ON a.vec_id < b.vec_id
-  WHERE round(({dot_ab}) / greatest(({norm.format(side='a')})
-        * ({norm.format(side='b')}), 1e-12), 6) >= 0.4
-),
-{ivf_ctes},
-{_ivf_recall_ctes}
-SELECT method, n_approx, n_exact, recall FROM (
-  SELECT 'embedding_lsh' AS method, n_lsh AS n_approx, exactv.n_exact,
-         round(n_lsh / greatest(exactv.n_exact, 1), 6) AS recall
-  FROM lshv, exactv
-  UNION ALL
-  SELECT 'ivf', n_hits, x.n_exact,
-         round(n_hits / greatest(x.n_exact, 1), 6)
-  FROM h, x
-) ORDER BY method"""
 
     return oracles

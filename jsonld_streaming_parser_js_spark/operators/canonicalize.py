@@ -10,7 +10,8 @@ standard large-scale ER recipe (cf. PAPERS.md SparkER / BTS):
    used — cheaper and deterministic; LSH kicks in for fuzzy matches.)
 3. **Connected components** over the candidate edge list via hash-min
    label propagation: iterated self-joins on a DataFrame edge list,
-   converging in O(log n) rounds; each round is one shuffle keyed on node.
+   converging in O(component diameter) rounds; each round is one shuffle
+   keyed on node.
 4. **Relabel**: every node maps to its component's lexicographically
    smallest member; an equi-join rewrites subj/obj in the quads table.
 
@@ -198,14 +199,17 @@ def connected_components(edges: DataFrame,
     # changed == min(all) < min(self row) — labels only ever decrease.
     # sym2 (edges + reversed edges + self-loops) is iteration-invariant
     # and checkpointed once; the initial labels read its self-loop rows
-    # back narrowly (no extra job).
+    # back narrowly (no extra job). Caller self-loops are dropped from
+    # the edge and reversed legs (the synthesized self-loop leg already
+    # covers their node), so each node has exactly one initial label.
     edges = edges.select("src", "dst").localCheckpoint()
-    rev = edges.select(F.col("dst").alias("src"),
+    links = edges.where(F.col("src") != F.col("dst"))
+    rev = links.select(F.col("dst").alias("src"),
                        F.col("src").alias("dst"))
     nodes = (edges.select(F.col("src").alias("node"))
              .union(edges.select(F.col("dst").alias("node")))
              .distinct())
-    sym2 = (edges.union(rev)
+    sym2 = (links.union(rev)
             .union(nodes.select(F.col("node").alias("src"),
                                 F.col("node").alias("dst")))
             .localCheckpoint())
@@ -238,110 +242,6 @@ def connected_components(edges: DataFrame,
         f"(component diameter exceeds max_iter; raise max_iter)")
 
 
-def _large_star(edges: DataFrame) -> DataFrame:
-    """Large-star step: every node u connects its strictly-larger
-    neighbors to min(N(u) + {u})."""
-    sym = edges.union(edges.select(F.col("dst").alias("src"),
-                                   F.col("src").alias("dst")))
-    mins = (sym.groupBy("src")
-            .agg(F.least(F.min("dst"), F.first("src")).alias("m")))
-    return (sym.join(mins, "src")
-            .where(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .where(F.col("src") != F.col("dst"))
-            .distinct())
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Small-star step: orient each edge to its larger endpoint, then
-    connect that node and all its (smaller) neighbors to the minimum."""
-    oriented = edges.select(
-        F.greatest("src", "dst").alias("u"),
-        F.least("src", "dst").alias("v"))
-    mins = oriented.groupBy("u").agg(F.min("v").alias("m"))
-    leaves = (oriented.join(mins, "u")
-              .where(F.col("v") != F.col("m"))
-              .select(F.col("v").alias("src"), F.col("m").alias("dst")))
-    centers = mins.select(F.col("u").alias("src"),
-                          F.col("m").alias("dst"))
-    return (leaves.union(centers)
-            .where(F.col("src") != F.col("dst"))
-            .distinct())
-
-
-def connected_components_two_phase(edges: DataFrame,
-                                   max_iter: int = 30,
-                                   stats: dict | None = None) -> DataFrame:
-    """Alternating large-star / small-star connected components —
-    O(log n) rounds regardless of component DIAMETER (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14; PAPERS.md).
-
-    Same contract as :func:`connected_components` (node -> component =
-    min member, string order), but convergence does not depend on the
-    graph's shape: hash-min propagates the min label one hop per round
-    (O(diameter)), while star operations reattach whole subtrees, halving
-    tree heights each round. The trade is more shuffles per round (two
-    groupBys + two joins vs one of each), so hash-min stays preferable
-    for the tiny-diameter components that blocking produces; this is the
-    scale path for unknown/long chain topologies.
-
-    Convergence test: EXACT edge-set equality across a full round — at
-    the fixpoint the edge set is exactly the star forest
-    {(v, min(C)) | v != min(C)}, which both steps map to itself.
-    (Replaces the r6 (count, bit_xor(xxhash64)) signature, which
-    carried a documented ~2^-64 collision risk — ADVICE r6.) Cost
-    shape: every round pays one shuffle-free count (map-side agg, which
-    also materializes the lazy checkpoint); only rounds whose count
-    MATCHES the previous round's — candidate fixpoints — additionally
-    pay a left-anti join on (src, dst): with equal counts and both
-    relations distinct, one-sided emptiness <=> set equality. While the
-    algorithm is contracting, counts differ and the join is skipped, so
-    exactness costs one corpus-keyed join at the final round(s) only,
-    not per round.
-
-    ``stats``: caller-owned dict; on return ``stats['iterations']``
-    holds the converged round count (out-param, not a mutated function
-    attribute — shared global state is unsafe under concurrent callers).
-    """
-    base = edges.select("src", "dst").localCheckpoint()
-    e = base.where(F.col("src") != F.col("dst")).distinct()
-    # node universe from the UNFILTERED input so self-loop-only nodes
-    # still label themselves (contract parity with hash-min)
-    all_nodes = (base.select(F.col("src").alias("node"))
-                 .union(base.select(F.col("dst").alias("node")))
-                 .distinct())
-
-    e = e.localCheckpoint()
-    prev_count = e.count()
-    for rounds in range(1, max_iter + 1):
-        prev_e = e
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        n = e.count()  # shuffle-free; materializes the lazy checkpoint
-        converged = False
-        if n == prev_count:
-            # candidate fixpoint: equal counts + (new \ prev) empty
-            # <=> set equality (both relations are distinct on
-            # (src, dst)); the anti-join only runs on these rounds
-            converged = (e.join(prev_e, ["src", "dst"], "left_anti")
-                         .count() == 0)
-        prev_count = n
-        if converged:
-            if stats is not None:
-                stats["iterations"] = rounds
-            labels = e.select(F.col("src").alias("node"),
-                              F.col("dst").alias("component"))
-            # roots (and any node isolated by self-edge pruning) label
-            # themselves
-            return (all_nodes.join(labels, "node", "left")
-                    .select("node",
-                            F.coalesce("component", "node")
-                            .alias("component")))
-    raise RuntimeError(
-        f"connected_components_two_phase did not converge in {max_iter} "
-        f"rounds (expected O(log n); this indicates a bug or adversarial "
-        f"float in the edge set)")
-
-
 def canonical_mapping(quads: DataFrame) -> DataFrame:
     """(node, canonical) for every node that belongs to a merged cluster.
 
@@ -359,23 +259,18 @@ def canonical_mapping_fuzzy(quads: DataFrame,
                             min_jaccard: float = 0.5,
                             num_hashes: int = 32,
                             bands: int = 8,
-                            cc_algorithm: str = "hash_min",
                             cc_stats: dict | None = None) -> DataFrame:
     """Fuzzy variant: MinHash-LSH candidates can chain A~B~C across
     blocks, so real connected components are required.
 
-    ``cc_algorithm``: 'hash_min' (default — O(diameter) rounds, cheapest
-    per round; entity-coref candidate graphs have tiny measured diameters
-    because LSH blocking only links near-duplicates, see
-    tests/test_spark_pipeline.py::test_fuzzy_cc_diameter_bound) or
-    'two_phase' (large-star/small-star, O(log n) rounds — the scale path
-    when component topology is unknown or chains are possible)."""
+    Hash-min takes O(diameter) rounds, and entity-coref candidate graphs
+    have tiny measured diameters because LSH blocking only links
+    near-duplicates (see
+    tests/test_spark_pipeline.py::test_fuzzy_cc_diameter_bound)."""
     features = node_features(quads)
     edges = candidate_edges_minhash(features, num_hashes=num_hashes,
                                     bands=bands, min_jaccard=min_jaccard)
-    cc = (connected_components_two_phase if cc_algorithm == "two_phase"
-          else connected_components)
-    comps = cc(edges, stats=cc_stats)
+    comps = connected_components(edges, stats=cc_stats)
     return (comps
             .where(F.col("node") != F.col("component"))
             .select("node", F.col("component").alias("canonical")))

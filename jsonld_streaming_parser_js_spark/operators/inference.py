@@ -174,8 +174,7 @@ def rdfs_entailment(quads: DataFrame,
     ``quads``: (.., subj, pred, obj, graph) in N-Triples lexical form
     (the engine's standard quad frame). ``ontology``: schema triples as
     a driver-side sequence of (s, p, o) term strings, or a DataFrame
-    with subj/pred/obj columns (bounded-collected with a loud guard —
-    same pattern as the IVF centroid collect, similarity.py).
+    with subj/pred/obj columns (bounded-collected with a loud guard).
 
     Returns (subj, pred, obj, graph, src) where src is 'asserted' for
     facts present in the input and 'inferred' for facts only the rules

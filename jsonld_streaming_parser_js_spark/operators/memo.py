@@ -40,8 +40,7 @@ Scale design (100 TB):
 - the fallback semi-join ships only block *keys*, not payloads.
 Cost model: plain parse = O(occurrences) kernel calls; memo parse =
 O(distinct) kernel calls + one bkey shuffle. The memo wins whenever the
-duplication factor exceeds the (cheap) shuffle overhead — bench.py's
-``memo_leg`` measures both sides on a shared-block amplified corpus.
+duplication factor exceeds the (cheap) shuffle overhead.
 """
 
 from __future__ import annotations
@@ -212,15 +211,11 @@ def parse_blocks_memo(blocks: DataFrame, ctx_cache: dict | None = None,
 
 
 def pages_to_quads_memo(pages: DataFrame, ctx_cache: dict | None = None,
-                        rdf_direction: str | None = None,
-                        dedup: bool = True) -> DataFrame:
+                        rdf_direction: str | None = None) -> DataFrame:
     """pages -> deduplicated quads via the distinct-block memo (twin of
     :func:`..operators.parse.pages_to_quads`)."""
     from .extract import extract_blocks
     parsed = parse_blocks_memo(extract_blocks(pages), ctx_cache,
                                rdf_direction)
-    out = quads_only(parsed)
-    if dedup:
-        out = out.dropDuplicates(
-            ["url", "blk", "subj", "pred", "obj", "graph"])
-    return out
+    return quads_only(parsed).dropDuplicates(
+        ["url", "blk", "subj", "pred", "obj", "graph"])

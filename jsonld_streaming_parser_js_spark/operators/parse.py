@@ -145,9 +145,10 @@ def extract_and_parse(pages: DataFrame, ctx_cache: dict | None = None,
     blocks never leave the Python worker). This is the hot path the bench
     measures; the two-stage variant stays for block-level inspection.
 
-    ``dedup_blocks`` (default False — every other caller keeps the raw
-    emission multiplicity, which e.g. the memo parity count in bench.py
-    depends on): collapse duplicate quad emissions *within each block* in
+    ``dedup_blocks`` (default False — the store ``plans.pipeline.build_kg``
+    commits keeps the raw emission multiplicity, which its lineage
+    checksum and kgbench's store fingerprint pin): collapse duplicate
+    quad emissions *within each block* in
     the kernel (ordered-set semantics, first occurrence kept). Because
     every output row carries its ``(url, blk)`` provenance and one block
     is parsed by exactly one ``parse_block`` call, two identical rows can
@@ -221,20 +222,24 @@ def extract_and_parse(pages: DataFrame, ctx_cache: dict | None = None,
 
 
 def pages_to_quads(pages: DataFrame, ctx_cache: dict | None = None,
-                   rdf_direction: str | None = None,
-                   dedup: bool = True) -> DataFrame:
+                   rdf_direction: str | None = None) -> DataFrame:
     """pages -> deduplicated quads (JSON-LD set semantics: the W3C
     comparison is dataset isomorphism, so duplicate emissions collapse).
+
+    Precondition: ``pages`` is unique on ``url``. Two input rows with the
+    same url are parsed by separate kernel calls, and their identical
+    ``(url, blk, subj, pred, obj, graph)`` rows are NOT collapsed — a
+    multi-capture crawl must pick one capture per url first.
 
     r8 optimization (guide §2.4): the dedup key contains ``(url, blk)``
     and one block is parsed by exactly one kernel call, so duplicates are
     block-local by construction — the kernel collapses them in-process
     (``dedup_blocks=True``) and the former corpus-wide ``dropDuplicates``
-    Exchange (a full shuffle of every quad) is removed outright. The
-    output is still distinct on all six columns (proof in the
-    extract_and_parse docstring; focused test:
+    Exchange (a full shuffle of every quad) is removed outright. Given
+    the precondition, the output is distinct on all six columns (proof in
+    the extract_and_parse docstring; focused test:
     tests/test_spark_pipeline.py::test_pages_to_quads_dedup_is_kernel_local).
     """
     parsed = extract_and_parse(pages, ctx_cache, rdf_direction,
-                               dedup_blocks=dedup)
+                               dedup_blocks=True)
     return quads_only(parsed)

@@ -111,28 +111,6 @@ def iceberg_quad_sink(table: str):
     return sink
 
 
-def write_bucketed_table(df: DataFrame, table: str, buckets: int = 64,
-                         key: str = "subj") -> None:
-    """Hash-BUCKETED table sink (``bucketBy`` + ``sortBy`` on ``key``,
-    ``saveAsTable``): the co-located-join storage layout. Any two tables
-    bucketed on the same key with the same bucket count join with ZERO
-    shuffle — the SortMergeJoin reads bucket i of each side directly
-    (plan shows ``Bucketed: true`` scans and no Exchange). At 100 TB
-    this is the difference between re-shuffling the quad corpus for
-    every entity-centric join (canonical relabel, graph assembly,
-    repeated analytics on subj) and paying the shuffle ONCE at write
-    time. Evidence: tests/test_spark_pipeline.py::
-    test_bucketed_tables_join_without_shuffle + EXPLAIN.md invariant.
-
-    Distinct from ``write_bucketed`` below, which partitions by a
-    derived url-bucket COLUMN for lineage/resume granularity — this one
-    uses Spark's table-bucketing metadata, which is what join planning
-    consumes."""
-    (df.write.mode("overwrite")
-     .bucketBy(buckets, key).sortBy(key)
-     .saveAsTable(table))
-
-
 def write_bucketed(parsed_with_bucket: DataFrame, out_dir: str,
                    snapshot_id: str = "", quad_sink=None) -> None:
     """Write quads (+error rows) partitioned by bucket, then commit lineage.

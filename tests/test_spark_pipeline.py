@@ -19,7 +19,6 @@ from jsonld_streaming_parser_js_spark.operators.extract import (
 from jsonld_streaming_parser_js_spark.operators.parse import (
     extract_and_parse, pages_to_quads)
 from jsonld_streaming_parser_js_spark.operators import canonicalize as canon
-from jsonld_streaming_parser_js_spark.operators import skew
 from jsonld_streaming_parser_js_spark.plans import lineage as lin
 from jsonld_streaming_parser_js_spark.plans import pipeline as pipe
 from jsonld_streaming_parser_js_spark.sources.pages import (
@@ -31,6 +30,13 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def pages(spark):
     return pages_from_documents(spark, SF).cache()
+
+
+def test_entry_lanes_and_oracles_pair_up():
+    """Every lane in the entry module has a DuckDB oracle and every
+    oracle has a lane (no Spark session needed)."""
+    import __spark_entry__ as e
+    assert set(e.queries()) == set(e.oracle_sql())
 
 
 def test_byte_identical_extraction(spark, pages):
@@ -563,90 +569,33 @@ def test_relabel_join_degrades_to_shuffle_not_forced_broadcast(spark, pages):
         spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
 
 
-def test_clean_corpus_each_gate_drops_its_class(spark):
-    """One doc per failure class; each must be dropped by its designated
-    gate, clean docs survive."""
-    from jsonld_streaming_parser_js_spark.operators.cleaning import (
-        clean_corpus)
-    good = ("the quick brown fox jumps over the lazy dog while many "
-            "other animals watch the scene from afar in the woods today")
-    rows = [
-        (1, good),
-        (2, good),                           # exact dup -> exact-dedup gate
-        (3, good + " lorem ipsum dolor"),    # near dup -> MinHash gate
-        (4, "please contact our support agent at help@example.com "
-            "for account review and removal today thanks"),  # PII gate
-        (5, "tiny text"),                    # quality gate (2 tokens)
-        (6, "completely different content about distributed query "
-            "engines and the many joys of adaptive execution plans"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["doc_id"] for r in clean_corpus(docs).collect()}
-    assert got == {1, 6}
-
-
-def test_salted_join_matches_plain_and_shuffles_on_salt(spark):
-    """salted_join must (a) return exactly the plain inner join's rows and
-    (b) actually shuffle on (key, salt) — the mechanism that spreads a hot
-    key over n_salts reducer partitions. Broadcast is disabled so the join
-    is forced to shuffle (at real scale the dim side is too big to
-    broadcast; that is the only case salting exists for)."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    fact = skew.skewed_pred_corpus(docs)
-    dim = skew.pred_dim(fact)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
-        salted = skew.salted_join(fact, dim, "pred", n_salts=8)
-        plain = fact.join(dim, "pred")
-        cols = plain.columns
-        assert (salted.select(cols).exceptAll(plain).count() == 0
-                and plain.exceptAll(salted.select(cols)).count() == 0)
-        plan = salted._jdf.queryExecution().executedPlan().toString()
-        ex = [ln for ln in plan.splitlines()
-              if "Exchange hashpartitioning" in ln]
-        assert any("pred" in ln and skew.SALT_COL in ln for ln in ex), ex
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-
-
-def test_bucketed_tables_join_without_shuffle(spark, pages):
-    """Two tables bucketed on subj (same bucket count) must join with
-    ZERO Exchange: the SMJ reads bucket i of each side directly. This is
-    the pay-the-shuffle-once-at-write-time layout for entity-centric
-    joins at corpus scale."""
-    quads = pages_to_quads(pages, CONTEXTS)
-    degrees = quads.groupBy("subj").agg(F.count("*").alias("degree"))
-    lin.write_bucketed_table(quads, "bt_quads", buckets=8)
-    lin.write_bucketed_table(degrees, "bt_degrees", buckets=8)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = (spark.table("bt_quads")
-             .join(spark.table("bt_degrees"), "subj"))
-        # static plan suffices: bucketed scans remove the Exchange at
-        # planning time, no AQE finalization needed
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan[:1500]
-        assert plan.count("Bucketed: true") == 2
-        assert "SortMergeJoin" in plan
-        # values match the plain (shuffled) join
-        plain = quads.join(degrees, "subj")
-        assert j.exceptAll(plain).count() == 0
-        assert plain.exceptAll(j).count() == 0
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS bt_quads")
-        spark.sql("DROP TABLE IF EXISTS bt_degrees")
-
-
 def test_aqe_skew_join_split_fires(spark):
     """The AQE path: a hot-key sort-merge join whose final adaptive plan
     shows the optimizer split the skewed partition
-    (SortMergeJoin(skew=true) + 'AQEShuffleRead ... skewed')."""
-    joined, configs = skew.aqe_skew_demo(spark)
+    (SortMergeJoin(skew=true) + 'AQEShuffleRead ... skewed').
+
+    The join is sized to trigger the split on a local session: half of
+    the rows share key 0, broadcast is disabled and the skew thresholds
+    are lowered. Skew splitting itself stays enabled by the session
+    defaults (sources/session.py)."""
+    n_rows, n_keys = 400_000, 997
+    fact = (spark.range(n_rows)
+            .select(F.when(F.pmod("id", F.lit(2)) == 0, F.lit(0))
+                    .otherwise(F.pmod("id", F.lit(n_keys))).alias("k"),
+                    F.col("id").alias("v"),
+                    F.md5(F.col("id").cast("string")).alias("pad")))
+    dim = (spark.range(n_keys)
+           .select(F.col("id").alias("k"),
+                   F.md5(F.col("id").cast("string")).alias("attr")))
+    joined = fact.join(dim, "k").groupBy().agg(F.count("*").alias("n"))
+    configs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes":
+            "64KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64KB",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+    }
     for k, v in configs.items():
         spark.conf.set(k, v)
     try:
@@ -657,43 +606,6 @@ def test_aqe_skew_join_split_fires(spark):
     finally:
         for k in configs:
             spark.conf.unset(k)
-
-
-def test_bloom_filter_join_pruning_fires_and_preserves_values(spark):
-    """Runtime Bloom-filter injection: the selective dim filter must
-    reach the fact scan as might_contain, and must not change the join
-    result (closed-form expectation + bloom-disabled twin)."""
-    work = tempfile.mkdtemp(prefix="kg_bloom_")
-    try:
-        joined, configs = skew.bloom_join_demo(spark, work)
-        for k, v in configs.items():
-            spark.conf.set(k, v)
-        try:
-            row = joined.collect()[0]
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            assert "might_contain" in plan and "bloom_filter_agg" in plan
-        finally:
-            for k in configs:
-                spark.conf.unset(k)
-        # closed form: keys k in 0..49999 with k%7==3; fact has 4 rows
-        # per key (200k/50k)
-        keys = [k for k in range(50_000) if k % 7 == 3]
-        assert row["n_rows"] == 4 * len(keys)
-        exp_sum = sum(k + j * 50_000 for k in keys for j in range(4))
-        assert row["sum_v"] == exp_sum
-        # bloom OFF twin: identical values (pruning is plan-only)
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-        try:
-            joined2, _ = skew.bloom_join_demo(spark, work)
-            row2 = joined2.collect()[0]
-            assert (row2["n_rows"], row2["sum_v"]) == (row["n_rows"],
-                                                       row["sum_v"])
-        finally:
-            spark.conf.unset(
-                "spark.sql.optimizer.runtime.bloomFilter.enabled")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def test_graph_views(spark, pages):
@@ -727,26 +639,6 @@ def test_graph_views(spark, pages):
                if "Exchange hashpartitioning(term" in ln]
     assert len(term_ex) == 1 and "Union" not in p, p[:2000]
     quads.unpersist()
-
-
-def test_predicate_profile_anchored_literal_kinds(spark):
-    """Adversarial escaped-quote content (``\\"@en``, ``\\"^^<iri>``
-    inside literal content) must NOT count as lang-tagged / typed, while
-    genuinely tagged/typed literals with the same content still do."""
-    import __spark_entry__ as e
-    prof = {r["pred"]: r for r in
-            e._q_kg_predicate_profile(spark, SF).collect()}
-    s = "http://schema.org/"
-    n_adv = 20  # doc_id % 25 == 0 over 500 docs
-    c = prof[f"<{s}comment>"]       # content contains \"@en  -> plain
-    assert (c["n_lang_tagged"], c["n_typed"]) == (0, 0)
-    assert c["n_literal"] == n_adv
-    d = prof[f"<{s}description>"]   # content contains \"^^<iri> -> plain
-    assert (d["n_lang_tagged"], d["n_typed"]) == (0, 0)
-    w = prof[f"<{s}weight>"]        # really typed, content fakes a suffix
-    assert (w["n_typed"], w["n_lang_tagged"]) == (n_adv, 0)
-    nm = prof[f"<{s}name>"]         # really lang-tagged adv names merge in
-    assert nm["n_lang_tagged"] >= n_adv and nm["n_typed"] == 0
 
 
 def test_fuzzy_canonicalization_minhash(spark):
@@ -816,51 +708,39 @@ def test_fuzzy_canonical_chain_needs_cc_iteration(spark):
     assert got == truth
 
 
-def test_two_phase_cc_beats_hash_min_on_long_chains(spark):
-    """A 120-node path (diameter 119): large-star/small-star converges in
-    O(log n) rounds; hash-min needs O(diameter) and correctly raises at a
-    20-iteration cap. Verdict ask: iteration count asserted lower on a
-    deliberately long-chain fixture."""
-    n = 120
-    nodes = [f"<http://c.org/n{i:04d}>" for i in range(n)]
+def test_cc_self_loops_and_duplicate_edges(spark):
+    """Caller self-loops and duplicated edges change nothing: one label
+    row per node, and the same components as the clean edge list. A
+    self-loop-only node labels itself."""
+    clean = [("b", "a"), ("c", "b"), ("x", "y"), ("m", "n")]
+    noisy = clean + [("b", "a"), ("a", "a"), ("c", "c"), ("q", "q")]
+    want = {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x",
+            "m": "m", "n": "m"}
+
+    def labels(e):
+        rows = canon.connected_components(
+            spark.createDataFrame(e, "src string, dst string")).collect()
+        assert len(rows) == len({r["node"] for r in rows})
+        return {r["node"]: r["component"] for r in rows}
+
+    assert labels(clean) == want
+    assert labels(noisy) == {**want, "q": "q"}
+
+
+def test_hash_min_cc_raises_past_max_iter(spark):
+    """A chain longer than max_iter hops must raise, not return partial
+    components."""
     edges = spark.createDataFrame(
-        [(nodes[i], nodes[i + 1]) for i in range(n - 1)],
-        "src string, dst string")
-    st: dict = {}
-    got = {r["node"]: r["component"]
-           for r in canon.connected_components_two_phase(
-               edges, stats=st).collect()}
-    assert set(got) == set(nodes)
-    assert set(got.values()) == {nodes[0]}
-    rounds = st["iterations"]
-    assert rounds <= 10, rounds  # ~log2(120), not 119
+        [(f"n{i}", f"n{i + 1}") for i in range(8)], "src string, dst string")
     with pytest.raises(RuntimeError, match="did not converge"):
-        canon.connected_components(edges, max_iter=20)
-
-
-def test_two_phase_cc_matches_hash_min(spark):
-    """Same labels from both CC algorithms on a multi-component graph
-    with chains, stars, a cycle, a self-loop and an isolated pair."""
-    e = [("b", "a"), ("c", "b"),                      # chain -> a
-         ("h", "g"), ("i", "g"), ("j", "g"),          # star  -> g
-         ("x", "y"), ("y", "z"), ("z", "x"),          # cycle -> x
-         ("q", "q"),                                  # self-loop
-         ("m", "n")]                                  # pair
-    edges = spark.createDataFrame(e, "src string, dst string")
-    a = {(r["node"], r["component"])
-         for r in canon.connected_components(edges).collect()}
-    b = {(r["node"], r["component"])
-         for r in canon.connected_components_two_phase(edges).collect()}
-    assert a == b
-    assert ("q", "q") in a and ("z", "x") in a and ("n", "m") in a
+        canon.connected_components(edges, max_iter=3)
 
 
 def test_fuzzy_cc_diameter_bound(spark, pages):
-    """Measured justification for hash-min as the fuzzy-canonicalization
-    default: LSH blocking only links near-duplicate feature sets, so
+    """Measured justification for hash-min in fuzzy canonicalization:
+    LSH blocking only links near-duplicate feature sets, so
     candidate components have tiny diameters — hash-min converges in a
-    handful of rounds on the real corpus (the O(log n) two-phase variant
-    is the guarded scale path for unknown topologies)."""
+    handful of rounds on the real corpus."""
     quads = pages_to_quads(pages, CONTEXTS)
     feats = canon.node_features(quads)
     edges = canon.candidate_edges_minhash(feats, min_jaccard=0.5)
@@ -1052,21 +932,6 @@ def test_malformed_cached_context_fails_at_driver(spark, pages):
     assert exc.value.code == "invalid remote context"
 
 
-def test_lsh_dim_mismatch_fails_loudly(spark):
-    """A wrong embedding width must raise, not silently send every vector
-    to bucket 0 (which would degenerate the candidate join to all-pairs)."""
-    import pytest
-    from py4j.protocol import Py4JJavaError
-    from jsonld_streaming_parser_js_spark.operators.similarity import (
-        hyperplane_buckets)
-    emb = spark.createDataFrame(
-        [(0, [0.1] * 32), (1, [0.2] * 32)],
-        "vec_id long, embedding array<float>")
-    with pytest.raises(Exception) as exc:
-        hyperplane_buckets(emb, n_planes=4, dim=64).collect()
-    assert "dim" in str(exc.value)
-
-
 def test_lineage_schema_drift_raises_not_silently_first_run(spark, tmp_path):
     """Unreadable/incompatible lineage must raise, not disable the
     snapshot-mixing guard by classifying as 'first run'."""
@@ -1096,81 +961,6 @@ def test_ndjson_blocks_line_numbering_and_blanks(spark):
         [("u2", '{"a":1}\r\n\r\n{"b":2}\r\n')], "url string, body string")
     rows = {(r["blk"], r["block"]) for r in ndjson_blocks(crlf).collect()}
     assert rows == {(0, '{"a":1}'), (2, '{"b":2}')}
-
-
-def test_boilerplate_spans_flags_repeated_text(spark):
-    """Docs sharing a verbatim 60-char prefix (aligned at stride 15) are
-    flagged as boilerplate; unique docs are not."""
-    from jsonld_streaming_parser_js_spark.operators import textstats
-
-    shared = "x" * 60
-    rows = [(i, shared + f" unique tail {i} " + "y" * 40) for i in range(4)]
-    rows += [(10 + i, " ".join(f"w{i}x{j}" for j in range(20)))
-             for i in range(3)]  # genuinely unique bodies, no shared runs
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in
-           textstats.boilerplate_spans(docs, min_docs=3).collect()}
-    for i in range(4):
-        assert out[i]["n_boilerplate"] >= 2, out[i]  # shared prefix grams
-    for i in range(3):
-        assert out[10 + i]["n_boilerplate"] <= 1, out[10 + i]
-
-
-def test_ivf_topk_recall_and_consistency(spark):
-    """IVF results must agree with brute force on every returned pair
-    (same cos_sim for the same neighbor) and recall the exact top-5 at a
-    sane rate for 16 lists / nprobe 4 (probing 1/4 of the corpus)."""
-    from jsonld_streaming_parser_js_spark.operators import similarity
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qids = [0, 1, 2, 3, 4]
-    exact = {(r["query_id"], r["neighbor_id"]): r["cos_sim"]
-             for r in similarity.brute_force_topk(emb, qids, k=5).collect()}
-    ivf = similarity.ivf_topk(emb, qids, k=5).collect()
-    # consistency: any overlapping (query, neighbor) has identical cos_sim
-    for r in ivf:
-        key = (r["query_id"], r["neighbor_id"])
-        if key in exact:
-            assert exact[key] == r["cos_sim"], key
-    hits = sum(1 for r in ivf if (r["query_id"], r["neighbor_id"]) in exact)
-    assert hits >= len(exact) * 0.3, f"recall {hits}/{len(exact)}"
-
-
-def test_stratified_sample_rates_and_determinism(spark):
-    from jsonld_streaming_parser_js_spark.operators import textstats as ts
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    rates = {"en": 0.5, "de": 1.0, "zh": 0.0}
-    s = ts.stratified_sample(docs, rates, default_rate=0.2).cache()
-    per = {r["lang"]: r["n"] for r in
-           s.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    tot = {r["lang"]: r["n"] for r in
-           docs.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    assert per["de"] == tot["de"]          # rate 1.0 keeps everything
-    assert "zh" not in per                 # rate 0.0 drops everything
-    # md5 threshold tracks the target rate (binomial tolerance)
-    frac_en = per["en"] / tot["en"]
-    assert abs(frac_en - 0.5) < 0.2
-    # determinism across partitionings: same ids, any layout
-    a = {r["doc_id"] for r in s.collect()}
-    b = {r["doc_id"] for r in
-         ts.stratified_sample(docs.repartition(13, "lang"), rates,
-                              default_rate=0.2).collect()}
-    assert a == b
-    s.unpersist()
-
-
-def test_contamination_flags_ngram_rule(spark):
-    from jsonld_streaming_parser_js_spark.operators import textstats as ts
-    words = " ".join(f"w{i}" for i in range(20))
-    docs = spark.createDataFrame(
-        [(1, f"prefix {words} suffix"),       # contains the eval 20-gram
-         (2, "totally different content " * 10),
-         (3, "short doc")],                   # < 13 tokens: no grams
-        "doc_id long, text string")
-    ev = spark.createDataFrame([(99, words)], "doc_id long, text string")
-    got = {r["doc_id"]: r["contaminated"]
-           for r in ts.contamination_flags(docs, ev, n=13).collect()}
-    assert got == {1: True, 2: False, 3: False}
 
 
 def test_nquads_roundtrip_adversarial(spark):
@@ -1285,96 +1075,6 @@ def test_from_nquads_error_channel(spark):
             tabbed["graph"]) == ("<s>", "<p>", "<o>", "")
     commented = by_line['<s> <p> "a b"@en-US . # trailing']
     assert (commented["obj"], commented["graph"]) == ('"a b"@en-US', "")
-
-
-def test_repetition_signals_hand_derived(spark):
-    """Exact hand-derived values: 'the cat sat on' x3 = 44 chars,
-    top 2-gram 'the cat' (count 3, ties broken to the lexicographically
-    greatest gram) -> 21/44; all four distinct 5-grams occur twice ->
-    (2*18*3 + 2*17)/44. Short and empty docs emit zero rows nowhere —
-    the sentinel guarantees one row per document."""
-    from jsonld_streaming_parser_js_spark.operators.textstats import (
-        repetition_signals)
-    docs = spark.createDataFrame(
-        [(1, "the cat sat on the cat sat on the cat sat on"),
-         (2, "all distinct words here now"),
-         (3, "one"),
-         (4, "")],
-        "doc_id long, text string")
-    got = {r["doc_id"]: r.asDict() for r in
-           repetition_signals(docs).collect()}
-    assert got[1]["n_toks"] == 12
-    assert got[1]["top_2gram"] == "the cat"
-    assert got[1]["top_2gram_frac"] == round(21 / 44, 6)
-    assert got[1]["dup_5gram_ratio"] == round(142 / 44, 6)
-    assert got[2]["dup_5gram_ratio"] == 0.0
-    assert got[2]["top_2gram_frac"] > 0
-    assert got[3] == {"doc_id": 3, "n_toks": 1, "top_2gram": "",
-                      "top_2gram_frac": 0.0, "dup_5gram_ratio": 0.0}
-    assert got[4]["n_toks"] == 0 and len(got) == 4
-
-
-def test_contamination_broadcast_guard_flips_without_value_change(spark):
-    """The r7 ADVICE fix: the eval-gram broadcast hint is applied only
-    under a MEASURED count bound. Above the bound the join degrades to
-    a non-broadcast plan (no executor/driver OOM hazard); the flags are
-    value-identical in both regimes, and the auto guard (None) picks
-    broadcast for a genuinely tiny eval set."""
-    from jsonld_streaming_parser_js_spark.operators import textstats as ts
-    words = " ".join(f"w{i}" for i in range(20))
-    docs = spark.createDataFrame(
-        [(1, f"prefix {words} suffix"),
-         (2, "totally different content " * 10)],
-        "doc_id long, text string")
-    ev = spark.createDataFrame([(99, words)], "doc_id long, text string")
-
-    def flags(**kw):
-        return {r["doc_id"]: (r["n_hits"], r["contaminated"])
-                for r in ts.contamination_flags(docs, ev, n=13,
-                                                **kw).collect()}
-
-    assert flags(broadcast_eval=True) == flags(broadcast_eval=False) \
-        == flags(broadcast_eval=None) == {1: (8, True), 2: (0, False)}
-    # The guard really measures — witnessed at the PLAN level. With
-    # auto-broadcast disabled on BOTH paths (static + adaptive), the
-    # only possible source of a BroadcastHashJoin is the explicit hint
-    # the guard controls, so the join strategy itself must flip with
-    # the bound (a vacuous string check on 'ResolvedHint' — a
-    # logical-plan-only node that never appears in physical plans —
-    # passed even with the guard deleted; r7 review).
-    orig = ts.BROADCAST_EVAL_MAX_GRAMS
-    try:
-        with ts.hint_only_broadcasts(spark):
-
-            def join_plan(bound):
-                ts.BROADCAST_EVAL_MAX_GRAMS = bound
-                df = ts.contamination_flags(docs, ev, n=13,
-                                            broadcast_eval=None)
-                assert {r["doc_id"]: r["contaminated"]
-                        for r in df.collect()} == {1: True, 2: False}
-                return df._jdf.queryExecution().sparkPlan().toString()
-
-            assert "BroadcastHashJoin" in join_plan(orig)
-            assert "BroadcastHashJoin" not in join_plan(0)
-    finally:
-        ts.BROADCAST_EVAL_MAX_GRAMS = orig
-
-
-def test_pii_scan_signals(spark):
-    from jsonld_streaming_parser_js_spark.operators import textstats
-
-    docs = spark.createDataFrame(
-        [(1, "mail a.b+c@ex-ample.org and x@y.io"),
-         (2, "call +1 (555) 123-4567 at 10.0.0.1; ssn 123-45-6789"),
-         (3, "plain text with v1.2.3 and a@b (not an email)"),
-         (4, None)],  # NULL text must yield a DETERMINATE false flag
-        "doc_id long, text string")
-    out = {r["doc_id"]: r for r in textstats.pii_scan(docs).collect()}
-    assert out[4]["has_pii"] is False and out[4]["n_emails"] == 0
-    assert out[1]["n_emails"] == 2 and out[1]["has_pii"]
-    assert (out[2]["n_phones"], out[2]["n_ipv4"], out[2]["n_ssn_like"]) \
-        == (1, 1, 1)
-    assert not out[3]["has_pii"], dict(out[3].asDict())
 
 
 def test_pages_to_quads_dedup_is_kernel_local(spark):

@@ -1,14 +1,12 @@
-"""Structured Streaming + multimodal plumbing tests."""
+"""Structured Streaming plumbing tests."""
 
 from __future__ import annotations
 
 import shutil
 import tempfile
 
-import pytest
 from pyspark.sql import functions as F
 
-from jsonld_streaming_parser_js_spark.operators import multimodal as mm
 from jsonld_streaming_parser_js_spark.operators.parse import pages_to_quads
 from jsonld_streaming_parser_js_spark.sources.pages import (
     CONTEXTS, pages_from_documents)
@@ -178,454 +176,3 @@ def test_streaming_rates_update_mode_reemits_growing_windows(spark):
         pages.unpersist()
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
-
-
-def test_multimodal_features(spark):
-    media = mm.synth_media(spark, 48)
-    feats = mm.extract_features(media)
-    rows = feats.collect()
-    assert len(rows) == 48
-    assert all(len(r["feature"]) == 16 for r in rows)
-    # deterministic: same payload -> same feature
-    again = {r["media_id"]: r["feature"] for r in feats.collect()}
-    assert all(again[r["media_id"]] == r["feature"] for r in rows)
-    stats = mm.media_stats(media).collect()
-    assert {r["kind"] for r in stats} == {"image", "audio", "video"}
-
-
-def test_multimodal_unknown_kind_raises():
-    with pytest.raises(NotImplementedError):
-        mm._decode_stub(b"xx", "hologram")
-
-
-def test_stateful_running_site_totals(spark):
-    from jsonld_streaming_parser_js_spark.streaming import stateful
-    workdir = tempfile.mkdtemp(prefix="kg_state_")
-    try:
-        pages = pages_from_documents(spark, SF).cache()
-        b1 = pages.where(F.pmod(F.xxhash64("url"), F.lit(2)) == 0)
-        b2 = pages.where(F.pmod(F.xxhash64("url"), F.lit(2)) == 1)
-        b1.write.mode("append").parquet(f"{workdir}/pages")
-
-        def drain():
-            stream = strm.read_pages_stream(spark, f"{workdir}/pages")
-            parsed = strm.stream_pages_to_quads(stream, CONTEXTS)
-            totals = stateful.running_site_totals(parsed)
-            # parquet sink only supports append; update-mode stateful
-            # output goes through foreachBatch (the standard pattern)
-            def write_batch(df, _epoch):
-                df.write.mode("append").parquet(f"{workdir}/totals")
-
-            sink = (totals.writeStream
-                    .foreachBatch(write_batch)
-                    .option("checkpointLocation", f"{workdir}/ckpt")
-                    .outputMode("update")
-                    .trigger(availableNow=True).start())
-            sink.awaitTermination(120)
-
-        drain()
-        b2.write.mode("append").parquet(f"{workdir}/pages")
-        drain()  # state recovered from checkpoint, counts accumulate
-
-        latest = (spark.read.parquet(f"{workdir}/totals")
-                  .groupBy("site")
-                  .agg(F.max("pages_total").alias("pages_total"),
-                       F.max("quads_total").alias("quads_total")))
-        got = {r["site"]: (r["pages_total"], r["quads_total"])
-               for r in latest.collect()}
-        # 7 sites; totals must equal the batch ground truth per site
-        assert len(got) == 7
-        truth = (pages_to_quads(pages, CONTEXTS).groupBy(
-                     F.regexp_extract("url", r"^https?://([^/]+)/", 1)
-                     .alias("site"))
-                 .agg(F.countDistinct("url").alias("p"),
-                      F.count("*").alias("q")).collect())
-        for r in truth:
-            assert got[r["site"]][0] == r["p"]
-            assert got[r["site"]][1] == r["q"]
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-def test_sessionize_timeout_evicts_midstream_and_at_watermark_end(spark):
-    """EventTimeTimeout eviction fires in BOTH regimes: mid-stream (an
-    idle user's open session is evicted by a later batch's watermark
-    without that group receiving any data) and at stream end (the final
-    no-data micro-batch fires every pending timeout once the O(1)
-    advancer row pushes the watermark past last_event + gap). Batch ids
-    are captured per emission so each claim is asserted, not assumed."""
-    import os
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from jsonld_streaming_parser_js_spark.streaming import stateful
-    from jsonld_streaming_parser_js_spark.streaming.filesource import (
-        write_ordered_slices)
-
-    work = tempfile.mkdtemp(prefix="sess-timeout-")
-    try:
-        def mk(rows):
-            df = spark.createDataFrame(
-                rows, "user_id long, event_id long, epoch long, "
-                      "start_str string, value double")
-            return df.withColumn("wts", F.timestamp_seconds("epoch"))
-
-        # slice 0: user 1's whole session + user 2's first event
-        f0 = mk([(1, 1, 1000, "s1000", 1.0), (1, 2, 1060, "s1060", 1.0),
-                 (2, 3, 2000, "s2000", 1.0)])
-        # slice 1: user 2 returns after > gap (closes s2000 via gap logic)
-        f1 = mk([(2, 4, 10000, "s10000", 1.0)])
-        # slice 2: user 2 continues (gap 1000 <= 1800, same session).
-        # While this batch runs, the watermark (10000 from slice 1)
-        # exceeds user 1's timeout (1060 + 1801) -> mid-stream eviction.
-        f2 = mk([(2, 5, 11000, "s11000", 1.0)])
-        # advancer: ONE row, watermark -> 20000 > 11000 + 1801
-        adv = mk([(stateful._ADVANCER_USER, 0, 20000, "", 0.0)])
-        in_dir = os.path.join(work, "input")
-        write_ordered_slices([f0, f1, f2, adv], work, in_dir)
-
-        stream = (spark.readStream.schema(f0.schema)
-                  .option("maxFilesPerTrigger", 1).parquet(in_dir))
-        sessions = (stream.withWatermark("wts", "0 seconds")
-                    .groupBy("user_id").applyInPandasWithState(
-                        stateful._sess_update_timeout,
-                        stateful.SESSION_SCHEMA,
-                        stateful._SESS_STATE_SCHEMA,
-                        outputMode="update",
-                        timeoutConf=GroupStateTimeout.EventTimeTimeout))
-        got: list[tuple] = []
-
-        def cap(bdf, bid):
-            for r in bdf.collect():
-                got.append((int(bid), r.user_id, r.session_start,
-                            r.n_events, r.sum_value))
-
-        q = (sessions.writeStream.foreachBatch(cap)
-             .option("checkpointLocation", os.path.join(work, "ckpt"))
-             .trigger(availableNow=True).outputMode("update").start())
-        q.awaitTermination(180)
-
-        # exactly-once: len check catches double emission the set- and
-        # dict-based assertions below would silently dedup away
-        assert len(got) == 3
-        assert {t[1:] for t in got} == {
-            (1, "s1000", 2, 2.0), (2, "s2000", 1, 1.0),
-            (2, "s10000", 2, 2.0)}
-        emit_batch = {(u, s): b for (b, u, s, _n, _v) in got}
-        adv_batch = 3  # maxFilesPerTrigger=1: batches 0..3 are the files
-        # mid-stream: user 1 evicted while only user 2's data flowed
-        assert emit_batch[(1, "s1000")] < adv_batch
-        # gap-close still happens in the data path, not via timeout
-        assert emit_batch[(2, "s2000")] < adv_batch
-        # stream end: final open session evicted AFTER the advancer file,
-        # in the no-data micro-batch — no per-user sentinel anywhere
-        assert emit_batch[(2, "s10000")] > adv_batch
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-def test_session_window_gap_boundary_semantics(spark):
-    """Pins the native session_window merge rule the events_sessionize
-    lane depends on: Spark merges at whole-second diff == gap (inclusive
-    window end), so gap 1800 reproduces the oracle's 'new session iff
-    diff > 1800' exactly. A Spark upgrade flipping the boundary to
-    exclusive would fail here loudly instead of as a one-row lane-hash
-    mismatch (which is how the wrong 1801 s gap first surfaced)."""
-    df = (spark.createDataFrame(
-            [(1, "2024-01-01 00:00:00"), (1, "2024-01-01 00:30:00"),
-             (2, "2024-01-01 00:00:00"), (2, "2024-01-01 00:30:01")],
-            "user_id long, t string")
-          .select("user_id", F.to_timestamp("t").alias("tss")))
-    n = (df.groupBy("user_id",
-                    F.session_window("tss", "1800 seconds").alias("sw"))
-         .count().groupBy("user_id")
-         .agg(F.count("*").alias("n_sessions")))
-    got = {r.user_id: r.n_sessions for r in n.collect()}
-    assert got == {1: 1, 2: 2}  # diff 1800 merges, diff 1801 splits
-
-
-def test_streaming_native_session_window_matches_batch(spark):
-    """The fully JVM-native streaming sessionization: session_window +
-    watermark in APPEND mode — no Python state, no applyInPandasWithState;
-    the streaming engine merges sessions in the state store and emits
-    each exactly once when the watermark passes its close. One O(1)
-    advancer row flushes the tail (same pattern as flush='timeout').
-    Must equal the batch session_window aggregation on the same events."""
-    import os
-
-    from jsonld_streaming_parser_js_spark.streaming.filesource import (
-        write_ordered_slices)
-
-    work = tempfile.mkdtemp(prefix="sess-native-stream-")
-    try:
-        ev = (spark.read.parquet(f"{SF}/events.parquet")
-              .select("user_id", F.date_trunc("second", "ts").alias("tss"),
-                      "value"))
-        bounds = ev.agg(F.min("tss").cast("long"),
-                        F.max("tss").cast("long")).first()
-        lo_s, hi_s = int(bounds[0]), int(bounds[1])
-        step = max((hi_s - lo_s) // 4 + 1, 1)
-        epoch = F.col("tss").cast("long")
-        adv = spark.range(1).select(
-            F.lit(-1).cast("long").alias("user_id"),
-            F.timestamp_seconds(F.lit(hi_s + 1802)).alias("tss"),
-            F.lit(0.0).alias("value"))
-        write_ordered_slices(
-            [ev.where((epoch >= lo_s + i * step)
-                      & (epoch < lo_s + (i + 1) * step)) for i in range(4)]
-            + [adv],
-            work, os.path.join(work, "input"))
-
-        stream = (spark.readStream.schema(ev.schema)
-                  .option("maxFilesPerTrigger", 1)
-                  .parquet(os.path.join(work, "input")))
-        agg = (stream.withWatermark("tss", "0 seconds")
-               .groupBy("user_id",
-                        F.session_window("tss", "1800 seconds").alias("sw"))
-               .agg(F.count("*").alias("n_events"),
-                    F.round(F.sum("value"), 2).alias("sum_value"))
-               .select("user_id", F.col("sw.start").alias("start"),
-                       "n_events", "sum_value"))
-        out_dir = os.path.join(work, "out")
-        q = (agg.writeStream.format("parquet")
-             .option("path", out_dir)
-             .option("checkpointLocation", os.path.join(work, "ckpt"))
-             .trigger(availableNow=True).outputMode("append").start())
-        q.awaitTermination(300)
-
-        got = sorted(map(tuple,
-                         spark.read.parquet(out_dir)
-                         .where("user_id >= 0").collect()))
-        want = sorted(map(tuple,
-                          ev.groupBy("user_id",
-                                     F.session_window("tss", "1800 seconds")
-                                     .alias("sw"))
-                          .agg(F.count("*").alias("n_events"),
-                               F.round(F.sum("value"), 2).alias("sum_value"))
-                          .select("user_id",
-                                  F.col("sw.start").alias("start"),
-                                  "n_events", "sum_value").collect()))
-        assert len(got) > 0
-        assert got == want
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-def test_sessionize_guards_fail_loudly(spark):
-    """The two marker-collision guards and the flush validator raise
-    instead of silently corrupting sessions: a real event_id equal to
-    the sentinel marker would close a session mid-stream and drop the
-    row's value; a real user_id equal to the advancer pseudo-user
-    would have its sessions filtered from the result."""
-    import os
-
-    from jsonld_streaming_parser_js_spark.streaming import stateful
-
-    work = tempfile.mkdtemp(prefix="sess-guards-")
-    try:
-        def write_events(rows, name):
-            path = os.path.join(work, name)
-            (spark.createDataFrame(
-                rows, "user_id long, event_id long, ts timestamp_ntz, "
-                      "value double")
-             .write.mode("overwrite").parquet(path))
-            return path
-
-        import datetime as dt
-        t = dt.datetime(2024, 1, 1)
-        clean = write_events([(1, 5, t, 1.0)], "clean")
-        with pytest.raises(ValueError, match="unknown flush"):
-            stateful.streaming_sessionize(spark, clean, work,
-                                          flush="bogus")
-        sentinel_clash = write_events(
-            [(1, stateful._SENTINEL_EVENT, t, 1.0)], "sclash")
-        with pytest.raises(ValueError, match="sentinel"):
-            stateful.streaming_sessionize(
-                spark, sentinel_clash, os.path.join(work, "w1"),
-                flush="sentinel")
-        advancer_clash = write_events(
-            [(stateful._ADVANCER_USER, 5, t, 1.0)], "aclash")
-        with pytest.raises(ValueError, match="advancer"):
-            stateful.streaming_sessionize(
-                spark, advancer_clash, os.path.join(work, "w2"),
-                flush="timeout")
-        # and the colliding values are FINE in the mode they don't
-        # collide with (the guards are mode-scoped, not blanket)
-        out = stateful.streaming_sessionize(
-            spark, sentinel_clash, os.path.join(work, "w3"),
-            flush="timeout")
-        assert out.count() == 1
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-def test_sessionize_flush_modes_agree_on_fixture(spark):
-    """flush='timeout' (EventTimeTimeout eviction) and flush='sentinel'
-    produce the identical session table on the events fixture."""
-    from jsonld_streaming_parser_js_spark.streaming.stateful import (
-        streaming_sessionize)
-
-    outs = {}
-    for mode in ("sentinel", "timeout"):
-        work = tempfile.mkdtemp(prefix=f"sess-{mode}-")
-        try:
-            out = streaming_sessionize(
-                spark, f"{SF}/events.parquet", work, flush=mode)
-            outs[mode] = sorted(map(tuple, out.collect()))
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
-    assert len(outs["sentinel"]) > 0
-    assert outs["sentinel"] == outs["timeout"]
-
-
-# --- real codecs: WAV (RIFF/PCM) + PPM (P6) ----------------------------------
-
-def test_wav_roundtrip_exact_stats():
-    import numpy as np
-    from jsonld_streaming_parser_js_spark.operators import multimodal as mm
-    for mid in (0, 1, 7, 123, 4999):
-        d = mm.decode_wav(mm.synth_wav(mid))
-        n = 800 + (mid % 5) * 160
-        s = (mid * 31 + np.arange(n) * 7) % 65536 - 32768
-        assert d == {"n_samples": n, "sample_rate": 16000,
-                     "duration_ms": n * 1000 // 16000,
-                     "peak": int(s.max()),
-                     "sum_abs": int(np.abs(s).sum())}
-
-
-def test_wav_rejects_non_pcm():
-    import pytest as _pytest
-    from jsonld_streaming_parser_js_spark.operators import multimodal as mm
-    with _pytest.raises(Exception):  # truncated/garbage header
-        mm.decode_wav(b"RIFFxxxxWAVE")
-
-
-def test_ppm_roundtrip_exact_sums():
-    import numpy as np
-    from jsonld_streaming_parser_js_spark.operators import multimodal as mm
-    for mid in (0, 3, 6, 11, 4998):
-        e = mm.decode_ppm(mm.synth_ppm(mid))
-        w, h = 8 + (mid % 4) * 4, 6 + (mid % 3) * 2
-        x = np.arange(w)[None, :]
-        y = np.arange(h)[:, None]
-        assert e == {
-            "width": w, "height": h,
-            "sum_r": int(np.broadcast_to((mid + x) % 256, (h, w)).sum()),
-            "sum_g": int(((x * y) % 256 * np.ones((h, 1), int)).sum()),
-            "sum_b": int(np.broadcast_to((mid * 3 + y) % 256,
-                                         (h, w)).sum())}
-
-
-def test_ppm_header_comments_and_whitespace():
-    from jsonld_streaming_parser_js_spark.operators import multimodal as mm
-    payload = b"P6 # c1\n# full comment line\n 4\n2 # c2\n255\n" \
-        + bytes(range(24))
-    got = mm.decode_ppm(payload)
-    assert (got["width"], got["height"]) == (4, 2)
-
-
-def test_ppm_rejects_other_magics():
-    import pytest as _pytest
-    from jsonld_streaming_parser_js_spark.operators import multimodal as mm
-    with _pytest.raises(NotImplementedError):
-        mm.decode_ppm(b"P3\n1 1\n255\n0 0 0")
-
-
-def test_wav_stats_operator_distributed(spark):
-    from jsonld_streaming_parser_js_spark.operators import multimodal as mm
-    ids = spark.range(12).select(F.col("id").alias("media_id"))
-    rows = {r["media_id"]: r for r in
-            mm.wav_stats_from_ids(ids).collect()}
-    assert len(rows) == 12
-    d = mm.decode_wav(mm.synth_wav(5))
-    got = rows[5]
-    assert (got["n_samples"], got["peak"], got["sum_abs"]) == (
-        d["n_samples"], d["peak"], d["sum_abs"])
-
-
-def test_ppm_stats_operator_distributed(spark):
-    from jsonld_streaming_parser_js_spark.operators import multimodal as mm
-    ids = spark.range(9).select(F.col("id").alias("media_id"))
-    rows = {r["media_id"]: r for r in
-            mm.ppm_stats_from_ids(ids).collect()}
-    e = mm.decode_ppm(mm.synth_ppm(4))
-    got = rows[4]
-    assert (got["width"], got["height"], got["sum_g"]) == (
-        e["width"], e["height"], e["sum_g"])
-
-
-def test_png_roundtrip_matches_ppm_closed_forms():
-    from jsonld_streaming_parser_js_spark.operators import multimodal as mm
-    for mid in (0, 3, 6, 9, 4998):
-        assert mm.decode_png(mm.synth_png(mid)) == \
-            mm.decode_ppm(mm.synth_ppm(mid))
-
-
-def test_png_crc_and_format_gates():
-    import pytest as _pytest
-    from jsonld_streaming_parser_js_spark.operators import multimodal as mm
-    bad = bytearray(mm.synth_png(3))
-    bad[30] ^= 0xFF
-    with _pytest.raises(ValueError):
-        mm.decode_png(bytes(bad))
-    with _pytest.raises(NotImplementedError):
-        mm.decode_png(b"GIF89a...")
-
-
-def test_png_every_filter_type_exercised():
-    # synth uses filter y%5 — an 12-row image hits all five filter types
-    from jsonld_streaming_parser_js_spark.operators import multimodal as mm
-    mid = 5  # h = 6 + (5%3)*2 = 10 rows -> filters 0..4 twice
-    png = mm.synth_png(mid)
-    import zlib, struct
-    pos, idat = 8, bytearray()
-    while pos < len(png):
-        (ln,) = struct.unpack(">I", png[pos:pos + 4])
-        tag = png[pos + 4:pos + 8]
-        if tag == b"IDAT":
-            idat.extend(png[pos + 8:pos + 8 + ln])
-        pos += 12 + ln
-    raw = zlib.decompress(bytes(idat))
-    w = 8 + (mid % 4) * 4
-    stride = w * 3 + 1
-    ftypes = {raw[i * stride] for i in range(len(raw) // stride)}
-    assert ftypes == {0, 1, 2, 3, 4}
-
-
-def test_png_stats_operator_distributed(spark):
-    from jsonld_streaming_parser_js_spark.operators import multimodal as mm
-    ids = spark.range(9).select(F.col("id").alias("media_id"))
-    rows = {r["media_id"]: r for r in
-            mm.png_stats_from_ids(ids).collect()}
-    e = mm.decode_png(mm.synth_png(4))
-    got = rows[4]
-    assert (got["width"], got["height"], got["sum_g"]) == (
-        e["width"], e["height"], e["sum_g"])
-
-
-def test_decode_wav_stereo_integer_downmix():
-    """Multichannel downmix is floor-divided integer averaging (exact-
-    integer stats contract): (-3,-2) -> -3, (3,2) -> 2 — pinned here
-    because the synthetic corpus is mono-only."""
-    import io
-    import wave
-
-    import numpy as np
-
-    from jsonld_streaming_parser_js_spark.operators.multimodal import (
-        decode_wav)
-
-    frames = np.array([[-3, -2], [3, 2], [100, 200], [-100, -201]],
-                      dtype="<i2")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(2)
-        w.setsampwidth(2)
-        w.setframerate(8000)
-        w.writeframes(frames.tobytes())
-    got = decode_wav(buf.getvalue())
-    # floor division: -5//2=-3, 5//2=2, 300//2=150, -301//2=-151
-    assert got["n_samples"] == 4
-    assert got["peak"] == 150
-    assert got["sum_abs"] == 3 + 2 + 150 + 151
-    assert got["sample_rate"] == 8000

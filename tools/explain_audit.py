@@ -3,12 +3,10 @@
 Writes EXPLAIN.md with the evidence and exits non-zero if any invariant
 regresses (a plan-shape unit test, runnable in CI):
 
-- parse pipeline: pages scan reads ONLY (url, html); exactly one Exchange
-  (the final dedup) — extract+parse is a narrow fused stage
-- dimension joins: BroadcastHashJoin, never SortMergeJoin
-- similarity: query side broadcast (BroadcastNestedLoopJoin), no
-  CartesianProduct
-- column pruning: text ops read only (doc_id, text)
+- parse pipeline: pages scan pruned; zero quad shuffles (dedup is
+  kernel-local) — extract+parse is a narrow fused stage
+- graph views, canonicalization, memo, N-Quads round-trip, wave diff,
+  RDFS entailment and BGP: the join/shuffle shapes each relies on
 """
 
 from __future__ import annotations
@@ -69,56 +67,6 @@ def main() -> None:
           f"total Exchange x{p.count('Exchange')} "
           "(any surplus is the round-robin input floor)")
 
-    p = plan_of(e._q_kg_author_labels(spark, sf))
-    check("author join: broadcast not SMJ",
-          "BroadcastHashJoin" in p and "SortMergeJoin" not in p,
-          f"BHJ x{p.count('BroadcastHashJoin')}, "
-          f"SMJ x{p.count('SortMergeJoin')}")
-
-    p = plan_of(e._q_tpch_q3(spark, sf))
-    check("tpch_q3: all joins broadcast",
-          p.count("BroadcastHashJoin") == 2 and "SortMergeJoin" not in p,
-          f"BHJ x{p.count('BroadcastHashJoin')}")
-
-    p = plan_of(e._q_tpch_q5(spark, sf))
-    check("tpch_q5: 5-dim broadcast chain, fact never shuffled for joins",
-          p.count("BroadcastHashJoin") == 5 and "SortMergeJoin" not in p,
-          f"BHJ x{p.count('BroadcastHashJoin')}, SMJ x0")
-
-    p = plan_of(e._q_text_quality(spark, sf))
-    scan = next((ln for ln in p.splitlines() if "FileScan" in ln), "")
-    check("text_quality: column pruning (doc_id,text only)",
-          "doc_id" in scan and "lang" not in scan and "source" not in scan,
-          scan.strip()[:160])
-
-    p = plan_of(e._q_sim_topk_cosine(spark, sf))
-    check("sim_topk: broadcast queries, no cartesian",
-          "BroadcastNestedLoopJoin" in p and "CartesianProduct" not in p,
-          f"BNLJ x{p.count('BroadcastNestedLoopJoin')}")
-
-    p = plan_of(e._q_sim_ivf_topk(spark, sf))
-    check("ivf topk: map-side quantizer (no cross join), equi-join lists",
-          "CartesianProduct" not in p
-          and "BroadcastNestedLoopJoin" not in p
-          and ("BroadcastHashJoin" in p or "SortMergeJoin" in p
-               or "ShuffledHashJoin" in p),
-          f"BNLJ x{p.count('BroadcastNestedLoopJoin')}, "
-          f"BHJ x{p.count('BroadcastHashJoin')}, "
-          f"cartesian x{p.count('CartesianProduct')} "
-          f"(centroids inlined as literals: zero joins in assignment)")
-
-    p = plan_of(e._q_dedup_embedding_lsh(spark, sf))
-    check("embedding lsh: bucket equi-joins, never all-pairs",
-          "CartesianProduct" not in p
-          and "BroadcastNestedLoopJoin" not in p,
-          f"BHJ x{p.count('BroadcastHashJoin')}, "
-          f"SMJ x{p.count('SortMergeJoin')}, cartesian x0")
-
-    p = plan_of(e._q_kg_quads_by_predicate(spark, sf))
-    check("pred counts: partial+final aggregation",
-          p.count("HashAggregate") >= 2,
-          f"HashAggregate x{p.count('HashAggregate')}")
-
     # graph nodes view: both degree counts from ONE shuffle over the term
     # universe (explode + single groupBy; was distinct + 2 groupBys +
     # 2 joins = 3 term Exchanges), and a single lineage (no union that
@@ -161,121 +109,6 @@ def main() -> None:
           f"ExistingRDD scan={'Scan ExistingRDD' in p}, "
           f"joins in final plan x{p.count('Join')}")
 
-    # cleaning chain: quality -> exact-dedup -> near-dup -> PII must NOT
-    # re-read the corpus per stage. With a direct parquet input, every
-    # FileScan in the final plan must sit beneath an InMemoryRelation
-    # (i.e. it only describes the one-time cache materialization); all
-    # stage consumers read InMemoryTableScan. Ancestor check via the
-    # plan-tree indentation stack walk.
-    from jsonld_streaming_parser_js_spark.operators.cleaning import (
-        clean_corpus)
-    p = plan_of(clean_corpus(
-        spark.read.parquet(f"{sf}/documents.parquet")))
-    lines = p.splitlines()
-
-    def _indent(ln: str) -> int:
-        return len(ln) - len(ln.lstrip(" +:-*("))
-
-    uncached_scans = 0
-    for i, line in enumerate(lines):
-        if "FileScan" not in line:
-            continue
-        ind, covered = _indent(line), False
-        for j in range(i - 1, -1, -1):
-            if lines[j].strip() and _indent(lines[j]) < ind:
-                if "InMemoryRelation" in lines[j]:
-                    covered = True
-                    break
-                ind = _indent(lines[j])
-        if not covered:
-            uncached_scans += 1
-    check("cleaning chain: one corpus scan (stages read the cache)",
-          uncached_scans == 0 and p.count("InMemoryTableScan") >= 2,
-          f"FileScans outside InMemoryRelation x{uncached_scans}, "
-          f"InMemoryTableScan x{p.count('InMemoryTableScan')}")
-
-    # skew handling (north-star: salted repartitioning + AQE skew-join
-    # splitting): (a) the salted join really shuffles on (pred, __salt);
-    # (b) AQE splits the hot partition of a plain skewed SMJ at runtime.
-    from jsonld_streaming_parser_js_spark.operators import skew
-    fact = skew.skewed_pred_corpus(
-        spark.read.parquet(f"{sf}/documents.parquet"))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
-        p = plan_of(skew.salted_join(fact, skew.pred_dim(fact), "pred",
-                                     n_salts=8))
-        ex = [ln.strip() for ln in p.splitlines()
-              if "Exchange hashpartitioning" in ln]
-        check("skew: salted join shuffles on (pred, __salt)",
-              any("pred" in ln and skew.SALT_COL in ln for ln in ex),
-              (next((ln for ln in ex if skew.SALT_COL in ln), "none"))[:160])
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    # runtime Bloom-filter pruning: a selective dim predicate reaches
-    # the fact scan as might_contain before the shuffle materializes
-    import tempfile as _tf
-    import shutil as _sh
-    _bw = _tf.mkdtemp(prefix="audit_bloom_")
-    bj, bcfg = skew.bloom_join_demo(spark, _bw)
-    for k, v in bcfg.items():
-        spark.conf.set(k, v)
-    try:
-        bj.collect()
-        p = plan_of(bj)
-        check("bloom runtime filter: selective dim prunes fact scan",
-              "might_contain" in p and "bloom_filter_agg" in p,
-              next((ln.strip()[:160] for ln in p.splitlines()
-                    if "might_contain" in ln), "no might_contain"))
-    finally:
-        for k in bcfg:
-            spark.conf.unset(k)
-        _sh.rmtree(_bw, ignore_errors=True)
-
-    joined, configs = skew.aqe_skew_demo(spark)
-    for k, v in configs.items():
-        spark.conf.set(k, v)
-    try:
-        joined.collect()
-        p = plan_of(joined)
-        check("skew: AQE splits the hot partition (skew=true in final SMJ)",
-              "skew=true" in p,
-              next((ln.strip() for ln in p.splitlines()
-                    if "skew=true" in ln), "no skew marker")[:160])
-    finally:
-        for k in configs:
-            spark.conf.unset(k)
-
-    # bucketed-table co-located join: both sides bucketBy(subj) -> the
-    # SMJ reads bucket i of each side directly, zero Exchange (the
-    # pay-the-shuffle-once-at-write-time layout for entity joins)
-    from pyspark.sql import functions as F
-    from jsonld_streaming_parser_js_spark.plans import lineage as lin
-    # cache: both table writes read q — without it the extract+parse
-    # stage (the heaviest in the repo) would run twice
-    q = pages_to_quads(pages_from_documents(spark, sf), CONTEXTS).cache()
-    deg = q.groupBy("subj").agg(F.count("*").alias("degree"))
-    lin.write_bucketed_table(q, "audit_bt_quads", buckets=8)
-    lin.write_bucketed_table(deg, "audit_bt_deg", buckets=8)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = (spark.table("audit_bt_quads")
-             .join(spark.table("audit_bt_deg"), "subj"))
-        p = plan_of(j)
-        check("bucketed tables: co-located join, zero Exchange",
-              "Exchange" not in p and p.count("Bucketed: true") == 2
-              and "SortMergeJoin" in p,
-              f"Exchange x{p.count('Exchange')}, bucketed scans "
-              f"x{p.count('Bucketed: true')}, SMJ x"
-              f"{p.count('SortMergeJoin')}")
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS audit_bt_quads")
-        spark.sql("DROP TABLE IF EXISTS audit_bt_deg")
-
     # canonical relabel: the mapping join carries NO forced broadcast hint
     # (unbounded at web scale -> OOM risk); the small-mapping case must
     # still broadcast, chosen by AQE at runtime. Execute to finalize AQE.
@@ -308,65 +141,6 @@ def main() -> None:
           f"SMJ x{p.count('SortMergeJoin')}, cartesian x0 "
           "(hit join + fallback semi-join, both on md5(block))")
 
-    # stratified sample: a pure narrow filter — zero Exchange
-    from jsonld_streaming_parser_js_spark.operators import textstats
-    p = plan_of(textstats.stratified_sample(
-        spark.read.parquet(f"{sf}/documents.parquet"),
-        {"en": 0.5}, 0.1))
-    check("stratified sample: narrow filter, zero Exchange",
-          "Exchange" not in p,
-          f"Exchange x{p.count('Exchange')} (md5-threshold filter "
-          "evaluated at the scan, no shuffle)")
-
-    # decontamination: the EVAL-GRAM join (keyed on g) must broadcast —
-    # the check is keyed to the gram column so it stays valid at scale
-    # factors where the per-doc hits join-back legitimately degrades to
-    # a shuffle join (that side grows with the corpus; the eval side
-    # doesn't)
-    p = plan_of(e._q_text_decontaminate(spark, sf))
-    smj_gram = [ln.strip() for ln in p.splitlines()
-                if "SortMergeJoin" in ln and "g#" in ln]
-    check("decontamination: eval-gram join broadcasts, never all-pairs",
-          "BroadcastHashJoin" in p and not smj_gram
-          and "CartesianProduct" not in p
-          and "BroadcastNestedLoopJoin" not in p,
-          f"BHJ x{p.count('BroadcastHashJoin')}, gram-keyed SMJ "
-          f"x{len(smj_gram)}, cartesian "
-          f"x{p.count('CartesianProduct')}, BNLJ "
-          f"x{p.count('BroadcastNestedLoopJoin')}")
-
-    df = e._q_dedup_embedding_lsh_recall(spark, sf)
-    # the recall audit's exact side is all-pairs BY DESIGN, but only on the
-    # deterministic md5 1/4 sample. Assert STRUCTURALLY that every
-    # BroadcastNestedLoopJoin (the all-pairs op) has the pmod(..md5..)
-    # sample Filter somewhere in its indented subtree — i.e. the quadratic
-    # join never sees the unsampled table. Uses the JVM plan tree string,
-    # where children are printed indented under their parent.
-    tree = df._jdf.queryExecution().executedPlan().toString()
-    lines = tree.splitlines()
-    ok = True
-    n_bnlj = 0
-    for i, line in enumerate(lines):
-        if "BroadcastNestedLoopJoin" not in line:
-            continue
-        n_bnlj += 1
-        indent = len(line) - len(line.lstrip(" +:-*("))
-        subtree = []
-        for nxt in lines[i + 1:]:
-            if nxt.strip() and (len(nxt) - len(nxt.lstrip(" +:-*("))
-                                <= indent):
-                break
-            subtree.append(nxt)
-        sub = "\n".join(subtree)
-        if not ("pmod" in sub and "md5" in sub):
-            # the 1-row x 1-row crossJoin of the two aggregates also shows
-            # as a BNLJ; its subtree CONTAINS the sampled joins, so the
-            # pmod check holds there too — any miss is a real violation
-            ok = False
-    check("recall audit: every all-pairs join sits above the md5 sample",
-          n_bnlj >= 1 and ok,
-          f"BNLJ x{n_bnlj}, each with pmod(md5) filter in subtree={ok}")
-
     # N-Quads round-trip: serialize + re-parse are narrow maps — the
     # composed plan must add ZERO Exchanges over the bare quad pipeline
     # (the regexp split never shuffles; ingestion of a 100 TB dump is a
@@ -380,21 +154,6 @@ def main() -> None:
           p_rt.count("Exchange") == p_base.count("Exchange"),
           f"Exchange x{p_rt.count('Exchange')} vs base "
           f"x{p_base.count('Exchange')}")
-
-    # repetition signals: the sentinel-row design means ONE corpus scan
-    # and NO join anywhere — per-doc stats ride the aggregation instead
-    # of a second scan + join-back
-    from jsonld_streaming_parser_js_spark.operators.textstats import (
-        repetition_signals)
-    p = plan_of(repetition_signals(
-        spark.read.parquet(f"{sf}/documents.parquet")
-        .select("doc_id", "text")))
-    check("repetition: one corpus scan, no join, two uniform shuffles",
-          p.count("FileScan") == 1 and "Join" not in p
-          and _shuffles(p) == 2,
-          f"FileScan x{p.count('FileScan')}, joins "
-          f"x{p.count('Join')}, hash/range Exchange x{_shuffles(p)} "
-          "(+ round-robin input floor)")
 
     # wave_diff change feed: O(wave) by plan — (a) the cut expression
     # (the SHIPPED _wave_url_cut, pre-checkpoint) restricts base to the
@@ -420,35 +179,6 @@ def main() -> None:
           f"cut LeftSemi x{p_cut.count('LeftSemi')}, final ExistingRDD="
           f"{'ExistingRDD' in p}, cartesian x{p.count('Cartesian')}, "
           f"BNLJ x{p.count('BroadcastNestedLoopJoin')}")
-
-    # native session_window half of events_sessionize (the SHIPPED
-    # query, via the factored helper): session assignment happens INSIDE
-    # the aggregate (partial agg -> Exchange -> MergingSessions), no
-    # lag/running-sum pass over events. The session agg shuffles on
-    # user_id ALONE (all of a user's events must colocate to merge), so
-    # the seq-assignment Window's required distribution is already
-    # satisfied and the WHOLE query runs on ONE Exchange — one shuffle
-    # end-to-end vs the lag twin's sort-window passes
-    ev = spark.read.parquet(f"{sf}/events.parquet")
-    p = plan_of(e._sessionize_native(ev))
-    check("sessionize native: MergingSessions agg, ONE Exchange end-to-end",
-          "MergingSessions" in p and p.count("Exchange") == 1
-          and p.count("Window") == 1 and "lag(" not in p,
-          f"MergingSessions x{p.count('MergingSessions')}, Exchange "
-          f"x{p.count('Exchange')}, Window x{p.count('Window')}, "
-          f"lag x{p.count('lag(')}")
-
-    # lag half of events_sessionize: also ONE Exchange — the window
-    # shuffles on user_id and the groupBy's (user_id, session_seq)
-    # clustering is satisfied by that partitioning (subset rule), so the
-    # per-session aggregate reuses it. This is the invariant the
-    # BENCH.md method-A/B narrative ('both are one-shuffle plans')
-    # rests on for the lag side
-    p = plan_of(e._sessionize_lag(ev))
-    check("sessionize lag: window + aggregate share ONE Exchange",
-          p.count("Exchange") == 1 and "MergingSessions" not in p,
-          f"Exchange x{p.count('Exchange')}, Window "
-          f"x{p.count('Window')}")
 
     # RDFS entailment: every rule joins the corpus against the tiny
     # CLOSED ontology — joins must ALL be broadcast (the corpus side is

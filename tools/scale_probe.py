@@ -9,15 +9,12 @@ amplified input sizes, recording wall time, total shuffle write bytes
     replicating documents with disjoint doc_id ranges (every replica is
     a NEW 3-node A-B-C chain — entity count scales linearly, exactly how
     a bigger crawl behaves). amplify=100 at sf0.1 is 1.5M entities /
-    18M feature rows (the lane's own 100x point; the pages-corpus
-    "~40M quads" scale is covered by the memo leg below — at 1000x the
-    FEATURE table would be 180M rows, past this box's one-probe budget).
-  - ``memo`` leg: bench.memo_leg at amplify=1000 -> 5M block
-    occurrences / 5k distinct (~40M quads through the plain side).
+    18M feature rows.
+  - ``pagerank``, ``rdfs``, ``bgp`` legs: the real KG at amplified
+    instance counts.
 
-Usage: python tools/scale_probe.py [--fuzzy 1,30,100] [--memo 1000]
-       [--decon 40,500] [--pagerank 1,10,50] [--ccchain 100000]
-       [--hll 5000000] [--rdfs 1,10,50] [--bgp 1,10,50]
+Usage: python tools/scale_probe.py [--fuzzy 1,30,100] [--pagerank 1,10,50]
+       [--rdfs 1,10,50] [--bgp 1,10,50]
 Every leg is opt-in (no defaults run), so a single-leg invocation
 reproduces exactly the one BENCH.md table it names. Prints one JSON
 line; BENCH.md quotes it.
@@ -110,53 +107,6 @@ def fuzzy_leg(spark, amplify: int) -> dict:
             "n_entities": 3 * n_docs * amplify,
             "n_mapped": n_mapped,
             "cc_iterations": cc_stats.get("iterations"),
-            "wall_sec": round(wall, 1),
-            "shuffle_write_bytes": _delta(sw0, sw1)}
-
-
-def decon_leg(spark, eval_amplify: int) -> dict:
-    """Decontamination at a GROWN eval set (r7 ADVICE follow-up): the
-    broadcast guard in contamination_flags exists for the eval set that
-    did not stay tiny; this leg measures both sides of the bound.
-    Replica r token-renames the eval text (every token gets a 'q<r>'
-    suffix, one JVM regexp pass) so the DISTINCT gram count grows
-    linearly — the worst case for the broadcast (no overlap collapses
-    it). Records which join strategy the guard picked (from the
-    physical plan: the only possible BroadcastHashJoin source here is
-    the guarded hint when auto-broadcast is off), wall, and shuffle
-    delta — evidence that past the bound the operator degrades to a
-    bounded shuffle join instead of an executor/driver OOM."""
-    from pyspark.sql import functions as F
-
-    from jsonld_streaming_parser_js_spark.operators import textstats as ts
-    docs = (spark.read.parquet(f"{SF_DIR}/documents.parquet")
-            .select("doc_id", "text"))
-    base = docs.where(F.pmod("doc_id", F.lit(41)) == 0)
-    ev = (base.withColumn("rep", F.explode(
-              F.sequence(F.lit(0), F.lit(eval_amplify - 1))))
-          .select((F.col("doc_id") * eval_amplify + F.col("rep"))
-                  .alias("doc_id"),
-                  F.when(F.col("rep") == 0, F.col("text"))
-                  .otherwise(F.regexp_replace(
-                      "text", F.lit("([a-z0-9]+)"),
-                      F.concat(F.lit("$1q"), F.col("rep"))))
-                  .alias("text")))
-    n_eval_grams = (ts._token_ngrams(ev, 13).select("g").distinct()
-                    .count())
-    sw0 = _shuffle_write_bytes(spark)
-    t0 = time.time()
-    with ts.hint_only_broadcasts(spark):
-        flags = ts.contamination_flags(docs, ev, n=13,
-                                       broadcast_eval=None)
-        n_contaminated = flags.where("contaminated").count()
-        plan = flags._jdf.queryExecution().sparkPlan().toString()
-    wall = time.time() - t0
-    sw1 = _shuffle_write_bytes(spark)
-    return {"eval_amplify": eval_amplify,
-            "n_eval_grams": n_eval_grams,
-            "guard_bound": ts.BROADCAST_EVAL_MAX_GRAMS,
-            "broadcast_chosen": "BroadcastHashJoin" in plan,
-            "n_contaminated": n_contaminated,
             "wall_sec": round(wall, 1),
             "shuffle_write_bytes": _delta(sw0, sw1)}
 
@@ -298,120 +248,31 @@ def bgp_leg(spark, amplify: int, base) -> dict:
             "shuffle_write_bytes": _delta(sw0, sw1)}
 
 
-def cc_chain_leg(spark, n_chain: int) -> dict:
-    """Two-phase CC at pathological diameter (BENCH.md "diameter
-    100,000" table): ONE n_chain-node chain (diameter = n_chain) plus
-    10k disjoint 10-node chains. hash-min needs ~n_chain rounds here;
-    large-star/small-star must stay O(log n). Component structure is
-    exact-checked (count + the long chain's tail maps to its min)."""
-    from pyspark.sql import functions as F
-
-    from jsonld_streaming_parser_js_spark.operators.canonicalize import (
-        connected_components_two_phase)
-
-    if n_chain < 2:
-        raise ValueError("--ccchain needs >= 2 (the long chain must "
-                         "contribute at least one edge)")
-
-    def chain(n, offset):
-        return (spark.range(n - 1).select(
-            F.format_string("n%012d", F.col("id") + offset).alias("src"),
-            F.format_string("n%012d",
-                            F.col("id") + offset + 1).alias("dst")))
-    small = (spark.range(10_000)
-             .select(F.explode(F.sequence(F.lit(0), F.lit(8)))
-                     .alias("i"),
-                     (F.col("id") * 10 + 2 * n_chain).alias("b"))
-             .select(F.format_string("n%012d",
-                                     F.col("b") + F.col("i")).alias("src"),
-                     F.format_string("n%012d", F.col("b") + F.col("i") + 1)
-                     .alias("dst")))
-    edges = chain(n_chain, 0).union(small).localCheckpoint()
-    n_edges = edges.count()
-    stats: dict = {}
-    t0 = time.time()
-    cc = connected_components_two_phase(edges, max_iter=60, stats=stats)
-    n_comp = cc.select("component").distinct().count()
-    wall = time.time() - t0
-    tail = cc.where(F.col("node") == F.format_string(
-        "n%012d", F.lit(n_chain - 1))).first()
-    return {"n_chain": n_chain, "n_edges": n_edges,
-            "rounds": stats.get("iterations"),
-            "components": n_comp,
-            "components_ok": n_comp == 10_001,
-            "tail_maps_to_min": tail["component"] == "n%012d" % 0,
-            "wall_sec": round(wall, 1)}
-
-
-def hll_leg(spark, n_distinct: int, dup: int = 3) -> dict:
-    """md5-HLL error realization at high cardinality (BENCH.md "5M
-    distinct" table). md5 is ONE fixed hash, so each population yields
-    a single error draw, not an ensemble average — a ~2-sigma row is
-    expected once per ~20 populations."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from jsonld_streaming_parser_js_spark.operators.sketch import (
-        hll_distinct)
-    df = (spark.range(n_distinct * dup)
-          .select(F.concat(F.lit("key"),
-                           (F.col("id") % n_distinct).cast("string"))
-                  .alias("k")))
-    rows = []
-    for b in (8, 10, 12):
-        t0 = time.time()
-        r = hll_distinct(df, "k", b=b).first()
-        rows.append({
-            "b": b, "m": r["m"], "exact": r["n_exact"],
-            "estimate": round(r["hll_estimate"], 1),
-            # the operator's own rel_error column — one definition
-            "rel_err_pct": round(100.0 * r["rel_error"], 2),
-            "expected_rsd_pct": round(104.0 / math.sqrt(1 << b), 2),
-            "wall_sec": round(time.time() - t0, 1)})
-    return {"n_distinct": n_distinct, "dup": dup, "rows": rows}
-
-
 def main() -> None:
     import argparse
     p = argparse.ArgumentParser()
     p.add_argument("--fuzzy", default="",
                    help="comma-separated amplify values, e.g. 1,30,100")
-    p.add_argument("--memo", type=int, default=0,
-                   help="memo-leg amplify, e.g. 1000")
-    p.add_argument("--decon", default="",
-                   help="comma-separated eval_amplify values, e.g. 40,500")
     p.add_argument("--pagerank", default="",
                    help="comma-separated amplify values, e.g. 1,10,50")
     p.add_argument("--rdfs", default="",
                    help="comma-separated amplify values, e.g. 1,10,50")
     p.add_argument("--bgp", default="",
                    help="comma-separated amplify values, e.g. 1,10,50")
-    p.add_argument("--ccchain", type=int, default=0,
-                   help="two-phase CC chain length, e.g. 100000")
-    p.add_argument("--hll", type=int, default=0,
-                   help="HLL distinct-key count, e.g. 5000000")
     args = p.parse_args()
 
     from jsonld_streaming_parser_js_spark.sources.session import get_spark
-    import bench
 
     spark = get_spark(app="scale-probe",
                       extra_conf={"spark.ui.retainedStages": "20000"})
     spark.sparkContext.setLogLevel("ERROR")
 
-    out: dict = {"sf": SF_DIR, "fuzzy": [], "memo": None, "decon": [],
-                 "pagerank": [],
+    out: dict = {"sf": SF_DIR, "fuzzy": [], "pagerank": [],
                  "load_avg_1m": round(os.getloadavg()[0], 2)}
     for amp in [int(a) for a in args.fuzzy.split(",") if a]:
         leg = fuzzy_leg(spark, amp)
         out["fuzzy"].append(leg)
         print(f"# fuzzy x{amp}: {leg}", file=sys.stderr)
-
-    for amp in [int(a) for a in args.decon.split(",") if a]:
-        leg = decon_leg(spark, amp)
-        out["decon"].append(leg)
-        print(f"# decon x{amp}: {leg}", file=sys.stderr)
 
     pr_amps = [int(a) for a in args.pagerank.split(",") if a]
     if pr_amps:
@@ -442,24 +303,6 @@ def main() -> None:
                 out["bgp"].append(leg)
                 print(f"# bgp x{amp}: {leg}", file=sys.stderr)
         kg_base.unpersist()
-
-    if args.ccchain:
-        out["cc_chain"] = cc_chain_leg(spark, args.ccchain)
-        print(f"# cc_chain: {out['cc_chain']}", file=sys.stderr)
-
-    if args.hll:
-        out["hll"] = hll_leg(spark, args.hll)
-        print(f"# hll: {out['hll']}", file=sys.stderr)
-
-    if args.memo:
-        sw0 = _shuffle_write_bytes(spark)
-        t0 = time.time()
-        memo = bench.memo_leg(spark, amplify=args.memo)
-        memo["wall_sec_total"] = round(time.time() - t0, 1)
-        sw1 = _shuffle_write_bytes(spark)
-        memo["shuffle_write_bytes"] = _delta(sw0, sw1)
-        out["memo"] = memo
-        print(f"# memo x{args.memo}: {memo}", file=sys.stderr)
 
     out["load_avg_1m_end"] = round(os.getloadavg()[0], 2)
     print(json.dumps(out))
