@@ -7,20 +7,28 @@ failure never re-emits quads for completed buckets and never misses a url.
 
 Layout under ``out_dir``:
 - ``quads/``    parquet partitioned by ``bucket`` (dynamic partition
-                overwrite: re-running a bucket replaces exactly that bucket)
-- ``lineage/``  one row per completed bucket: counts + an order-insensitive
-                checksum (sum of xxhash64 over the quad tuple), written
-                only AFTER the bucket's quads land — the commit record.
+                overwrite: re-running a bucket replaces exactly that
+                bucket). Each commit writes ONE file per bucket it
+                touches: the rows are clustered by bucket before the
+                write, so one task writes each bucket, and the file
+                count is B, not tasks x B.
+- ``lineage/``  one row per completed bucket — ``bucket``,
+                ``snapshot_id``, ``n_quads``, ``n_errors`` and an
+                order-insensitive ``checksum`` (xor of xxhash64 over the
+                quad tuple) — written only AFTER the bucket's quads land
+                (the commit record), as one file per commit.
 
 At 10^12 documents: B is sized so a bucket is a few GB (e.g. B = 2^17);
 lineage stays tiny (B rows), and a resume is an anti-join of the pages scan
 against B completed bucket ids — a broadcast anti-join, no shuffle of the
-pages table.
+pages table. Clustering by bucket is what keeps the commit at B files at
+that scale: with thousands of parse tasks, an unclustered dynamic-partition
+write would open a file per task per bucket.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -41,12 +49,12 @@ def bucket_lineage(parsed: DataFrame,
 
     ``snapshot_id`` identifies the input table version (an Iceberg snapshot
     id in production; any caller-provided tag here) so a resume can refuse
-    to mix buckets produced from different input snapshots."""
+    to mix buckets produced from different input snapshots. Over rows
+    clustered by bucket (``_cluster_by_bucket``) the aggregate needs no
+    exchange of its own."""
     quad = F.col("error").isNull()
     return (parsed.groupBy("bucket").agg(
         F.lit(snapshot_id).alias("snapshot_id"),
-        F.countDistinct("url").alias("n_urls"),
-        F.countDistinct("url", "blk").alias("n_blocks"),
         F.sum(quad.cast("long")).alias("n_quads"),
         F.sum((~quad).cast("long")).alias("n_errors"),
         # xor-fold of per-quad hashes: order-insensitive and overflow-free
@@ -62,7 +70,15 @@ def _read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
 
     Any other failure (corrupt files, schema drift such as a lineage dir
     written without a snapshot_id column) must raise: treating it as
-    'first run' would silently disable the resume/snapshot guards."""
+    'first run' would silently disable the resume/snapshot guards.
+
+    An absent directory is checked first rather than read and caught:
+    once the session has run an ``observe`` (``write_bucketed``), Spark
+    logs every failed query, so a fresh store would log a stack trace."""
+    sc = spark.sparkContext
+    path = sc._jvm.org.apache.hadoop.fs.Path(f"{out_dir}/lineage")
+    if not path.getFileSystem(sc._jsc.hadoopConfiguration()).exists(path):
+        return None
     try:
         return spark.read.parquet(f"{out_dir}/lineage")
     except Exception as exc:  # noqa: BLE001 — classify, re-raise the rest
@@ -111,8 +127,33 @@ def iceberg_quad_sink(table: str):
     return sink
 
 
+def _cluster_by_bucket(rows: DataFrame) -> DataFrame:
+    """The commit layout: all rows of a bucket in ONE partition, so one
+    task writes each bucket (one file per bucket per commit, not one per
+    task per bucket) and the per-bucket lineage aggregate over the same
+    partitioning adds no exchange. Spark's shuffle partitions and AQE
+    choose the partition count (sources/session.py lets AQE coalesce a
+    cached plan); coalescing merges whole partitions, so it never splits
+    a bucket across tasks."""
+    return rows.repartition("bucket")
+
+
+def _sink_clustered(clustered: DataFrame, out_dir: str, quad_sink) -> None:
+    """The one quad-write path (``write_bucketed`` and ``upsert_wave``):
+    bucket-clustered rows, sorted inside each partition, into the sink."""
+    # sortWithinPartitions (no shuffle): quads cluster by (pred, subj)
+    # inside each file, so parquet dictionary/RLE encoding collapses the
+    # boilerplate-heavy pred column — a large compression win at corpus
+    # scale — and pred-filtered scans skip row groups via column stats
+    # NB: "bucket" must lead the sort — the dynamic-partition writer
+    # needs Sort(bucket) and the optimizer ELIMINATES any other
+    # sortWithinPartitions beneath it (verified on PySpark 4.1.2)
+    (quad_sink or parquet_quad_sink)(
+        clustered.sortWithinPartitions("bucket", "pred", "subj"), out_dir)
+
+
 def write_bucketed(parsed_with_bucket: DataFrame, out_dir: str,
-                   snapshot_id: str = "", quad_sink=None) -> None:
+                   snapshot_id: str = "", quad_sink=None) -> dict:
     """Write quads (+error rows) partitioned by bucket, then commit lineage.
 
     Ordering is the crash-safety contract: quads land first (dynamic
@@ -120,24 +161,32 @@ def write_bucketed(parsed_with_bucket: DataFrame, out_dir: str,
     A crash between the two re-runs those buckets; dynamic overwrite makes
     the re-run idempotent.
 
+    The rows are clustered by bucket and cached once; the sink writes one
+    file per bucket from that cache, and the lineage rows are aggregated
+    from the same cache (no second exchange) and appended as one file.
+    Returns this commit's totals — ``{"buckets", "n_quads",
+    "n_errors"}`` — observed on the lineage write itself, so callers
+    need no read-back of ``lineage/``.
+
     ``quad_sink(sorted_df, out_dir)`` is the ONLY format-specific step:
     parquet_quad_sink by default, iceberg_quad_sink(table) on a cluster
     with the Iceberg runtime — lineage, resume, and waves are
     sink-agnostic; verify_lineage takes ``quads=`` for non-parquet sinks.
     """
-    cached = parsed_with_bucket.persist()
+    cached = _cluster_by_bucket(parsed_with_bucket).persist()
     try:
-        # sortWithinPartitions (no shuffle): quads cluster by (pred, subj)
-        # inside each file, so parquet dictionary/RLE encoding collapses the
-        # boilerplate-heavy pred column — a large compression win at corpus
-        # scale — and pred-filtered scans skip row groups via column stats
-        # NB: "bucket" must lead the sort — the dynamic-partition writer
-        # needs Sort(bucket) and the optimizer ELIMINATES any other
-        # sortWithinPartitions beneath it (verified on PySpark 4.1.2)
-        sorted_quads = cached.sortWithinPartitions("bucket", "pred", "subj")
-        (quad_sink or parquet_quad_sink)(sorted_quads, out_dir)
-        (bucket_lineage(cached, snapshot_id).write.mode("append")
+        _sink_clustered(cached, out_dir, quad_sink)
+        totals = Observation("commit")
+        # repartition(1), not coalesce(1): coalesce would pull the
+        # aggregate itself into one task over the whole cache; this
+        # gathers only its <= B output rows into the one lineage file
+        (bucket_lineage(cached, snapshot_id)
+         .observe(totals, F.count("*").alias("buckets"),
+                  F.sum("n_quads").alias("n_quads"),
+                  F.sum("n_errors").alias("n_errors"))
+         .repartition(1).write.mode("append")
          .parquet(f"{out_dir}/lineage"))
+        return {k: int(v or 0) for k, v in totals.get.items()}
     finally:
         cached.unpersist()
 
@@ -221,7 +270,8 @@ def upsert_wave(spark: SparkSession, out_dir: str,
     buckets' lineage rows are REPLACED (compacted), not appended — this
     is the one writer that re-commits a committed bucket, and duplicate
     per-bucket rows would break verify_lineage and double-count resume
-    stats.
+    stats. The quads take write_bucketed's clustered write path, so each
+    affected bucket is rewritten as one file.
 
     ``wave_keys``: the CRAWLED url set (one ``url`` column). Required
     for deletion-correctness when a re-crawled page can yield ZERO
@@ -247,21 +297,23 @@ def upsert_wave(spark: SparkSession, out_dir: str,
         # cut to a materialized RDD first — a mere cache can be evicted /
         # lost and the recompute would scan deleted files (and Spark's
         # self-overwrite detection would otherwise refuse the write).
-        merged = keep.unionByName(wave_b.select(*cols)).localCheckpoint()
+        merged = _cluster_by_bucket(
+            keep.unionByName(wave_b.select(*cols))).localCheckpoint()
         # lineage compaction: old rows for unaffected buckets + fresh
         # rows for the wave's buckets. Tiny (<= total buckets rows);
         # checkpointed before the overwrite of its own source dir. A
         # crash between the two writes leaves quads newer than lineage —
         # the same idempotent-bucket re-run contract as write_bucketed.
+        # Old rows are projected to the current lineage columns: a store
+        # written by an older release may carry columns since dropped.
+        fresh = bucket_lineage(merged, snapshot_id)
         old_lineage = (spark.read.parquet(f"{out_dir}/lineage")
-                       .join(F.broadcast(affected), "bucket", "left_anti"))
-        compacted = (old_lineage
-                     .unionByName(bucket_lineage(merged, snapshot_id))
-                     .localCheckpoint())
-        sorted_quads = merged.sortWithinPartitions("bucket", "pred",
-                                                   "subj")
-        (quad_sink or parquet_quad_sink)(sorted_quads, out_dir)
-        compacted.write.mode("overwrite").parquet(f"{out_dir}/lineage")
+                       .join(F.broadcast(affected), "bucket", "left_anti")
+                       .select(*fresh.columns))
+        compacted = old_lineage.unionByName(fresh).localCheckpoint()
+        _sink_clustered(merged, out_dir, quad_sink)
+        (compacted.coalesce(1).write.mode("overwrite")
+         .parquet(f"{out_dir}/lineage"))
     finally:
         wave_b.unpersist()
 
@@ -435,7 +487,10 @@ def run_with_resume(spark: SparkSession, pages: DataFrame, out_dir: str,
 
     ``pages -> filter(uncommitted bucket) -> extract+parse -> write``.
     The filter is a broadcast anti-join on the bucket id (<= B rows), so
-    resume adds zero shuffles to the happy path.
+    resume adds zero shuffles to the happy path. The stats are the prior
+    lineage totals (from the same read that feeds the anti-join) plus the
+    totals ``write_bucketed`` observes on its commit; ``lineage/`` is not
+    read back after the commit.
 
     ``memo=True`` parses via the distinct-block memo (operators/memo.py)
     — same output protocol including the error channel, one kernel call
@@ -449,10 +504,16 @@ def run_with_resume(spark: SparkSession, pages: DataFrame, out_dir: str,
 
     pages_b = with_bucket(pages, buckets)
     check_snapshot(spark, out_dir, snapshot_id)
-    done = completed_buckets(spark, out_dir)
-    n_done = 0
-    if done is not None:
-        n_done = done.count()
+    # the one lineage read: prior totals for the stats, and the committed
+    # bucket ids the anti-join skips
+    prior = {"buckets": 0, "n_quads": 0, "n_errors": 0}
+    lineage = _read_lineage(spark, out_dir)
+    if lineage is not None:
+        r = lineage.agg(F.countDistinct("bucket").alias("buckets"),
+                        F.sum("n_quads").alias("n_quads"),
+                        F.sum("n_errors").alias("n_errors")).first()
+        prior = {k: int(r[k] or 0) for k in prior}
+        done = lineage.select("bucket").distinct()
         pages_b = pages_b.join(F.broadcast(done), "bucket", "left_anti")
 
     memo_ratio = None
@@ -479,15 +540,14 @@ def run_with_resume(spark: SparkSession, pages: DataFrame, out_dir: str,
     else:
         parsed = extract_and_parse(pages_b, ctx_cache, rdf_direction)
     parsed_b = with_bucket(parsed, buckets)
-    write_bucketed(parsed_b, out_dir, snapshot_id, quad_sink=quad_sink)
-
-    lineage = spark.read.parquet(f"{out_dir}/lineage")
-    agg = lineage.agg(F.countDistinct("bucket").alias("b"),
-                      F.sum("n_quads").alias("q"),
-                      F.sum("n_errors").alias("e")).collect()[0]
-    stats = {"buckets_total": buckets, "buckets_previously_done": n_done,
-             "buckets_done": agg["b"], "n_quads": agg["q"],
-             "n_errors": agg["e"], "memo_used": bool(memo)}
+    commit = write_bucketed(parsed_b, out_dir, snapshot_id,
+                            quad_sink=quad_sink)
+    stats = {"buckets_total": buckets,
+             "buckets_previously_done": prior["buckets"],
+             "buckets_done": prior["buckets"] + commit["buckets"],
+             "n_quads": prior["n_quads"] + commit["n_quads"],
+             "n_errors": prior["n_errors"] + commit["n_errors"],
+             "memo_used": bool(memo)}
     if memo_ratio is not None:
         stats["memo_duplication_ratio"] = round(memo_ratio, 2)
     return stats

@@ -44,7 +44,10 @@ def build_kg(spark: SparkSession, pages: DataFrame,
                                 memo=cfg.memo)
     if cfg.canonicalize:
         quads = quads_table(spark, cfg.out_dir)
-        mapping = canon.canonical_mapping(quads)
+        # materialized once: the relabel join and the count both read it,
+        # and each recompute re-runs the features and the blocking join
+        # over the whole store
+        mapping = canon.canonical_mapping(quads).localCheckpoint()
         relabeled = canon.relabel_quads(quads, mapping)
         (relabeled.write.mode("overwrite")
          .parquet(f"{cfg.out_dir}/quads_canonical"))

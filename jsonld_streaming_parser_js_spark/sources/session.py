@@ -38,6 +38,14 @@ def get_spark(app: str = "jsonld-kg", cores: int | None = None,
                 os.environ.get("SPARK_GRAFT_MIN_COALESCED_PARTITION",
                                "262144"))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # let AQE coalesce the shuffle inside a cached plan too: the
+        # commit caches rows clustered by bucket (plans/lineage.py), and
+        # without this their partition count is pinned at
+        # spark.sql.shuffle.partitions, so a small commit runs that many
+        # write tasks. Readers of the cache that need hash partitioning
+        # still get it (a coalesced hash partitioning is one).
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+                "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Arrow exchange for pandas UDFs / mapInPandas
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

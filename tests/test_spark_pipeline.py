@@ -76,6 +76,21 @@ def test_checkpoint_resume(spark, pages):
         s2 = lin.run_with_resume(spark, pages, out, CONTEXTS, buckets=16)
         assert s2["buckets_previously_done"] == s1["buckets_done"]
         assert s2["buckets_done"] == 16
+        # prior totals + the commit's observed totals == a read-back
+        back = (spark.read.parquet(f"{out}/lineage")
+                .agg(F.countDistinct("bucket").alias("b"),
+                     F.sum("n_quads").alias("q"),
+                     F.sum("n_errors").alias("e")).first())
+        assert (s2["buckets_done"], s2["n_quads"], s2["n_errors"]) == (
+            back["b"], back["q"], back["e"])
+        assert s2["n_errors"] > 0
+
+        # clustered commits: one file per bucket, one lineage file per
+        # commit
+        import glob
+        for b in range(16):
+            assert len(glob.glob(f"{out}/quads/bucket={b}/*.parquet")) == 1
+        assert len(glob.glob(f"{out}/lineage/*.parquet")) == 2
 
         # result equals a clean single-shot run, quad for quad
         resumed = set(map(tuple,
@@ -122,11 +137,22 @@ def test_upsert_wave_rewrites_only_affected_buckets(spark, pages):
                     for b in bs
                     for f in glob.glob(f"{out}/quads/bucket={b}/*.parquet")}
 
+        # the lineage as an older release wrote it, with the since-dropped
+        # n_urls/n_blocks columns: the compaction must still union it
+        legacy = (spark.read.parquet(f"{out}/lineage")
+                  .withColumn("n_urls", F.lit(1).cast("long"))
+                  .withColumn("n_blocks", F.lit(1).cast("long"))
+                  .localCheckpoint())
+        legacy.write.mode("overwrite").parquet(f"{out}/lineage")
+
         untouched = set(range(buckets)) - affected
         before = file_states(untouched)
         lin.upsert_wave(spark, out, wave_parsed, buckets,
                         snapshot_id="snap-A")
         assert file_states(untouched) == before  # no rewrite outside wave
+        # each rewritten bucket is one file (the clustered commit path)
+        for b in affected:
+            assert len(glob.glob(f"{out}/quads/bucket={b}/*.parquet")) == 1
 
         got = set(map(tuple, (spark.read.parquet(f"{out}/quads")
                               .where(F.col("error").isNull())

@@ -5,6 +5,8 @@ regresses (a plan-shape unit test, runnable in CI):
 
 - parse pipeline: pages scan pruned; zero quad shuffles (dedup is
   kernel-local) — extract+parse is a narrow fused stage
+- commit: one hash Exchange on bucket (one file per bucket); the lineage
+  aggregate reuses it
 - graph views, canonicalization, memo, N-Quads round-trip, wave diff,
   RDFS entailment and BGP: the join/shuffle shapes each relies on
 """
@@ -12,7 +14,10 @@ regresses (a plan-shape unit test, runnable in CI):
 from __future__ import annotations
 
 import os
+import re
+import shutil
 import sys
+import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -36,7 +41,8 @@ def _shuffles(p: str) -> int:
 def main() -> None:
     import __spark_entry__ as e
     from jsonld_streaming_parser_js_spark.operators.parse import (
-        pages_to_quads)
+        extract_and_parse, pages_to_quads)
+    from jsonld_streaming_parser_js_spark.plans import lineage as lin
     from jsonld_streaming_parser_js_spark.sources.pages import (
         CONTEXTS, pages_from_documents)
     from jsonld_streaming_parser_js_spark.sources.session import get_spark
@@ -66,6 +72,41 @@ def main() -> None:
           f"hash/range Exchange x{_shuffles(p)}, "
           f"total Exchange x{p.count('Exchange')} "
           "(any surplus is the round-robin input floor)")
+
+    # clustered commit: write_bucketed shuffles the parsed rows ONCE,
+    # hash-partitioned on bucket (one task, so one file, per bucket), and
+    # the lineage aggregate over the same cached rows adds no exchange.
+    # The shipped write runs with a recording sink that captures, after
+    # the quads land (AQE final plans), the frame handed to the sink and
+    # the lineage aggregate over it.
+    seen: dict[str, str] = {}
+
+    def recording_sink(sorted_quads, out_dir):
+        lin.parquet_quad_sink(sorted_quads, out_dir)
+        seen["commit"] = plan_of(sorted_quads)
+        seen["lineage"] = plan_of(lin.bucket_lineage(sorted_quads))
+
+    commit_dir = tempfile.mkdtemp(prefix="audit_commit_")
+    try:
+        lin.write_bucketed(lin.with_bucket(extract_and_parse(
+            pages_from_documents(spark, sf), CONTEXTS), 64), commit_dir,
+            quad_sink=recording_sink)
+    finally:
+        shutil.rmtree(commit_dir, ignore_errors=True)
+    p_commit = seen["commit"].split("== Initial Plan ==")[0]
+    p_lin = seen["lineage"].split("== Initial Plan ==")[0]
+    commit_ex = [ln.strip() for ln in p_commit.splitlines()
+                 if "Exchange hashpartitioning" in ln]
+    commit_key = (re.sub(r"#[0-9]+L?", "", re.search(
+        r"hashpartitioning\([^)]*\)", commit_ex[0]).group(0))
+        if commit_ex else "none")
+    check("commit: ONE hash Exchange on bucket, lineage agg adds none",
+          _shuffles(p_commit) == 1 and len(commit_ex) == 1
+          and "hashpartitioning(bucket#" in commit_ex[0]
+          and _shuffles(p_lin) == _shuffles(p_commit),
+          f"commit hash/range Exchange x{_shuffles(p_commit)} "
+          f"({commit_key}), lineage x{_shuffles(p_lin)} "
+          "(the commit's, cached)")
 
     # graph nodes view: both degree counts from ONE shuffle over the term
     # universe (explode + single groupBy; was distinct + 2 groupBys +
@@ -213,10 +254,8 @@ def main() -> None:
     # PushedFilters bracket must carry the pred constant (bracket
     # CONTENTS, not substring-after-marker) — and the variable joins
     # never degenerate to a product
-    import shutil as _sh
-    import tempfile as _tf2
     from jsonld_streaming_parser_js_spark.operators import bgp as _bgp
-    _bgpd = _tf2.mkdtemp(prefix="audit_bgp_")
+    _bgpd = tempfile.mkdtemp(prefix="audit_bgp_")
     try:
         (e._quads(spark, sf).select("subj", "pred", "obj", "graph")
          .write.mode("overwrite").parquet(_bgpd))
@@ -238,7 +277,7 @@ def main() -> None:
               f"cartesian x{p.count('Cartesian')}, "
               f"BNLJ x{p.count('BroadcastNestedLoopJoin')}")
     finally:
-        _sh.rmtree(_bgpd, ignore_errors=True)
+        shutil.rmtree(_bgpd, ignore_errors=True)
 
     with open(os.path.join(ROOT, "EXPLAIN.md"), "w") as f:
         f.write("# EXPLAIN audit — physical-plan invariants\n\n")
