@@ -49,10 +49,6 @@ def is_absolute_iri(value: str) -> bool:
     return not _INVALID_IRI_CHARS_RE.search(value)
 
 
-def is_valid_iri(value: str) -> bool:
-    return is_absolute_iri(value)
-
-
 @lru_cache(maxsize=4096)
 def _parse(ref: str):
     """Split an IRI reference into (scheme, authority, path, query, fragment).

@@ -50,23 +50,6 @@ def iri(value: str) -> str:
     return f"<{value}>"
 
 
-def is_iri_term(term: str) -> bool:
-    return term.startswith("<")
-
-
-def is_blank_term(term: str) -> bool:
-    return term.startswith("_:")
-
-
-def is_literal_term(term: str) -> bool:
-    return term.startswith('"')
-
-
-def iri_value(term: str) -> str:
-    """Inverse of :func:`iri` (no unescaping needed: IRIs contain no ``>``)."""
-    return term[1:-1]
-
-
 _LITERAL_ESCAPES = {
     "\\": "\\\\",
     '"': '\\"',

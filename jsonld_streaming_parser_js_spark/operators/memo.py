@@ -76,9 +76,9 @@ _MEMO_SCHEMA = ST.StructType([
 ])
 
 
-# Measured break-even of the memo at sf0.1 (BENCH.md round-6 leg): below
-# ~50x mean duplication the bkey shuffle + hit join cost more than the
-# saved kernel calls.
+# Break-even of the memo, measured at sf0.1 with an earlier benchmark
+# harness (before kgbench): below ~50x mean duplication the bkey shuffle
+# + hit join cost more than the saved kernel calls.
 MEMO_BREAK_EVEN_DUPLICATION = 50.0
 
 
@@ -178,9 +178,10 @@ def parse_blocks_memo(blocks: DataFrame, ctx_cache: dict | None = None,
                       parser_options=None) -> DataFrame:
     """Memoized twin of :func:`..operators.parse.parse_blocks` — same
     input (url, blk, block), same output protocol (QUAD_SCHEMA incl. the
-    error channel), value-identical results (lane ``kg_quads_memo`` is
-    hash-checked against the non-memo oracle), one kernel call per
-    DISTINCT block instead of per occurrence."""
+    error channel), value-identical results (the ``kg_quads_memo`` lane
+    in tests/test_lane_oracles.py is hash-checked against the non-memo
+    oracle), one kernel call per DISTINCT block instead of per
+    occurrence."""
     keyed = blocks.withColumn("bkey", F.md5("block"))
     distinct = keyed.select("bkey", "block").dropDuplicates(["bkey"])
     # localCheckpoint (eager): BOTH consumers below (hits join + fallback

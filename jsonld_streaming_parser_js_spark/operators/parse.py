@@ -130,11 +130,6 @@ def quads_only(parsed: DataFrame) -> DataFrame:
             .select("url", "blk", "subj", "pred", "obj", "graph"))
 
 
-def errors_only(parsed: DataFrame) -> DataFrame:
-    return (parsed.where(F.col("error").isNotNull())
-            .select("url", "blk", "error"))
-
-
 def extract_and_parse(pages: DataFrame, ctx_cache: dict | None = None,
                       rdf_direction: str | None = None,
                       dedup_blocks: bool = False) -> DataFrame:

@@ -98,33 +98,19 @@ def completed_buckets(spark: SparkSession, out_dir: str) -> DataFrame | None:
 
 
 def parquet_quad_sink(sorted_quads: DataFrame, out_dir: str) -> None:
-    """Default sink: parquet + dynamic partition overwrite (idempotent
-    per-bucket re-runs). Stands in for Iceberg in this container — the
-    spark-iceberg runtime jar is absent and cannot be vendored offline
-    (PERMANENT constraint, documented in README/PARITY.md).
+    """The quad sink: parquet + dynamic partition overwrite (idempotent
+    per-bucket re-runs).
 
-    Codec: zstd (default level 3) — measured 7.5x vs uncompressed on the
-    (pred, subj)-clustered quads layout where snappy gets 4.6x, with
-    equal-or-faster scans (tools/compression_sweep.py; BENCH.md). At
-    100 TB that codec choice is ~40% of the stored bytes."""
+    Codec: zstd (default level 3). On the (pred, subj)-clustered quads
+    layout it compressed 7.5x against 4.6x for snappy, with scans as
+    fast or faster, in an earlier codec sweep of this layout. At 100 TB
+    that codec choice is ~40% of the stored bytes."""
     spark = sorted_quads.sparkSession
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (sorted_quads.write.mode("overwrite")
      .option("compression", "zstd")
      .partitionBy("bucket")
      .parquet(f"{out_dir}/quads"))
-
-
-def iceberg_quad_sink(table: str):
-    """Config-only Iceberg swap: ``overwritePartitions`` on a table
-    ``PARTITIONED BY (bucket)`` has exactly the parquet sink's idempotent
-    dynamic-overwrite semantics (same commit contract, plus real snapshot
-    ids for ``snapshot_id``). Requires the iceberg-spark-runtime jar +
-    catalog conf; unusable in this container, so the abstraction test
-    drives ``write_bucketed`` through a recording sink instead."""
-    def sink(sorted_quads: DataFrame, out_dir: str) -> None:
-        sorted_quads.writeTo(table).overwritePartitions()
-    return sink
 
 
 def _cluster_by_bucket(rows: DataFrame) -> DataFrame:
@@ -148,12 +134,13 @@ def _sink_clustered(clustered: DataFrame, out_dir: str, quad_sink) -> None:
     # NB: "bucket" must lead the sort — the dynamic-partition writer
     # needs Sort(bucket) and the optimizer ELIMINATES any other
     # sortWithinPartitions beneath it (verified on PySpark 4.1.2)
-    (quad_sink or parquet_quad_sink)(
-        clustered.sortWithinPartitions("bucket", "pred", "subj"), out_dir)
+    quad_sink(clustered.sortWithinPartitions("bucket", "pred", "subj"),
+              out_dir)
 
 
 def write_bucketed(parsed_with_bucket: DataFrame, out_dir: str,
-                   snapshot_id: str = "", quad_sink=None) -> dict:
+                   snapshot_id: str = "",
+                   quad_sink=parquet_quad_sink) -> dict:
     """Write quads (+error rows) partitioned by bucket, then commit lineage.
 
     Ordering is the crash-safety contract: quads land first (dynamic
@@ -168,10 +155,9 @@ def write_bucketed(parsed_with_bucket: DataFrame, out_dir: str,
     "n_errors"}`` — observed on the lineage write itself, so callers
     need no read-back of ``lineage/``.
 
-    ``quad_sink(sorted_df, out_dir)`` is the ONLY format-specific step:
-    parquet_quad_sink by default, iceberg_quad_sink(table) on a cluster
-    with the Iceberg runtime — lineage, resume, and waves are
-    sink-agnostic; verify_lineage takes ``quads=`` for non-parquet sinks.
+    ``quad_sink(sorted_df, out_dir)`` is the one format-specific step
+    (``parquet_quad_sink``); it is a parameter so a test or the EXPLAIN
+    audit can record what the commit hands the sink.
     """
     cached = _cluster_by_bucket(parsed_with_bucket).persist()
     try:
@@ -189,26 +175,6 @@ def write_bucketed(parsed_with_bucket: DataFrame, out_dir: str,
         return {k: int(v or 0) for k, v in totals.get.items()}
     finally:
         cached.unpersist()
-
-
-def upsert_quads(base: DataFrame, wave: DataFrame,
-                 key: str = "url",
-                 wave_keys: DataFrame | None = None) -> DataFrame:
-    """Declarative MERGE at document granularity: a re-crawl wave
-    REPLACES every quad of the urls it contains (delete-then-insert —
-    the semantics of `MERGE ... WHEN MATCHED DELETE+INSERT` keyed by
-    url). left_anti + union keeps the whole expression oracle-checkable;
-    the physical twin below rewrites only affected bucket partitions.
-
-    ``wave_keys``: the CRAWLED url set (one ``key`` column). Pass it
-    whenever the wave may contain pages that now yield ZERO quads (no
-    JSON-LD blocks anymore, parse failure): deriving urls from the wave
-    QUADS would silently keep such a page's stale quads in the store.
-    Defaults to the wave quads' urls — sound only when every re-crawled
-    page still emits quads."""
-    keys = (wave_keys.select(key) if wave_keys is not None
-            else wave.select(key)).distinct()
-    return base.join(keys, key, "left_anti").unionByName(wave)
 
 
 def wave_diff(base: DataFrame, wave: DataFrame,
@@ -259,7 +225,7 @@ def _wave_url_cut(base: DataFrame, wave: DataFrame, key: str = "url",
 
 def upsert_wave(spark: SparkSession, out_dir: str,
                 wave_parsed: DataFrame, buckets: int,
-                snapshot_id: str = "", quad_sink=None,
+                snapshot_id: str = "",
                 wave_keys: DataFrame | None = None) -> None:
     """Physical MERGE into the bucketed quad store: only the url-buckets
     the wave touches are recomputed and dynamically overwritten —
@@ -311,7 +277,7 @@ def upsert_wave(spark: SparkSession, out_dir: str,
                        .join(F.broadcast(affected), "bucket", "left_anti")
                        .select(*fresh.columns))
         compacted = old_lineage.unionByName(fresh).localCheckpoint()
-        _sink_clustered(merged, out_dir, quad_sink)
+        _sink_clustered(merged, out_dir, parquet_quad_sink)
         (compacted.coalesce(1).write.mode("overwrite")
          .parquet(f"{out_dir}/lineage"))
     finally:
@@ -481,7 +447,7 @@ def check_snapshot(spark: SparkSession, out_dir: str,
 def run_with_resume(spark: SparkSession, pages: DataFrame, out_dir: str,
                     ctx_cache: dict, buckets: int = 64,
                     rdf_direction: str | None = None,
-                    snapshot_id: str = "", quad_sink=None,
+                    snapshot_id: str = "",
                     memo: bool | str = False) -> dict:
     """Process only urls in not-yet-committed buckets; returns stats.
 
@@ -540,8 +506,7 @@ def run_with_resume(spark: SparkSession, pages: DataFrame, out_dir: str,
     else:
         parsed = extract_and_parse(pages_b, ctx_cache, rdf_direction)
     parsed_b = with_bucket(parsed, buckets)
-    commit = write_bucketed(parsed_b, out_dir, snapshot_id,
-                            quad_sink=quad_sink)
+    commit = write_bucketed(parsed_b, out_dir, snapshot_id)
     stats = {"buckets_total": buckets,
              "buckets_previously_done": prior["buckets"],
              "buckets_done": prior["buckets"] + commit["buckets"],
@@ -557,7 +522,7 @@ def run_in_waves(spark: SparkSession, pages: DataFrame, out_dir: str,
                  ctx_cache: dict, buckets: int = 64,
                  waves: int = 4,
                  rdf_direction: str | None = None,
-                 snapshot_id: str = "", quad_sink=None) -> list[dict]:
+                 snapshot_id: str = "") -> list[dict]:
     """Process the corpus in `waves` independently-committed bucket ranges.
 
     Each wave write+commit is atomic at the wave level, so a crash between
@@ -582,19 +547,15 @@ def run_in_waves(spark: SparkSession, pages: DataFrame, out_dir: str,
         parsed = with_bucket(
             extract_and_parse(wave_pages.drop("bucket"), ctx_cache,
                               rdf_direction), buckets)
-        write_bucketed(parsed, out_dir, snapshot_id, quad_sink=quad_sink)
+        write_bucketed(parsed, out_dir, snapshot_id)
         stats.append({"wave": w, "buckets": [lo, hi]})
     return stats
 
 
-def verify_lineage(spark: SparkSession, out_dir: str,
-                   quads: DataFrame | None = None) -> DataFrame:
+def verify_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     """Recompute per-bucket stats from the quads table and diff against the
-    lineage records — the audit every resume can run cheaply. Reads the
-    default parquet layout; a non-parquet sink (Iceberg) passes its own
-    ``quads`` DataFrame (e.g. ``spark.table('cat.db.quads')``)."""
-    if quads is None:
-        quads = spark.read.parquet(f"{out_dir}/quads")
+    lineage records — the audit every resume can run cheaply."""
+    quads = spark.read.parquet(f"{out_dir}/quads")
     recomputed = bucket_lineage(quads).drop("snapshot_id")
     recorded = spark.read.parquet(f"{out_dir}/lineage")
     return (recomputed.alias("a")

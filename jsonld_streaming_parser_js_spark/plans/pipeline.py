@@ -74,49 +74,3 @@ def quads_table(spark: SparkSession, out_dir: str) -> DataFrame:
     parsed = spark.read.parquet(f"{out_dir}/quads")
     return (quads_only(parsed)
             .dropDuplicates(["url", "blk", "subj", "pred", "obj", "graph"]))
-
-
-def errors_table(spark: SparkSession, out_dir: str) -> DataFrame:
-    parsed = spark.read.parquet(f"{out_dir}/quads")
-    return (parsed.where(F.col("error").isNotNull())
-            .select("url", "blk", "error"))
-
-
-def graph_views(quads: DataFrame) -> dict[str, DataFrame]:
-    """Materialized graph views: node and edge tables (the "graph
-    materialize" stage of the north_rule).
-
-    - nodes: every distinct term in subject/object position with kind
-      (iri / bnode / literal / quoted-triple) and degree counts
-    - edges: subject -> object rows for IRI/bnode objects (literal
-      attributes excluded), ready for graph algorithms
-    """
-    kind = (F.when(F.col("term").startswith("_:"), "bnode")
-            .when(F.col("term").startswith('"'), "literal")
-            .when(F.col("term").startswith("<<"), "quoted")
-            .otherwise("iri"))
-    # ONE aggregation over the full term universe: explode each quad into
-    # (subj,1)/(obj,0) flag rows and derive both degrees from the same
-    # groupBy. The previous shape (distinct + two groupBys + two left
-    # joins) spent 3 Exchanges on `term` where this spends 1 — at web
-    # scale the term universe is the largest key space in the pipeline,
-    # so every extra shuffle over it is the dominant cost. explode (not
-    # union) keeps a SINGLE lineage: a union would duplicate the whole
-    # upstream parse subtree per branch. The partial sum runs map-side
-    # below the one Exchange; kind is a post-agg projection.
-    tagged = (quads.select(F.explode(F.array(
-        F.struct(F.col("subj").alias("term"), F.lit(1).alias("is_subj")),
-        F.struct(F.col("obj").alias("term"), F.lit(0).alias("is_subj")),
-    )).alias("x")).select("x.term", "x.is_subj"))
-    nodes = (tagged.groupBy("term")
-             .agg(F.sum("is_subj").alias("out_degree"),
-                  F.sum(F.lit(1) - F.col("is_subj")).alias("in_degree"))
-             .select("term", kind.alias("kind"),
-                     "out_degree", "in_degree"))
-    edges = (quads
-             .where(~F.col("obj").startswith('"'))
-             .select(F.col("subj").alias("src"),
-                     F.col("pred").alias("rel"),
-                     F.col("obj").alias("dst"),
-                     "graph"))
-    return {"nodes": nodes, "edges": edges}

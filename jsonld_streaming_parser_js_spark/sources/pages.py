@@ -9,7 +9,8 @@ randomness — so that:
 1. the same pages are regenerated identically at any scale factor or
    parallelism (determinism invariant), and
 2. a DuckDB oracle can reconstruct the exact page/block/quad content from
-   the same parquet with plain SQL (see ``__spark_entry__.oracle_sql``).
+   the same parquet with plain SQL (the lane oracles in
+   ``tests/test_lane_oracles.py``).
 
 Each page embeds 1-3 ``<script type="application/ld+json">`` blocks drawn
 from fixture templates that exercise the kernel's feature families
@@ -123,57 +124,9 @@ def shared_org_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(shared_org_block_sql()).alias("block"))
 
 
-def adv_literal_block_sql(url: str = "url") -> str:
-    """Adversarial literal-content block: every string value contains
-    ESCAPED double quotes followed by ``@lang`` / ``^^<iri>`` byte
-    sequences (``\\"@en``, ``\\"^^<...>``) — the shapes that fool any
-    substring-based literal-kind classifier. After JSON unescape the
-    content holds real ``"`` chars, which the N-Triples serializer
-    re-escapes to ``\\"`` (reference: literal construction in
-    /root/reference/lib/Util.ts), so the emitted terms contain the
-    adversarial sequences *inside* literal content while the term still
-    ends with the true delimiter.
-
-    Backslashes are spelled ``chr(92)`` so the SAME expression string is
-    escape-processing-proof in both Spark SQL and DuckDB (Spark string
-    literals interpret backslashes; DuckDB's don't).
-    """
-    bs = " || chr(92) || "
-    return (
-        "'{\"@context\":{\"@vocab\":\"http://schema.org/\"},"
-        "\"@id\":\"' || " + url + " || '#e\","
-        # plain literal whose content contains \"@en  (NOT lang-tagged)
-        "\"comment\":\"say '" + bs + "'\"@en'" + bs + "'\" now ' || "
-        "CAST(doc_id AS STRING) || '\","
-        # plain literal whose content contains \"^^<iri>  (NOT typed)
-        "\"description\":\"num 7'" + bs + "'\"^^<http://x> end ' || "
-        "CAST(doc_id AS STRING) || '\","
-        # REALLY lang-tagged literal with escaped quotes in content
-        "\"name\":{\"@value\":\"real '" + bs + "'\"quoted'" + bs
-        + "'\" tag ' || CAST(doc_id AS STRING) || '\","
-        "\"@language\":\"en\"},"
-        # REALLY typed literal whose content fakes a datatype suffix
-        "\"weight\":{\"@value\":\"12'" + bs + "'\"^^<fake> ' || "
-        "CAST(doc_id AS STRING) || '\","
-        "\"@type\":\"http://ex.org/dt\"}}'"
-    )
-
-
-def adv_literal_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(url, blk, block) adversarial-literal fixture blocks, one per
-    ``doc_id % 25 == 0`` document — SQL-expressible so the DuckDB oracle
-    reconstructs the exact expected N-Triples terms (escapes included)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    adv_url = ("'https://adv.example.org/page/' || CAST(doc_id AS STRING)")
-    return (docs.where(F.expr("doc_id % 25 = 0"))
-            .select(F.expr(adv_url).alias("url"),
-                    F.lit(0).alias("blk"),
-                    F.expr(adv_literal_block_sql(adv_url)).alias("block")))
-
-
 def i18n_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(url, blk, block) frame of i18n fixture blocks — one per document,
-    SQL-expressible so the driver oracle can reconstruct expected quads."""
+    SQL-expressible so the lane oracle can reconstruct expected quads."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return docs.select(
         F.expr(page_url_sql()).alias("url"),
@@ -314,17 +267,3 @@ def pages_from_documents(spark: SparkSession, sf_dir: str,
         F.expr(text_sql(name_suffix)).alias("text"),
         F.col("lang"),
     )
-
-
-def duckdb_pages_cte(sf_dir: str) -> str:
-    """DuckDB CTE producing (url, text, lang, doc_id, n_chars) identical to
-    :func:`pages_from_documents` (html omitted: binary not needed by
-    oracles). Spark's ``chr(10)`` == DuckDB ``chr(10)``; ``%`` and ``||``
-    agree; CAST int->VARCHAR agrees."""
-    return f"""
-pages AS (
-  SELECT {page_url_sql("doc_id")} AS url,
-         doc_id, n_chars, lang,
-         {text_sql().replace("_url", page_url_sql("doc_id"))} AS text
-  FROM read_parquet('{sf_dir}/documents.parquet')
-)"""

@@ -29,7 +29,7 @@ def get_spark(app: str = "jsonld-kg", cores: int | None = None,
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # r8: AQE's 1 MB minimum coalesced-partition size serializes
         # CPU-heavy post-shuffle stages over byte-small intermediates
-        # (e.g. MinHash signatures over an aggregated feature table) on
+        # (e.g. a Python map over an aggregated feature table) on
         # ONE task; 256 KB keeps such stages parallel. Scale-neutral:
         # with real data volumes the parallelismFirst target
         # (total/defaultParallelism) dominates this floor anyway.

@@ -5,20 +5,18 @@ collapses inside the per-row kernel here (SURVEY.md section 1.2). What a
 *distributed* KG pipeline actually needs streamed is the corpus: new page
 files land continuously (a crawl), and quads should flow out incrementally
 with exactly-once file-level semantics. That's stock Structured Streaming:
-
-- ``stream_pages_to_quads``: ``readStream`` on the pages directory ->
-  the same fused extract+parse stage (stateless, so it runs unchanged in a
-  streaming plan) -> ``writeStream`` parquet with checkpointing. File-source
-  + checkpoint gives exactly-once at file granularity; the deterministic
-  skolemizer makes replays byte-identical, so downstream dedup stays cheap.
-- ``windowed_quad_rates``: event-time windowed aggregation with a watermark
-  over ``warc_ts`` (crawl time) — the late-data-tolerant metrics feed.
+``read_pages_stream`` (``readStream`` on the pages directory) ->
+``operators.parse.extract_and_parse`` (the fused extract+parse stage is
+stateless, so it runs unchanged in a streaming plan) ->
+``start_quads_sink`` (``writeStream`` parquet with checkpointing).
+File-source + checkpoint gives exactly-once at file granularity; the
+deterministic skolemizer makes replays byte-identical, so downstream dedup
+stays cheap.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as ST
 
 PAGES_SCHEMA = ST.StructType([
@@ -38,14 +36,6 @@ def read_pages_stream(spark: SparkSession, pages_dir: str,
         reader = reader.option("maxFilesPerTrigger",
                                str(max_files_per_trigger))
     return reader.load(pages_dir)
-
-
-def stream_pages_to_quads(pages_stream: DataFrame,
-                          ctx_cache: dict | None = None) -> DataFrame:
-    """Streaming DF of pages -> streaming DF of quad rows (stateless map,
-    no watermark needed; the kernel UDTF is reused verbatim)."""
-    from ..operators.parse import extract_and_parse
-    return extract_and_parse(pages_stream, ctx_cache)
 
 
 def start_memo_quads_sink(pages_stream: DataFrame, out_dir: str,
@@ -70,8 +60,8 @@ def start_memo_quads_sink(pages_stream: DataFrame, out_dir: str,
     def process(batch_df: DataFrame, _epoch_id: int) -> None:
         parsed = parse_blocks_memo(extract_blocks(batch_df), ctx_cache)
         (parsed.write.mode("append")
-         .option("compression", "zstd")  # same codec decision as the
-         .parquet(out_dir))              # batch quad sink (BENCH.md)
+         .option("compression", "zstd")  # same codec as the batch
+         .parquet(out_dir))              # quad sink (parquet_quad_sink)
 
     writer = (pages_stream.writeStream.foreachBatch(process)
               .option("checkpointLocation", checkpoint_dir))
@@ -94,116 +84,3 @@ def start_quads_sink(quads_stream: DataFrame, out_dir: str,
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def streaming_quad_rates(spark: SparkSession, pages: DataFrame,
-                         work_dir: str, ctx_cache: dict | None = None,
-                         window: str = "1 minute",
-                         watermark: str | None = "2 minutes",
-                         n_slices: int = 4,
-                         late_every: int | None = None) -> DataFrame:
-    """Bounded file-source run of the WATERMARKED windowed aggregation:
-    pages sliced into ``n_slices`` crawl-time-ordered files (mtime-ordered
-    micro-batches, like streaming_sessionize), parsed by the same fused
-    extract+parse stage, quads joined stream-static to the url->warc_ts
-    map, then ``windowed_quad_rates`` in APPEND mode — a window only
-    reaches the sink once the watermark passes it, so emitted rows are
-    FINAL (late data within the watermark would still be merged). A
-    sentinel page far past the last crawl timestamp advances the
-    watermark over every real window; the sentinel's own window stays
-    open and is never emitted. Returns the materialized (window_start,
-    n_quads) table.
-
-    ``late_every``: when set, a deterministic 1/late_every url subset of
-    each time range is DELAYED one micro-batch — those pages' event times
-    fall in windows already populated by earlier batches, but are still
-    within the watermark, so the stateful aggregation must MERGE them
-    before the window finalizes (the late-data path of the watermark
-    contract). Pass ``watermark=None`` to derive it from the corpus'
-    actual slice width (slice + window + slack) — the no-drop
-    precondition depends on the time span, which scales with document
-    count, so a fixed watermark would silently start dropping late rows
-    at larger scale factors. The value-hash oracle is the
-    order-independent batch aggregation over ALL pages, so any dropped
-    late row fails the lane."""
-    import os
-
-    from ..operators.parse import extract_and_parse
-    from .filesource import write_ordered_slices
-
-    out_schema = "window_start string, n_quads long"
-    # cache: the (generated, never-materialized) pages lineage is
-    # otherwise re-evaluated per slice write, per agg, and — via the
-    # stream-static ts_map — once per micro-batch
-    base = pages.cache()
-    lo, hi = base.agg(F.min("warc_ts"), F.max("warc_ts")).first()
-    if lo is None:
-        return spark.createDataFrame([], out_schema)
-    step = max(int(((hi - lo).total_seconds() + 1) // n_slices) + 1, 1)
-    if watermark is None:
-        # no-drop bound for one-batch lateness: a delayed row's window
-        # can lag the seen max event time by up to one slice width plus
-        # one window; +60 s slack for window-boundary truncation
-        watermark = f"{step + 120} seconds"
-    sel = (F.unix_timestamp("warc_ts") - F.unix_timestamp(F.lit(lo)))
-    sentinel_html = (b'<script type="application/ld+json">'
-                     b'{"@id": "http://sentinel.invalid/s",'
-                     b' "http://sentinel.invalid/p": "flush"}</script>')
-    sentinel = spark.createDataFrame(
-        [("stream://sentinel", None, bytearray(sentinel_html),
-          "", "en")], PAGES_SCHEMA).select(
-        "url",
-        (F.lit(hi) + F.expr("INTERVAL 7 DAYS")).alias("warc_ts"),
-        "html", "text", "lang")
-    def in_range(i):
-        return (sel >= i * step) & (sel < (i + 1) * step)
-
-    if late_every is None:
-        slices = [base.where(in_range(i)) for i in range(n_slices)]
-    else:
-        is_late = F.pmod(F.xxhash64("url"), F.lit(late_every)) == 0
-        # slice i = on-time rows of range i + the DELAYED rows of range
-        # i-1; the last range's delayed rows get their own extra slice
-        # (still before the sentinel that closes all real windows)
-        slices = [base.where((in_range(i) & ~is_late)
-                             | (in_range(i - 1) & is_late))
-                  for i in range(n_slices)]
-        slices.append(base.where(in_range(n_slices - 1) & is_late))
-    write_ordered_slices(slices + [sentinel],
-                         work_dir, os.path.join(work_dir, "input"))
-
-    ts_map = (base.unionByName(sentinel)
-              .select("url", "warc_ts").distinct())
-    in_dir = os.path.join(work_dir, "input")
-    stream = read_pages_stream(spark, in_dir, max_files_per_trigger=1)
-    quads = (extract_and_parse(stream, ctx_cache)
-             .where(F.col("error").isNull())
-             .join(F.broadcast(ts_map), "url"))
-    rates = windowed_quad_rates(quads, window, watermark)
-    out = (rates.select(
-        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss")
-        .alias("window_start"), "n_quads"))
-    out_dir = os.path.join(work_dir, "out")
-    q = (out.writeStream.format("parquet")
-         .option("path", out_dir)
-         .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
-         .outputMode("append")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    res = spark.read.parquet(out_dir).orderBy("window_start")
-    rows = res.collect()
-    base.unpersist()
-    return spark.createDataFrame(rows, res.schema)
-
-
-def windowed_quad_rates(quads_with_ts: DataFrame,
-                        window: str = "1 hour",
-                        watermark: str = "2 hours") -> DataFrame:
-    """Quads/hour by crawl-time window, tolerant of `watermark` lateness
-    (state for closed windows is dropped — bounded memory forever)."""
-    return (quads_with_ts
-            .withWatermark("warc_ts", watermark)
-            .groupBy(F.window("warc_ts", window).alias("w"))
-            .agg(F.count("*").alias("n_quads"))
-            .select(F.col("w.start").alias("window_start"), "n_quads"))

@@ -1,154 +1,20 @@
-"""RDFS entailment (operators/inference.py) + BGP matching
-(operators/bgp.py) unit tests on hand-built quad frames — exact row
-assertions, independent of the synthetic corpus (the corpus-level value
-check is the kg_rdfs_entailment / kg_bgp_query oracle lanes)."""
+"""BGP matching (operators/bgp.py) unit tests on hand-built quad frames —
+exact row assertions, independent of the synthetic corpus (the
+corpus-level value check is the kg_bgp_query lane in
+tests/test_lane_oracles.py)."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from jsonld_streaming_parser_js_spark.operators import bgp, inference
-from jsonld_streaming_parser_js_spark.operators.inference import (
-    DEFAULT_ONTOLOGY,
-    RDF_TYPE,
-    RDFS_DOMAIN,
-    RDFS_LABEL,
-    RDFS_SUBCLASS,
-    rdfs_entailment,
-    split_ontology,
-    transitive_closure,
-)
+from jsonld_streaming_parser_js_spark.operators import bgp
 
 S = "http://schema.org/"
+RDF_TYPE = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
 QUAD_SCHEMA = "subj string, pred string, obj string, graph string"
 
 
 def _quads_df(spark, rows):
     return spark.createDataFrame(rows, schema=QUAD_SCHEMA)
 
-
-HAND_QUADS = [
-    (f"<a>", RDF_TYPE, f"<{S}Article>", ""),
-    (f"<a>", f"<{S}author>", "<p1>", ""),
-    ("<p1>", f"<{S}name>", '"P1"', ""),
-    ("<x>", f"<{S}inLanguage>", '"en"', ""),
-    # named graph: inferred label must stay in <g>
-    ("<p1>", f"<{S}name>", '"G"@en', "<g>"),
-]
-
-
-def _entailed(spark, quads_rows=HAND_QUADS, ontology=DEFAULT_ONTOLOGY):
-    df = rdfs_entailment(_quads_df(spark, quads_rows), ontology)
-    return {(r.subj, r.pred, r.obj, r.graph): r.src for r in df.collect()}
-
-
-# ---------------------------------------------------------------- closure
-
-def test_transitive_closure_chain_and_cycle():
-    assert transitive_closure([("a", "b"), ("b", "c"), ("c", "d")]) == {
-        ("a", "b"), ("b", "c"), ("c", "d"),
-        ("a", "c"), ("b", "d"), ("a", "d")}
-    # cycle-safe: fixpoint terminates, includes the self-loops the
-    # cycle entails
-    cyc = transitive_closure([("a", "b"), ("b", "a")])
-    assert cyc == {("a", "b"), ("b", "a"), ("a", "a"), ("b", "b")}
-
-
-def test_split_ontology_rejects_instance_triples():
-    with pytest.raises(ValueError, match="non-RDFS"):
-        split_ontology([("<a>", RDF_TYPE, f"<{S}Article>")])
-
-
-def test_split_ontology_rejects_rdf_type_meta_constraints():
-    """Constraining rdf:type itself would feed inferred type triples
-    back into the property rules — single-pass composition would
-    silently under-entail, so the guard must raise."""
-    from jsonld_streaming_parser_js_spark.operators.inference import (
-        RDFS_RANGE, RDFS_SUBPROP)
-    with pytest.raises(ValueError, match="rdf:type"):
-        split_ontology([(RDF_TYPE, RDFS_SUBPROP, f"<{S}isA>")])
-    with pytest.raises(ValueError, match="rdf:type"):
-        split_ontology([(RDF_TYPE, RDFS_RANGE, f"<{S}Class>")])
-    with pytest.raises(ValueError, match="rdf:type"):
-        split_ontology([(RDF_TYPE, RDFS_DOMAIN, f"<{S}Thing>")])
-    # the SAFE direction (p subPropertyOf rdf:type) stays allowed:
-    # sp-lifted rows land in the subClassOf leg like asserted types
-    parts = split_ontology([(f"<{S}isA>", RDFS_SUBPROP, RDF_TYPE)])
-    assert parts["sp"] == {(f"<{S}isA>", RDF_TYPE)}
-
-
-def test_sp_into_rdf_type_feeds_subclass_rule(spark):
-    """(isA subPropertyOf rdf:type): isA assertions become type
-    assertions, which must then flow through the subClassOf closure."""
-    ont = [(f"<{S}isA>", "<http://www.w3.org/2000/01/rdf-schema#"
-            "subPropertyOf>", RDF_TYPE),
-           (f"<{S}Article>", RDFS_SUBCLASS, f"<{S}CreativeWork>")]
-    rows = [("<a>", f"<{S}isA>", f"<{S}Article>", "")]
-    got = _entailed(spark, rows, ont)
-    assert got[("<a>", RDF_TYPE, f"<{S}Article>", "")] == "inferred"
-    assert got[("<a>", RDF_TYPE, f"<{S}CreativeWork>", "")] == "inferred"
-
-
-# ----------------------------------------------------------- entailment
-
-def test_rdfs_rules_and_compositions(spark):
-    got = _entailed(spark)
-    # rdfs9 chain on the asserted type
-    assert got[("<a>", RDF_TYPE, f"<{S}CreativeWork>", "")] == "inferred"
-    assert got[("<a>", RDF_TYPE, f"<{S}Thing>", "")] == "inferred"
-    # rdfs3 -> rdfs9 composition: range gives Person, closure lifts it
-    assert got[("<p1>", RDF_TYPE, f"<{S}Person>", "")] == "inferred"
-    assert got[("<p1>", RDF_TYPE, f"<{S}Agent>", "")] == "inferred"
-    assert got[("<p1>", RDF_TYPE, f"<{S}Thing>", "")] == "inferred"
-    # rdfs7 two-level property chain
-    assert got[("<a>", f"<{S}contributor>", "<p1>", "")] == "inferred"
-    assert got[("<a>", "<http://purl.org/dc/terms/contributor>",
-                "<p1>", "")] == "inferred"
-    # rdfs7 on name -> rdfs:label, graph attribution preserved
-    assert got[("<p1>", RDFS_LABEL, '"P1"', "")] == "inferred"
-    assert got[("<p1>", RDFS_LABEL, '"G"@en', "<g>")] == "inferred"
-    # rdfs3 literal guard: inLanguage range must infer NOTHING
-    assert not any(o == f"<{S}Language>" for (_, _, o, _) in got)
-    # asserted facts keep their tag
-    assert got[("<a>", RDF_TYPE, f"<{S}Article>", "")] == "asserted"
-    # exact inventory: 5 asserted + 9 inferred
-    assert len(got) == 14
-    assert sum(1 for v in got.values() if v == "inferred") == 9
-
-
-def test_provenance_min_tag_prefers_asserted(spark):
-    rows = HAND_QUADS + [("<a>", RDF_TYPE, f"<{S}CreativeWork>", "")]
-    got = _entailed(spark, rows)
-    # derivable AND asserted -> asserted wins, exactly one row
-    assert got[("<a>", RDF_TYPE, f"<{S}CreativeWork>", "")] == "asserted"
-    assert len(got) == 15 - 1  # same fact set as before
-
-
-def test_ontology_as_dataframe_and_bound_guard(spark):
-    ont_df = spark.createDataFrame(
-        list(DEFAULT_ONTOLOGY), schema="subj string, pred string, obj string")
-    via_df = rdfs_entailment(_quads_df(spark, HAND_QUADS), ont_df)
-    via_seq = rdfs_entailment(_quads_df(spark, HAND_QUADS),
-                              DEFAULT_ONTOLOGY)
-    assert (sorted(map(tuple, via_df.collect()))
-            == sorted(map(tuple, via_seq.collect())))
-    with pytest.raises(ValueError, match="max_ontology_rows"):
-        rdfs_entailment(_quads_df(spark, HAND_QUADS), ont_df,
-                        max_ontology_rows=2)
-
-
-def test_empty_ontology_is_identity_all_asserted(spark):
-    got = _entailed(spark, ontology=[])
-    assert len(got) == len(HAND_QUADS)
-    assert set(got.values()) == {"asserted"}
-
-
-def test_duplicate_input_facts_collapse(spark):
-    rows = HAND_QUADS + [HAND_QUADS[0]]  # same fact twice (two pages)
-    got = _entailed(spark, rows)
-    assert len(got) == 14  # output is a fact SET
-
-
-# ------------------------------------------------------------------ BGP
 
 BGP_QUADS = [
     ("<a1>", RDF_TYPE, f"<{S}Article>", ""),
@@ -422,18 +288,6 @@ def test_bgp_construct_reshapes_and_drops_null_slots(spark):
                           [("?a", f"<{S}author>", "?p")], template=[])
 
 
-def test_bgp_over_entailed_kg_composition(spark):
-    """The serving story end-to-end: a query for CreativeWork finds
-    nothing on the raw KG and finds the Articles after RDFS
-    entailment — inference and query compose on the same quad frame."""
-    df = _quads_df(spark, HAND_QUADS)
-    pat = [("?x", RDF_TYPE, f"<{S}CreativeWork>")]
-    assert bgp.bgp_match(df, pat).count() == 0
-    ent = rdfs_entailment(df, DEFAULT_ONTOLOGY) \
-        .select("subj", "pred", "obj", "graph")
-    assert {r.x for r in bgp.bgp_match(ent, pat).collect()} == {"<a>"}
-
-
 def test_optional_group_chain_anchored_through_group_triple(spark):
     """OPTIONAL { ?p hasAddr ?addr . ?addr street ?st }: the second
     triple anchors through ?addr (another GROUP triple's var), not a
@@ -447,20 +301,6 @@ def test_optional_group_chain_anchored_through_group_triple(spark):
                    ("?addr", f"<{S}street>", "?st")]])
     assert {(r.a, r.addr, r.st) for r in out.collect()} == {
         ("<a1>", "<ad1>", '"Main St"'), ("<a2>", "<ad1>", '"Main St"')}
-
-
-def test_split_ontology_rejects_schema_predicate_sp_targets():
-    """A property mapped ONTO an RDFS schema predicate would emit
-    schema triples the driver-closed hierarchies never absorb — the
-    guard must refuse (silent under-entailment otherwise)."""
-    from jsonld_streaming_parser_js_spark.operators.inference import (
-        RDFS_SUBCLASS, RDFS_SUBPROP)
-    with pytest.raises(ValueError, match="schema predicate"):
-        split_ontology([(f"<{S}subsumes>", RDFS_SUBPROP, RDFS_SUBCLASS)])
-    with pytest.raises(ValueError, match="schema predicate"):
-        # reaches the target through the CLOSURE, not just directly
-        split_ontology([(f"<{S}a>", RDFS_SUBPROP, f"<{S}b>"),
-                        (f"<{S}b>", RDFS_SUBPROP, RDFS_SUBPROP)])
 
 
 def test_bgp_path_max_rounds_passthrough(spark):
@@ -485,24 +325,6 @@ def test_bgp_filter_with_all_ground_pattern(spark):
     miss = bgp.bgp_match(df, [("<p1>", f"<{S}name>", '"P1"')],
                          filters=["1 = 0"])
     assert miss.count() == 0
-
-
-def test_entailment_distributes_over_union(spark):
-    """Every rule has ONE data premise (the ontology is closed first),
-    so entailment distributes over corpus unions — the property that
-    makes incremental maintenance trivial: entail the new wave alone
-    and merge by the same min-tag groupBy."""
-    part_a = HAND_QUADS[:2]
-    part_b = HAND_QUADS[2:]
-    whole = _entailed(spark, HAND_QUADS)
-    ent_a = _entailed(spark, part_a)
-    ent_b = _entailed(spark, part_b)
-    merged: dict = {}
-    for d in (ent_a, ent_b):
-        for k, v in d.items():
-            # min-tag merge: asserted wins over inferred
-            merged[k] = v if merged.get(k) != "asserted" else "asserted"
-    assert merged == whole
 
 
 def test_bgp_input_validation(spark):

@@ -153,10 +153,9 @@ def test_streaming_memo_sink_matches_batch(spark, tmp_path):
     import os
     from jsonld_streaming_parser_js_spark.sources.pages import (
         pages_from_documents)
-    from jsonld_streaming_parser_js_spark.streaming.filesource import (
-        write_ordered_slices)
     from jsonld_streaming_parser_js_spark.streaming.stream import (
         read_pages_stream, start_memo_quads_sink)
+    from tests.kg_helpers import write_ordered_slices
     pages = pages_from_documents(spark, SF).cache()
     work = str(tmp_path)
     # 3 mtime-ordered micro-batches split by url hash

@@ -1,5 +1,5 @@
 """Pipeline-level Spark tests (sf0.001): determinism, byte-identical
-extraction, checkpoint-resume, canonicalization, graph views, errors.
+extraction, checkpoint-resume, canonicalization, errors.
 
 Mirrors the reference's end-to-end test layer (SURVEY.md section 5) at the
 pipeline granularity the reference doesn't have.
@@ -23,6 +23,7 @@ from jsonld_streaming_parser_js_spark.plans import lineage as lin
 from jsonld_streaming_parser_js_spark.plans import pipeline as pipe
 from jsonld_streaming_parser_js_spark.sources.pages import (
     CONTEXTS, pages_from_documents)
+from tests.kg_helpers import upsert_quads, write_ordered_slices
 
 SF = "/root/testdata/sf0.001"
 
@@ -33,10 +34,10 @@ def pages(spark):
 
 
 def test_entry_lanes_and_oracles_pair_up():
-    """Every lane in the entry module has a DuckDB oracle and every
-    oracle has a lane (no Spark session needed)."""
-    import __spark_entry__ as e
-    assert set(e.queries()) == set(e.oracle_sql())
+    """Every lane in tests/test_lane_oracles.py has a DuckDB oracle and
+    every oracle has a lane (no Spark session needed)."""
+    from tests.test_lane_oracles import LANES, ORACLES
+    assert set(LANES) == set(ORACLES) and len(LANES) == 12
 
 
 def test_byte_identical_extraction(spark, pages):
@@ -158,7 +159,7 @@ def test_upsert_wave_rewrites_only_affected_buckets(spark, pages):
                               .where(F.col("error").isNull())
                               .select("url", "blk", "subj", "pred",
                                       "obj", "graph").collect())))
-        want = set(map(tuple, lin.upsert_quads(
+        want = set(map(tuple, upsert_quads(
             pages_to_quads(pages, CONTEXTS),
             pages_to_quads(wave_pages, CONTEXTS)).collect()))
         assert got == want
@@ -226,19 +227,12 @@ def test_wave_keys_delete_zero_quad_pages(spark, pages):
     """Deletion-correctness for pages whose re-crawl yields ZERO quads
     (no JSON-LD blocks anymore / parse failure — extract emits nothing,
     so their urls never appear in the wave QUADS): with wave_keys (the
-    CRAWLED url set) the declarative upsert drops their stale quads,
-    wave_diff emits them as 'removed', and the physical upsert_wave
-    rewrites them out of the bucketed store."""
+    CRAWLED url set) wave_diff emits their stale quads as 'removed', and
+    the physical upsert_wave rewrites them out of the bucketed store."""
     base = pages_to_quads(pages, CONTEXTS)
     gone_url = base.select("url").first()["url"]
     empty_wave = base.limit(0)
     keys = spark.createDataFrame([(gone_url,)], "url string")
-
-    # declarative: the url's quads vanish only when keys are passed
-    with_keys = lin.upsert_quads(base, empty_wave, wave_keys=keys)
-    assert with_keys.where(F.col("url") == gone_url).count() == 0
-    without = lin.upsert_quads(base, empty_wave)
-    assert without.where(F.col("url") == gone_url).count() > 0
 
     # change feed: every old quad of the url emits as 'removed'
     d = lin.wave_diff(base, empty_wave, wave_keys=keys)
@@ -410,8 +404,6 @@ def test_streaming_diff_then_upsert_against_live_store(spark, pages):
     from jsonld_streaming_parser_js_spark.sources.pages import (
         pages_from_documents)
     from jsonld_streaming_parser_js_spark.streaming import stream as strm
-    from jsonld_streaming_parser_js_spark.streaming.filesource import (
-        write_ordered_slices)
 
     work = tempfile.mkdtemp(prefix="kg_live_feed_")
     out = os.path.join(work, "store")
@@ -475,9 +467,9 @@ def test_streaming_diff_then_upsert_against_live_store(spark, pages):
         # re-crawled page yielding quads (the zero-quad asymmetry
         # test_wave_keys_delete_zero_quad_pages demonstrates)
         base_q = pages_to_quads(pages, CONTEXTS)
-        want = set(map(tuple, lin.upsert_quads(
-            lin.upsert_quads(base_q, pages_to_quads(wave_a, CONTEXTS),
-                             wave_keys=wave_a.select("url")),
+        want = set(map(tuple, upsert_quads(
+            upsert_quads(base_q, pages_to_quads(wave_a, CONTEXTS),
+                         wave_keys=wave_a.select("url")),
             pages_to_quads(wave_b, CONTEXTS),
             wave_keys=wave_b.select("url")).collect()))
         assert got == want
@@ -486,34 +478,33 @@ def test_streaming_diff_then_upsert_against_live_store(spark, pages):
 
 
 def test_quad_sink_swap_is_config_only(spark, pages):
-    """Iceberg abstraction contract: the sink is the ONLY format-specific
-    step. A recording sink slotted where iceberg_quad_sink would go must
-    receive the sorted bucket-partitioned quads BEFORE lineage commits,
-    and the lineage/resume/verify machinery must work unchanged over
-    whatever the sink wrote."""
+    """The sink is the ONLY format-specific step of the commit. A
+    recording sink passed to write_bucketed must receive the sorted
+    bucket-partitioned quads BEFORE lineage commits, and the
+    lineage/resume/verify machinery must work unchanged over whatever
+    the sink wrote."""
     out = tempfile.mkdtemp(prefix="kg_sink_")
     calls = []
 
     def recording_sink(sorted_quads, out_dir):
-        # write parquet like the default, but RECORD the call contract —
-        # exactly what iceberg_quad_sink does via writeTo().
+        # write parquet like the default, but RECORD the call contract
         calls.append((sorted_quads.columns, out_dir,
                       os.path.exists(f"{out_dir}/lineage")))
         lin.parquet_quad_sink(sorted_quads, out_dir)
 
     try:
-        s = lin.run_with_resume(spark, pages, out, CONTEXTS, buckets=8,
-                                quad_sink=recording_sink)
+        commit = lin.write_bucketed(
+            lin.with_bucket(extract_and_parse(pages, CONTEXTS), 8), out,
+            quad_sink=recording_sink)
         assert len(calls) == 1
         cols, out_dir, lineage_existed_before_sink = calls[0]
         assert "bucket" in cols and out_dir == out
         # crash-safety ordering: quads sink FIRST, lineage commit after
         assert not lineage_existed_before_sink
-        assert s["buckets_done"] == 8
+        assert commit["buckets"] == 8
         assert lin.verify_lineage(spark, out).count() == 0
-        # the iceberg sink builds the same one-call contract (no catalog
-        # in this container: constructing it must not touch the session)
-        assert callable(lin.iceberg_quad_sink("cat.db.quads"))
+        s = lin.run_with_resume(spark, pages, out, CONTEXTS, buckets=8)
+        assert s["buckets_previously_done"] == 8
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
@@ -545,8 +536,9 @@ def test_run_in_waves_equals_single_shot(spark, pages):
 
 
 def test_canonicalization_merges_site_authors(spark, pages):
+    from tests.test_lane_oracles import cluster_summary
     quads = pages_to_quads(pages, CONTEXTS)
-    clusters = canon.cluster_summary(quads).collect()
+    clusters = cluster_summary(quads).collect()
     # 50 author entities, each minted under 7 site-local IRIs
     assert len(clusters) == 50
     assert all(r["n_members"] == 7 for r in clusters)
@@ -634,217 +626,6 @@ def test_aqe_skew_join_split_fires(spark):
             spark.conf.unset(k)
 
 
-def test_graph_views(spark, pages):
-    quads = pages_to_quads(pages, CONTEXTS).cache()
-    views = pipe.graph_views(quads)
-    nodes = views["nodes"]
-    kinds = {r["kind"] for r in nodes.select("kind").distinct().collect()}
-    assert "iri" in kinds and "literal" in kinds and "bnode" in kinds
-    edges = views["edges"]
-    assert edges.where(F.col("dst").startswith('"')).count() == 0
-    # every edge src appears as a node
-    missing = (edges.select(F.col("src").alias("term")).distinct()
-               .join(nodes, "term", "left_anti"))
-    assert missing.count() == 0
-    # degree values: the single-shuffle flag aggregation must equal the
-    # naive per-position counts (out = rows as subj, in = rows as obj)
-    got = {r["term"]: (r["out_degree"], r["in_degree"])
-           for r in nodes.collect()}
-    out_c = {r["subj"]: r["n"] for r in
-             quads.groupBy("subj").agg(F.count("*").alias("n")).collect()}
-    in_c = {r["obj"]: r["n"] for r in
-            quads.groupBy("obj").agg(F.count("*").alias("n")).collect()}
-    assert set(got) == set(out_c) | set(in_c)
-    for term, (o, i) in got.items():
-        assert o == out_c.get(term, 0) and i == in_c.get(term, 0)
-    # plan shape: exactly ONE shuffle over the term universe, no Union
-    # (a union would re-run the upstream parse subtree per branch)
-    p = (nodes._jdf.queryExecution().executedPlan().toString()
-         .split("== Initial Plan ==")[0])  # AQE repeats the pre-exec plan
-    term_ex = [ln for ln in p.splitlines()
-               if "Exchange hashpartitioning(term" in ln]
-    assert len(term_ex) == 1 and "Union" not in p, p[:2000]
-    quads.unpersist()
-
-
-def test_fuzzy_canonicalization_minhash(spark):
-    # coreferent nodes with OVERLAPPING (not identical) feature sets:
-    # exact-hash blocking misses these; MinHash-LSH + Jaccard verify links
-    # them; an unrelated node stays unlinked.
-    rows = []
-    feats_a = [f"<http://s.org/f{i}>=\"v{i}\"" for i in range(10)]
-    for node, feats in [
-        ("<http://a.org/alice>", feats_a),
-        ("<http://b.org/alice>", feats_a[:9] + ['<http://s.org/x>="y"']),
-        ("<http://c.org/carol>", [f"<http://s.org/g{i}>=\"w{i}\""
-                                  for i in range(10)]),
-    ]:
-        rows.append((node, feats))
-    features = spark.createDataFrame(rows, "node string, features array<string>")
-    edges = canon.candidate_edges_minhash(features, min_jaccard=0.5)
-    got = {(r["src"], r["dst"]) for r in edges.collect()}
-    assert ("<http://a.org/alice>", "<http://b.org/alice>") in got
-    assert all("carol" not in s and "carol" not in d for s, d in got)
-    comps = canon.connected_components(edges).collect()
-    labels = {r["node"]: r["component"] for r in comps}
-    assert labels["<http://a.org/alice>"] == labels["<http://b.org/alice>"]
-
-
-def test_fuzzy_canonical_chain_needs_cc_iteration(spark):
-    """The kg_canonical_fuzzy corpus (A-B-C chains, J(A,B)=J(B,C)=10/14,
-    J(A,C)=0.5 < the 0.6 threshold) must produce a candidate graph of
-    diameter >= 2 — i.e. hash-min CC genuinely iterates; a single
-    block-min pass would mislabel C. Also checks the mapping equals a
-    Python brute-force union-find over the realized edge list."""
-    import __spark_entry__ as e
-
-    quads = e._entity_quads(spark, "/root/testdata/sf0.001")
-    feats = canon.node_features(quads)
-    edges = canon.candidate_edges_minhash(feats, num_hashes=32, bands=16,
-                                          min_jaccard=0.6)
-    edge_list = [(r["src"], r["dst"]) for r in edges.collect()]
-    adj = {}
-    for s, d in edge_list:
-        adj.setdefault(s, set()).add(d)
-        adj.setdefault(d, set()).add(s)
-    # no A-C shortcut edge anywhere: every chain is a genuine path
-    assert edge_list, "no candidate edges realized"
-    assert all(not (s[-2] == "a" and d[-2] == "c") for s, d in edge_list)
-    # at least one full a-b-c path (diameter 2) exists
-    assert any(n.endswith("a>") and any(m.endswith("c>") for nb in adj[n]
-                                        for m in adj.get(nb, ()))
-               for n in adj), "no 2-hop chain realized"
-    # CC output == brute-force union-find ground truth
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for s, d in edge_list:
-        rs, rd = find(s), find(d)
-        if rs != rd:
-            parent[max(rs, rd)] = min(rs, rd)
-    truth = {n: find(n) for n in adj}
-    got = {r["node"]: r["component"]
-           for r in canon.connected_components(edges).collect()}
-    assert got == truth
-
-
-def test_cc_self_loops_and_duplicate_edges(spark):
-    """Caller self-loops and duplicated edges change nothing: one label
-    row per node, and the same components as the clean edge list. A
-    self-loop-only node labels itself."""
-    clean = [("b", "a"), ("c", "b"), ("x", "y"), ("m", "n")]
-    noisy = clean + [("b", "a"), ("a", "a"), ("c", "c"), ("q", "q")]
-    want = {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x",
-            "m": "m", "n": "m"}
-
-    def labels(e):
-        rows = canon.connected_components(
-            spark.createDataFrame(e, "src string, dst string")).collect()
-        assert len(rows) == len({r["node"] for r in rows})
-        return {r["node"]: r["component"] for r in rows}
-
-    assert labels(clean) == want
-    assert labels(noisy) == {**want, "q": "q"}
-
-
-def test_hash_min_cc_raises_past_max_iter(spark):
-    """A chain longer than max_iter hops must raise, not return partial
-    components."""
-    edges = spark.createDataFrame(
-        [(f"n{i}", f"n{i + 1}") for i in range(8)], "src string, dst string")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        canon.connected_components(edges, max_iter=3)
-
-
-def test_fuzzy_cc_diameter_bound(spark, pages):
-    """Measured justification for hash-min in fuzzy canonicalization:
-    LSH blocking only links near-duplicate feature sets, so
-    candidate components have tiny diameters — hash-min converges in a
-    handful of rounds on the real corpus."""
-    quads = pages_to_quads(pages, CONTEXTS)
-    feats = canon.node_features(quads)
-    edges = canon.candidate_edges_minhash(feats, min_jaccard=0.5)
-    st: dict = {}
-    canon.connected_components(edges, stats=st).count()
-    assert st["iterations"] <= 5
-
-
-def test_pagerank_mass_and_authority_ordering(spark):
-    """PageRank sanity on a known topology: a hub pointed at by many
-    nodes outranks its pointers; total rank mass stays in (0, 1] (no
-    dangling redistribution, documented convention); a chain's sink
-    accumulates more than its head."""
-    from jsonld_streaming_parser_js_spark.operators.graphalgo import (
-        pagerank)
-    e = ([(f"u{i}", "hub") for i in range(10)]
-         + [("a", "b"), ("b", "c")])
-    edges = spark.createDataFrame(e, "src string, dst string")
-    r = {row["node"]: row["rank"]
-         for row in pagerank(edges, iterations=5).collect()}
-    assert all(r["hub"] > r[f"u{i}"] for i in range(10))
-    assert r["c"] > r["a"]
-    assert 0 < sum(r.values()) <= 1.0 + 1e-9
-    # parallel-edge dedup convention: duplicated pairs change nothing
-    # (rounded: the doubled input can produce a different partial-agg
-    # merge tree, so exact fl-sum equality would be last-ulp flaky)
-    r2 = {row["node"]: round(row["rank"], 12) for row in
-          pagerank(edges.union(edges), iterations=5).collect()}
-    assert r2 == {k: round(v, 12) for k, v in r.items()}
-
-
-def test_pagerank_redistributed_sums_to_one_with_exact_oracle(spark):
-    """The dangling-mass redistribution variant (r7 verdict ask #6):
-    sink mass is spread uniformly each iteration, so the ranks form the
-    canonical probability distribution (sum == 1, vs < 1 under the
-    default drop convention), and the DuckDB oracle replays the exact
-    computation including the per-iteration dangling-mass CTE."""
-    import duckdb
-    from jsonld_streaming_parser_js_spark.operators.graphalgo import (
-        pagerank, pagerank_oracle_sql)
-    # 'hub' and 'c' are dangling sinks; 'z' only dangles after round 1
-    e = ([(f"u{i}", "hub") for i in range(6)]
-         + [("a", "b"), ("b", "c"), ("a", "z")])
-    edges = spark.createDataFrame(e, "src string, dst string")
-    pr = pagerank(edges, iterations=4, redistribute_dangling=True)
-    rows = pr.select("node", F.round("rank", 6).alias("r6"),
-                     "rank").collect()
-    assert abs(sum(r["rank"] for r in rows) - 1.0) < 1e-9
-    # and the default convention really does lose the sink mass
-    pr0 = pagerank(edges, iterations=4).agg(F.sum("rank")).first()[0]
-    assert pr0 < 0.9
-    values = ", ".join(f"('{s}', '{d}')" for s, d in e)
-    sql = pagerank_oracle_sql(
-        f"SELECT * FROM (VALUES {values}) AS t(src, dst)",
-        iterations=4, redistribute_dangling=True)
-    want = dict(duckdb.sql(sql).fetchall())
-    assert {r["node"]: r["r6"] for r in rows} == want
-
-
-def test_minhash_estimator_tracks_true_jaccard(spark):
-    """Guards the 2^31-1 modulus choice: with a near-monotone hash family
-    (the old 2^61-1 modulus over 31-bit hashes) signature agreement no
-    longer estimates Jaccard. 32-hash agreement at true J=10/14 must land
-    well inside (J +/- 0.25)."""
-    feats_a = [f'<http://s.org/f>="t{i}"' for i in range(12)]
-    feats_b = [f'<http://s.org/f>="t{i}"' for i in range(2, 14)]
-    features = spark.createDataFrame(
-        [("<http://x.org/a>", feats_a), ("<http://x.org/b>", feats_b)],
-        "node string, features array<string>")
-    edges = canon.candidate_edges_minhash(features, num_hashes=32,
-                                          bands=16, min_jaccard=0.6)
-    # J = 10/14 = 0.714 -> with a sound family the pair is found with
-    # p ~ 1 - (1-J^2)^16 ~ 0.99998; the broken family measured 2/32
-    # agreement and found nothing
-    assert [(r["src"], r["dst"]) for r in edges.collect()] == [
-        ("<http://x.org/a>", "<http://x.org/b>")]
-
-
 def test_extraction_tag_variants():
     from jsonld_streaming_parser_js_spark.operators.extract import (
         extract_blocks_from_html)
@@ -875,16 +656,17 @@ def test_strict_mode_fails_fast(spark, pages):
 
 
 def test_strict_values_driver_lane_fail_fast(spark):
-    """The kg_strict_errors corpus parses CLEAN in lenient mode (silent
-    drops) but trips job-level fail-fast in strict mode — the reference's
-    strictValues abort semantics at pipeline altitude."""
-    import __spark_entry__ as e
+    """The strict-mode corpus of the kg_error_channels lane parses CLEAN
+    in lenient mode (silent drops) but trips job-level fail-fast in
+    strict mode — the reference's strictValues abort semantics at
+    pipeline altitude."""
     from jsonld_streaming_parser_js_spark.functions.parser import (
         ParserOptions)
     from jsonld_streaming_parser_js_spark.operators.parse import (
         parse_blocks)
+    from tests.test_lane_oracles import strict_blocks
 
-    blocks = e._strict_blocks(spark, "/root/testdata/sf0.001")
+    blocks = strict_blocks(spark)
     lenient = parse_blocks(blocks, CONTEXTS)
     pipe.assert_no_errors(lenient)  # no raise: drops, not errors
     strict = parse_blocks(blocks, CONTEXTS,
@@ -987,120 +769,6 @@ def test_ndjson_blocks_line_numbering_and_blanks(spark):
         [("u2", '{"a":1}\r\n\r\n{"b":2}\r\n')], "url string, body string")
     rows = {(r["blk"], r["block"]) for r in ndjson_blocks(crlf).collect()}
     assert rows == {(0, '{"a":1}'), (2, '{"b":2}')}
-
-
-def test_nquads_roundtrip_adversarial(spark):
-    """from_nquads must invert to_nquads on the nastiest legal terms:
-    literals containing spaces, '<g>'-shaped text, ' .'-shaped tails and
-    bnode-like tails; datatyped/tagged literals; IRI and bnode graph
-    labels; default graph. Also checks the engine-parity claim directly:
-    DuckDB (RE2) extracts the SAME four groups from the same lines as
-    Spark (java.util.regex)."""
-    import duckdb
-
-    from jsonld_streaming_parser_js_spark.operators.serialize import (
-        NQUADS_STMT_RE, from_nquads, to_nquads)
-    rows = [
-        ("u", 0, "<s>", "<p>", "<o>", ""),
-        ("u", 0, "<s>", "<p>", "<o>", "<g>"),
-        ("u", 0, "<s>", "<p>", '"a b"', "_:g"),
-        ("u", 0, "<s>", "<p>", '"x _:b"', ""),
-        ("u", 0, "<s>", "<p>", '"trap <g> ."', ""),
-        ("u", 0, "<s>", "<p>", '"say \\"hi\\" now"', "<g>"),
-        ("u", 0, "<s>", "<p>", '"v"^^<http://t>', "<g>"),
-        ("u", 0, "<s>", "<p>", '"v"@en-US', ""),
-        ("u", 0, "_:b0", "<p>", "_:b1", "_:g2"),
-        ("u", 0, "<s>", "<p>", '"ends <g>"', ""),
-        ("u", 0, "<s>", "<p>", '"tail _:x"@en', ""),
-    ]
-    quads = spark.createDataFrame(
-        rows, "url string, blk int, subj string, pred string,"
-              " obj string, graph string")
-    lines = to_nquads(quads)
-    parsed = from_nquads(lines)
-    got = sorted(tuple(r) for r in
-                 parsed.select("subj", "pred", "obj", "graph").collect())
-    want = sorted((s, p, o, g) for _, _, s, p, o, g in rows)
-    assert got == want
-    assert all(r["ok"] for r in parsed.collect())
-    # cross-engine regex parity on the identical line strings
-    con = duckdb.connect()
-    for (line,) in ((r["line"],) for r in lines.collect()):
-        dd = con.execute(
-            "SELECT regexp_extract($l, $p, 1), regexp_extract($l, $p, 2),"
-            " regexp_extract($l, $p, 3), regexp_extract($l, $p, 4)",
-            {"l": line, "p": NQUADS_STMT_RE}).fetchone()
-        sp = [r for r in got if " ".join(
-            [r[0], r[1], r[2]] + ([r[3]] if r[3] else [])) + " ." == line]
-        assert sp and tuple(dd) == sp[0], (line, dd, sp)
-    # parity also on NON-canonical lines (external whitespace/comment
-    # forms and garbage): RE2 and java.util.regex must agree on both
-    # the match verdict and every capture
-    extern = ["<s>\t<p>\t<o>\t.", "  <s>  <p>  <o> <g> .  ",
-              "<s> <p> <o> . # provenance", "foo bar baz .",
-              '<s> <p> "unterminated .', '<s> <p> "x" extra .',
-              '<s> <p> "trap \\" <g> ."@en .',
-              # the \z-vs-$ engine divergence the r7 review caught:
-              # java.util.regex lets $ match BEFORE a final \r, RE2
-              # does not — \z makes both accept the CR line identically
-              "<s> <p> <cr> .\r", "<s> <p> <o> . # c\r", "<s><p><o>."]
-    sp_rows = {r["line"]: r for r in from_nquads(
-        spark.createDataFrame([(l,) for l in extern], "line string"))
-        .collect()}
-    for line in extern:
-        ok_dd, *dd = con.execute(
-            "SELECT regexp_matches($l, $p),"
-            " regexp_extract($l, $p, 1), regexp_extract($l, $p, 2),"
-            " regexp_extract($l, $p, 3), regexp_extract($l, $p, 4)",
-            {"l": line, "p": NQUADS_STMT_RE}).fetchone()
-        r = sp_rows[line]
-        assert (ok_dd, tuple(dd)) == (
-            r["ok"], (r["subj"], r["pred"], r["obj"], r["graph"])), line
-
-
-def test_from_nquads_error_channel(spark):
-    """Blank and comment lines are dropped (the grammar's only
-    non-statements); anything else malformed keeps its raw line with
-    ok=false instead of poisoning the parse. r7 review hardening: each
-    term position is shape-validated, so non-RDF garbage and truncated
-    literals are rejected, while spec-legal external forms (tabs,
-    multi-space, end-of-line comments) are accepted."""
-    from jsonld_streaming_parser_js_spark.operators.serialize import (
-        from_nquads)
-    lines = spark.createDataFrame(
-        [("<s> <p> <o> .",), ("",), ("   ",), ("# comment",),
-         ("not a statement",), ("<s> <p> .",),
-         # garbage that the old shape-agnostic regex let through
-         ("foo bar baz .",), ('<s> <p> "unterminated .',),
-         ('<s> <p> "x" extra .',), ("<s> \"notiri\" <o> .",),
-         # spec-legal external dump forms (other toolchains emit these)
-         ("<s>\t<p>\t<o>\t.",), ("  <s>  <p>  <o> <g> .  ",),
-         ("<s> <p> <o> . # provenance comment",),
-         ('<s> <p> "a b"@en-US . # trailing',),
-         # CRLF dump split on '\n' leaves a trailing \r; tab-blank and
-         # tab-indented comment lines are still non-statements
-         ("<s> <p> <cr> .\r",), ("\t",), ("\t# tab-indented comment",),
-         # documented limit: zero-space self-delimiting form is NOT
-         # ingested (separators required for provable engine parity)
-         ("<s><p><o>.",)],
-        "line string")
-    out = from_nquads(lines).collect()
-    flags = {r["line"].strip(): r["ok"] for r in out}
-    assert flags == {
-        "<s> <p> <o> .": True, "not a statement": False,
-        "<s> <p> .": False, "foo bar baz .": False,
-        '<s> <p> "unterminated .': False, '<s> <p> "x" extra .': False,
-        "<s> \"notiri\" <o> .": False,
-        "<s>\t<p>\t<o>\t.": True, "<s>  <p>  <o> <g> .": True,
-        "<s> <p> <o> . # provenance comment": True,
-        '<s> <p> "a b"@en-US . # trailing': True,
-        "<s> <p> <cr> .": True, "<s><p><o>.": False}
-    by_line = {r["line"].strip(): r for r in out}
-    tabbed = by_line["<s>\t<p>\t<o>\t."]
-    assert (tabbed["subj"], tabbed["pred"], tabbed["obj"],
-            tabbed["graph"]) == ("<s>", "<p>", "<o>", "")
-    commented = by_line['<s> <p> "a b"@en-US . # trailing']
-    assert (commented["obj"], commented["graph"]) == ('"a b"@en-US', "")
 
 
 def test_pages_to_quads_dedup_is_kernel_local(spark):

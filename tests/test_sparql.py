@@ -36,6 +36,16 @@ def _kg(spark):
     return spark.createDataFrame(KG, schema=QUAD_SCHEMA)
 
 
+def _fixture_quads(spark):
+    """The quads of the synthetic pages corpus (sources/pages.py)."""
+    from jsonld_streaming_parser_js_spark.operators.parse import (
+        pages_to_quads)
+    from jsonld_streaming_parser_js_spark.sources.pages import (
+        CONTEXTS, pages_from_documents)
+    from tests.test_spark_pipeline import SF
+    return pages_to_quads(pages_from_documents(spark, SF), CONTEXTS)
+
+
 PREFIXES = f"PREFIX schema: <{S}>\nPREFIX rdf: <{RDF}>\n"
 
 
@@ -242,8 +252,7 @@ def test_graph_patterns_var_and_iri(spark):
 def test_graph_var_on_fixture_named_graphs(spark):
     """The real corpus's language-labeled entities live in per-page
     named graphs (<url#g>) — GRAPH ?g must surface exactly those."""
-    import __spark_entry__ as e
-    kg = (e._quads(spark, "/root/testdata/sf0.001")
+    kg = (_fixture_quads(spark)
           .select("subj", "pred", "obj", "graph").distinct()
           .localCheckpoint())
     got = sparql_query(kg, PREFIXES + """
@@ -440,8 +449,8 @@ def test_sparql_against_fixture_kg_matches_lane_shape(spark):
     """The lane's author conjunction expressed as SPARQL text must
     reproduce the kg_bgp_query shape='authors' rows on the real
     corpus."""
-    import __spark_entry__ as e
-    kg = (e._quads(spark, "/root/testdata/sf0.001")
+    from tests.test_lane_oracles import LANES
+    kg = (_fixture_quads(spark)
           .select("subj", "pred", "obj", "graph").distinct()
           .localCheckpoint())
     got = sparql_query(kg, PREFIXES + """
@@ -450,7 +459,7 @@ def test_sparql_against_fixture_kg_matches_lane_shape(spark):
         ?a schema:author ?p .
         ?p schema:name ?n .
       }""")
-    lane = (e.queries()["kg_bgp_query"](spark, "/root/testdata/sf0.001")
+    lane = (LANES["kg_bgp_query"](spark, None)
             .where("shape = 'authors'").select("v1", "v2", "v3"))
     assert (sorted(map(tuple, got.collect()))
             == sorted(map(tuple, lane.collect())))

@@ -7,8 +7,8 @@ regresses (a plan-shape unit test, runnable in CI):
   kernel-local) — extract+parse is a narrow fused stage
 - commit: one hash Exchange on bucket (one file per bucket); the lineage
   aggregate reuses it
-- graph views, canonicalization, memo, N-Quads round-trip, wave diff,
-  RDFS entailment and BGP: the join/shuffle shapes each relies on
+- canonical relabel, memo, wave diff and BGP: the join/shuffle shapes
+  each relies on
 """
 
 from __future__ import annotations
@@ -39,7 +39,8 @@ def _shuffles(p: str) -> int:
 
 
 def main() -> None:
-    import __spark_entry__ as e
+    from jsonld_streaming_parser_js_spark.operators import (
+        canonicalize as canon)
     from jsonld_streaming_parser_js_spark.operators.parse import (
         extract_and_parse, pages_to_quads)
     from jsonld_streaming_parser_js_spark.plans import lineage as lin
@@ -52,11 +53,12 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     checks: list[tuple[str, bool, str]] = []
+    quads_df = pages_to_quads(pages_from_documents(spark, sf), CONTEXTS)
 
     def check(name: str, cond: bool, evidence: str) -> None:
         checks.append((name, cond, evidence))
 
-    p = plan_of(pages_to_quads(pages_from_documents(spark, sf), CONTEXTS))
+    p = plan_of(quads_df)
     scan_lines = [ln.strip() for ln in p.splitlines() if "FileScan" in ln]
     check("parse: docs scan pruned",
           any("doc_id" in ln and "html" not in ln for ln in scan_lines),
@@ -108,52 +110,10 @@ def main() -> None:
           f"({commit_key}), lineage x{_shuffles(p_lin)} "
           "(the commit's, cached)")
 
-    # graph nodes view: both degree counts from ONE shuffle over the term
-    # universe (explode + single groupBy; was distinct + 2 groupBys +
-    # 2 joins = 3 term Exchanges), and a single lineage (no union that
-    # would run the parse subtree twice).
-    from jsonld_streaming_parser_js_spark.plans.pipeline import graph_views
-    p = plan_of(graph_views(pages_to_quads(
-        pages_from_documents(spark, sf), CONTEXTS))["nodes"])
-    term_ex = [ln.strip() for ln in p.splitlines()
-               if "Exchange hashpartitioning(term" in ln]
-    check("graph nodes: ONE term shuffle, single lineage",
-          len(term_ex) == 1 and _shuffles(p) == 1
-          and "Union" not in p,
-          f"term Exchange x{len(term_ex)}, hash/range Exchange "
-          f"x{_shuffles(p)} (degree agg only; r8: the quads-dedup "
-          f"Exchange is gone — dedup is kernel-local), "
-          f"Union x{p.count('Union')}")
-
-    # fuzzy canonicalization: the MinHash banding must reach the candidate
-    # join as an EQUI-join on (band, bucket) — never all-pairs — and the
-    # CC loop's per-iteration localCheckpoint must keep the FINAL mapping
-    # plan flat (scan of checkpointed RDD, not an n-deep join tree).
-    from jsonld_streaming_parser_js_spark.operators import (
-        canonicalize as canon)
-    feats = canon.node_features(e._entity_quads(spark, sf))
-    p = plan_of(canon.candidate_edges_minhash(feats, num_hashes=32,
-                                              bands=16, min_jaccard=0.6))
-    check("canonical fuzzy: banded candidate equi-join, never all-pairs",
-          "CartesianProduct" not in p
-          and "BroadcastNestedLoopJoin" not in p
-          and ("SortMergeJoin" in p or "ShuffledHashJoin" in p
-               or "BroadcastHashJoin" in p),
-          f"SMJ x{p.count('SortMergeJoin')}, "
-          f"BHJ x{p.count('BroadcastHashJoin')}, cartesian x0")
-    mapping = canon.canonical_mapping_fuzzy(
-        e._entity_quads(spark, sf), min_jaccard=0.6,
-        num_hashes=32, bands=16)
-    p = plan_of(mapping)
-    check("canonical fuzzy: CC iterations truncated by localCheckpoint",
-          "Scan ExistingRDD" in p and p.count("Join") <= 2,
-          f"ExistingRDD scan={'Scan ExistingRDD' in p}, "
-          f"joins in final plan x{p.count('Join')}")
-
     # canonical relabel: the mapping join carries NO forced broadcast hint
     # (unbounded at web scale -> OOM risk); the small-mapping case must
     # still broadcast, chosen by AQE at runtime. Execute to finalize AQE.
-    q = e._q_kg_quads_canonical(spark, sf)
+    q = canon.relabel_quads(quads_df, canon.canonical_mapping(quads_df))
     q.collect()
     p = plan_of(q)
     check("canonical relabel: AQE broadcasts small mapping (no forced hint)",
@@ -182,20 +142,6 @@ def main() -> None:
           f"SMJ x{p.count('SortMergeJoin')}, cartesian x0 "
           "(hit join + fallback semi-join, both on md5(block))")
 
-    # N-Quads round-trip: serialize + re-parse are narrow maps — the
-    # composed plan must add ZERO Exchanges over the bare quad pipeline
-    # (the regexp split never shuffles; ingestion of a 100 TB dump is a
-    # pure scan)
-    from jsonld_streaming_parser_js_spark.operators.serialize import (
-        from_nquads, to_nquads)
-    quads_df = e._quads(spark, sf)
-    p_base = plan_of(quads_df)
-    p_rt = plan_of(from_nquads(to_nquads(quads_df)))
-    check("nquads round-trip: parse adds zero Exchange over the quads",
-          p_rt.count("Exchange") == p_base.count("Exchange"),
-          f"Exchange x{p_rt.count('Exchange')} vs base "
-          f"x{p_base.count('Exchange')}")
-
     # wave_diff change feed: O(wave) by plan — (a) the cut expression
     # (the SHIPPED _wave_url_cut, pre-checkpoint) restricts base to the
     # wave's url set with a LeftSemi join; (b) the final diff plan reads
@@ -204,9 +150,7 @@ def main() -> None:
     # goes cartesian
     from jsonld_streaming_parser_js_spark.plans.lineage import (
         _wave_url_cut, wave_diff)
-    from jsonld_streaming_parser_js_spark.sources.pages import (
-        pages_from_documents)
-    _quads_df = e._quads(spark, sf).localCheckpoint()
+    _quads_df = quads_df.localCheckpoint()
     _wave_pages = pages_from_documents(
         spark, sf, doc_filter="doc_id % 3 = 0", name_suffix=" v2")
     _wave_df = pages_to_quads(_wave_pages, CONTEXTS).localCheckpoint()
@@ -221,34 +165,6 @@ def main() -> None:
           f"{'ExistingRDD' in p}, cartesian x{p.count('Cartesian')}, "
           f"BNLJ x{p.count('BroadcastNestedLoopJoin')}")
 
-    # RDFS entailment: every rule joins the corpus against the tiny
-    # CLOSED ontology — joins must ALL be broadcast (the corpus side is
-    # never shuffled for a rule), the base parse materializes exactly
-    # once (ExistingRDD), and the whole materialization pays ONE data
-    # shuffle (the dedupe/provenance groupBy). The plan TEXT replicates
-    # the broadcast probes across rule branches (allp feeds four legs;
-    # Spark shares exchanges, not arbitrary subplans) — every replica
-    # is a map-side hash probe over the one checkpointed base, so the
-    # BHJ count is recorded as evidence, not pinned
-    from jsonld_streaming_parser_js_spark.operators.inference import (
-        DEFAULT_ONTOLOGY, rdfs_entailment)
-    p = plan_of(rdfs_entailment(e._quads(spark, sf), DEFAULT_ONTOLOGY))
-    # count real shuffle nodes only: 'Exchange hashpartitioning' lines
-    # that are not Reused* references (a ReusedExchange of a broadcast
-    # probe must not count as a data shuffle)
-    n_shuffle = sum(1 for ln in p.splitlines()
-                    if "Exchange hashpartitioning" in ln
-                    and "Reused" not in ln)
-    # r8: for bounded ontologies the rules COMPILE AWAY (inline literal
-    # emission maps, operators/inference._entail_inline): ZERO joins of
-    # any kind, one scan, one shuffle. The broadcast-join shape remains
-    # the large-ontology fallback and keeps its own twin tests.
-    check("rdfs entailment: zero joins (compiled rules), ONE data shuffle",
-          "Join" not in p and "Cartesian" not in p
-          and "Generate" in p and n_shuffle == 1,
-          f"joins x{p.count('Join')}, Generate (rule explode) "
-          f"x{p.count('Generate')}, shuffle Exchange x{n_shuffle}")
-
     # BGP over a parquet-backed quad store (the serving path): each
     # pattern leg is its own predicate-pushed scan — every scan's
     # PushedFilters bracket must carry the pred constant (bracket
@@ -257,10 +173,11 @@ def main() -> None:
     from jsonld_streaming_parser_js_spark.operators import bgp as _bgp
     _bgpd = tempfile.mkdtemp(prefix="audit_bgp_")
     try:
-        (e._quads(spark, sf).select("subj", "pred", "obj", "graph")
+        (quads_df.select("subj", "pred", "obj", "graph")
          .write.mode("overwrite").parquet(_bgpd))
         q = _bgp.bgp_match(spark.read.parquet(_bgpd), [
-            ("?a", f"<{e.RDF_NS}type>", "<http://schema.org/Article>"),
+            ("?a", "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>",
+             "<http://schema.org/Article>"),
             ("?a", "<http://schema.org/author>", "?p"),
             ("?p", "<http://schema.org/name>", "?n"),
         ])
