@@ -29,7 +29,7 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--memo", action="store_true",
                     help="distinct-block parse memo: one kernel call per "
                          "DISTINCT block (worth it when the crawl repeats "
-                         "site-template blocks; break-even ~50x dup)")
+                         "site-template blocks)")
     ap.add_argument("--snapshot-id", default="",
                     help="input table version tag recorded in lineage; "
                          "resume refuses a mismatched snapshot")
@@ -77,7 +77,7 @@ def main(argv: list[str] | None = None) -> None:
         lin.run_in_waves(spark, pages, args.out, ctx_cache,
                          buckets=args.buckets, waves=args.waves,
                          rdf_direction=args.rdf_direction,
-                         snapshot_id=args.snapshot_id)
+                         snapshot_id=args.snapshot_id, memo=args.memo)
     cfg = PipelineConfig(out_dir=args.out, buckets=args.buckets,
                          canonicalize=args.canonicalize,
                          rdf_direction=args.rdf_direction,

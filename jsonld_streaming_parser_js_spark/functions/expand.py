@@ -27,7 +27,6 @@ from .context import (
     as_list,
     expand_iri,
     has_keyword_form,
-    is_keyword,
     process_context,
 )
 

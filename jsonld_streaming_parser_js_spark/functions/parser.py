@@ -1,20 +1,19 @@
 """Top-level JSON-LD 1.1 -> RDF quads entry point (pure Python).
 
 ``jsonld_to_quads`` is the per-document kernel the Spark pipeline invokes
-inside ``mapInPandas`` workers: parse -> expand -> node map -> quads,
-mirroring the reference's end-to-end behavior
+inside the workers of its ``mapInArrow`` parse stage: parse -> expand ->
+node map -> quads, mirroring the reference's end-to-end behavior
 (``/root/reference/lib/JsonLdParser.ts`` lifecycle) in non-streaming mode.
 """
 
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field, fields, replace
+from dataclasses import dataclass, field, fields
 from typing import Any
 
 from .context import (
     FLAGS,
-    Context,
     JsonLdError,
     KernelFlags,
     initial_context,

@@ -55,7 +55,7 @@ from pyspark.sql import types as ST
 from ..functions.context import validate_context_cache
 from ..functions.parser import parse_block
 from ..functions.to_rdf import skolemize_label
-from .parse import QUAD_SCHEMA, parse_blocks, quads_only  # noqa: F401
+from .parse import parse_blocks
 
 # Reserved-TLD (`.invalid`, RFC 2606) placeholder base: no real crawl URL
 # can share its authority, so its host appearing in an output term is an
@@ -210,13 +210,3 @@ def parse_blocks_memo(blocks: DataFrame, ctx_cache: dict | None = None,
                             parser_options)
     return hits.unionByName(fallback)
 
-
-def pages_to_quads_memo(pages: DataFrame, ctx_cache: dict | None = None,
-                        rdf_direction: str | None = None) -> DataFrame:
-    """pages -> deduplicated quads via the distinct-block memo (twin of
-    :func:`..operators.parse.pages_to_quads`)."""
-    from .extract import extract_blocks
-    parsed = parse_blocks_memo(extract_blocks(pages), ctx_cache,
-                               rdf_direction)
-    return quads_only(parsed).dropDuplicates(
-        ["url", "blk", "subj", "pred", "obj", "graph"])

@@ -1,9 +1,12 @@
 """Distributed JSON-LD -> quads parse stage.
 
-One ``mapInPandas`` UDTF applies the pure-Python kernel
-(:mod:`..functions.parser`) to each extracted block: 1 block row in ->
-n quad rows out (the reference's whole Transform-stream pipeline,
+One ``mapInArrow`` runner (:func:`_parse_stage`) applies the pure-Python
+kernel (:mod:`..functions.parser`) to each block: 1 block row in -> n quad
+rows out (the reference's whole Transform-stream pipeline,
 ``/root/reference/lib/JsonLdParser.ts``, collapsed into a per-row kernel).
+Every parse entry point — the fused :func:`extract_and_parse`, the
+block-level :func:`parse_blocks` and ``operators/responses.parse_responses``
+— is a thin caller that only says where each batch's blocks come from.
 
 Scale design:
 - **No shuffle**: extract -> parse is a narrow chain; Catalyst fuses it into
@@ -22,12 +25,14 @@ Scale design:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
+from itertools import repeat
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as ST
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions.context import validate_context_cache
 from ..functions.parser import parse_block
@@ -41,37 +46,7 @@ QUAD_SCHEMA = ST.StructType([
     ST.StructField("graph", ST.StringType()),
     ST.StructField("error", ST.StringType()),
 ])
-
-
-def rows_from_results(results) -> pd.DataFrame:
-    """(url, blk, quads, error) tuples -> one QUAD_SCHEMA pandas frame.
-
-    The single emit protocol shared by every mapInPandas parse runner
-    (parse_blocks here, operators/responses.parse_responses): quad rows
-    carry error NULL; a failed block yields exactly one row with the error
-    set and NULL terms."""
-    out: dict[str, list] = {k: [] for k in
-                            ("url", "blk", "subj", "pred", "obj",
-                             "graph", "error")}
-    for url, blk, quads, err in results:
-        if err is not None:
-            out["url"].append(url)
-            out["blk"].append(blk)
-            out["subj"].append(None)
-            out["pred"].append(None)
-            out["obj"].append(None)
-            out["graph"].append(None)
-            out["error"].append(err)
-            continue
-        for s, p, o, g in quads:
-            out["url"].append(url)
-            out["blk"].append(blk)
-            out["subj"].append(s)
-            out["pred"].append(p)
-            out["obj"].append(o)
-            out["graph"].append(g)
-            out["error"].append(None)
-    return pd.DataFrame(out)
+_ARROW_QUAD_SCHEMA = to_arrow_schema(QUAD_SCHEMA)
 
 
 def ensure_map_parallelism(df: DataFrame, factor: int = 1) -> DataFrame:
@@ -87,42 +62,94 @@ def ensure_map_parallelism(df: DataFrame, factor: int = 1) -> DataFrame:
     has enough partitions (at production scale a corpus scan has
     thousands of splits, so this never fires there); otherwise pays one
     cheap round-robin exchange of the raw input rows (kilobytes when it
-    fires, deterministic via Spark's sort-before-repartition)."""
+    fires, deterministic via Spark's sort-before-repartition).
+
+    The partition count is only read off a physical plan with no
+    exchange, where building the RDD runs no job. A plan with an
+    exchange (a resume's anti-join, a join's output) or a subquery is
+    returned unchanged: its RDD would execute the upstream stages once
+    for the probe and again for the real action."""
     if df.isStreaming:
         return df
-    target = df.sparkSession.sparkContext.defaultParallelism * factor
-    try:
-        n = df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover — exotic plans; never fatal
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if "Exchange" in plan or "Subquery" in plan:
         return df
-    if n >= target:
+    target = df.sparkSession.sparkContext.defaultParallelism * factor
+    if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+# (url, blk, block, root context, gate error) — one block to parse
+BlockRow = tuple
+
+
+def _parse_stage(df: DataFrame, block_rows: Callable[[pa.RecordBatch],
+                                                     Iterable[BlockRow]],
+                 ctx_cache: dict | None, rdf_direction: str | None = None,
+                 parser_options=None, dedup_blocks: bool = False
+                 ) -> DataFrame:
+    """The one parse-emit protocol: ``block_rows(batch)`` names the blocks
+    of each Arrow input batch; each is parsed by ``parse_block`` and
+    emitted as QUAD_SCHEMA rows. Quad rows carry error NULL; a failed
+    block — or one whose gate error is set, which is never parsed —
+    yields exactly one row with the error set and NULL terms.
+
+    ``dedup_blocks`` collapses duplicate quad emissions within each block
+    (ordered-set semantics, first occurrence kept; see
+    :func:`extract_and_parse`)."""
+    validate_context_cache(ctx_cache or {})  # fail ONCE at the driver
+    bc = df.sparkSession.sparkContext.broadcast(ctx_cache or {})
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        cache = bc.value
+        for batch in batches:
+            cols = tuple([] for _ in QUAD_SCHEMA)
+            urls, blks, subj_l, pred_l, obj_l, graph_l, err_l = cols
+            for url, blk, block, context, err in block_rows(batch):
+                if err is None:
+                    quads, err = parse_block(block, url, blk, cache,
+                                             rdf_direction, context=context,
+                                             parser_options=parser_options)
+                if err is not None:
+                    for col, v in zip(cols, (url, blk, None, None, None,
+                                             None, err)):
+                        col.append(v)
+                    continue
+                if dedup_blocks and len(quads) > 1:
+                    quads = list(dict.fromkeys(quads))
+                n = len(quads)
+                urls.extend([url] * n)
+                blks.extend([blk] * n)
+                err_l.extend([None] * n)
+                for s, p, o, g in quads:
+                    subj_l.append(s)
+                    pred_l.append(p)
+                    obj_l.append(o)
+                    graph_l.append(g)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type)
+                 for c, f in zip(cols, _ARROW_QUAD_SCHEMA)],
+                schema=_ARROW_QUAD_SCHEMA)
+
+    return df.mapInArrow(run, QUAD_SCHEMA)
 
 
 def parse_blocks(blocks: DataFrame, ctx_cache: dict | None = None,
                  rdf_direction: str | None = None,
                  parser_options=None) -> DataFrame:
     """blocks(url, blk, block) -> raw rows(url, blk, subj, pred, obj, graph,
-    error) per the rows_from_results protocol. ``parser_options`` is the
+    error) per the :func:`_parse_stage` protocol. ``parser_options`` is the
     behavior-flag template (e.g. strict_values=True turns lenient drops
     into error-channel rows); it is broadcast-safe (a plain dataclass)."""
-    spark = blocks.sparkSession
-    validate_context_cache(ctx_cache or {})  # fail ONCE at the driver
-    bc = spark.sparkContext.broadcast(ctx_cache or {})
+    def block_rows(batch: pa.RecordBatch) -> Iterator[BlockRow]:
+        return zip(*(batch.column(c).to_pylist()
+                     for c in ("url", "blk", "block")),
+                   repeat(None), repeat(None))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache = bc.value
-        for batch in batches:
-            yield rows_from_results(
-                (url, blk, *parse_block(block, url, int(blk), cache,
-                                        rdf_direction,
-                                        parser_options=parser_options))
-                for url, blk, block in zip(batch["url"].tolist(),
-                                           batch["blk"].tolist(),
-                                           batch["block"].tolist()))
-
-    return ensure_map_parallelism(blocks).mapInPandas(run, QUAD_SCHEMA)
+    return _parse_stage(
+        ensure_map_parallelism(blocks.select("url", "blk", "block")),
+        block_rows, ctx_cache, rdf_direction, parser_options)
 
 
 def quads_only(parsed: DataFrame) -> DataFrame:
@@ -133,7 +160,7 @@ def quads_only(parsed: DataFrame) -> DataFrame:
 def extract_and_parse(pages: DataFrame, ctx_cache: dict | None = None,
                       rdf_direction: str | None = None,
                       dedup_blocks: bool = False) -> DataFrame:
-    """Fused extract+parse: ONE ``mapInPandas`` stage over pages.
+    """Fused extract+parse: ONE ``mapInArrow`` stage over pages.
 
     Halves the JVM<->Python Arrow crossings vs extract_blocks ->
     parse_blocks (pages cross once; quads come back once; the intermediate
@@ -155,65 +182,16 @@ def extract_and_parse(pages: DataFrame, ctx_cache: dict | None = None,
     dict per block.
     """
     from .extract import extract_blocks_from_html
-    spark = pages.sparkSession
-    validate_context_cache(ctx_cache or {})  # fail ONCE at the driver
-    bc = spark.sparkContext.broadcast(ctx_cache or {})
 
-    import pyarrow as pa
+    def block_rows(batch: pa.RecordBatch) -> Iterator[BlockRow]:
+        for url, html in zip(batch.column("url").to_pylist(),
+                             batch.column("html").to_pylist()):
+            for blk, block in enumerate(extract_blocks_from_html(html)):
+                yield url, blk, block, None, None
 
-    arrow_schema = pa.schema([
-        ("url", pa.string()), ("blk", pa.int32()),
-        ("subj", pa.string()), ("pred", pa.string()),
-        ("obj", pa.string()), ("graph", pa.string()),
-        ("error", pa.string()),
-    ])
-
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        cache = bc.value
-        for batch in batches:
-            urls: list = []
-            blks: list = []
-            cols: tuple = ([], [], [], [], [])  # subj pred obj graph error
-            subj_l, pred_l, obj_l, graph_l, err_l = cols
-            for url, html in zip(batch.column("url").to_pylist(),
-                                 batch.column("html").to_pylist()):
-                for blk, block in enumerate(extract_blocks_from_html(html)):
-                    quads, err = parse_block(block, url, blk, cache,
-                                             rdf_direction)
-                    if dedup_blocks and len(quads) > 1:
-                        # ordered-set collapse (JSON-LD set semantics);
-                        # block-local by construction — see docstring
-                        quads = list(dict.fromkeys(quads))
-                    if err is not None:
-                        urls.append(url)
-                        blks.append(blk)
-                        subj_l.append(None)
-                        pred_l.append(None)
-                        obj_l.append(None)
-                        graph_l.append(None)
-                        err_l.append(err)
-                        continue
-                    n = len(quads)
-                    urls.extend([url] * n)
-                    blks.extend([blk] * n)
-                    for s, p, o, g in quads:
-                        subj_l.append(s)
-                        pred_l.append(p)
-                        obj_l.append(o)
-                        graph_l.append(g)
-                    err_l.extend([None] * n)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()),
-                 pa.array(blks, pa.int32()),
-                 pa.array(subj_l, pa.string()),
-                 pa.array(pred_l, pa.string()),
-                 pa.array(obj_l, pa.string()),
-                 pa.array(graph_l, pa.string()),
-                 pa.array(err_l, pa.string())],
-                schema=arrow_schema)
-
-    return (ensure_map_parallelism(pages.select("url", "html"))
-            .mapInArrow(run, QUAD_SCHEMA))
+    return _parse_stage(ensure_map_parallelism(pages.select("url", "html")),
+                        block_rows, ctx_cache, rdf_direction,
+                        dedup_blocks=dedup_blocks)
 
 
 def pages_to_quads(pages: DataFrame, ctx_cache: dict | None = None,

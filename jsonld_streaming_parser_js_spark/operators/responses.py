@@ -23,13 +23,11 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.context import validate_context_cache
-from ..functions.parser import parse_block
-from .parse import QUAD_SCHEMA, rows_from_results
+from .parse import BlockRow, _parse_stage
 
 JSONLD_CONTEXT_REL = "http://www.w3.org/ns/json-ld#context"
 DEFAULT_WELL_KNOWN = ("application/activity+json",)
@@ -90,26 +88,13 @@ def parse_responses(responses: DataFrame, ctx_cache: dict | None = None,
                     ignore_missing_context_link_header: bool = False,
                     rdf_direction: str | None = None) -> DataFrame:
     """responses -> parsed rows (QUAD_SCHEMA): gate, then kernel parse with
-    the per-response Link-header context as the root context."""
+    the per-response Link-header context as the root context; a gated-out
+    response is one error row and is never parsed."""
     gated = gate_responses(responses, well_known_media_types,
                            ignore_missing_context_link_header)
-    spark = responses.sparkSession
-    validate_context_cache(ctx_cache or {})  # fail ONCE at the driver
-    bc = spark.sparkContext.broadcast(ctx_cache or {})
 
-    def result_of(url, blk, block, ctx_iri, gate_err):
-        if gate_err is not None:
-            return url, blk, [], gate_err
-        return (url, blk,
-                *parse_block(block, url, int(blk), bc.value,
-                             rdf_direction, context=ctx_iri))
+    def block_rows(batch: pa.RecordBatch) -> Iterator[BlockRow]:
+        return zip(*(batch.column(c).to_pylist() for c in
+                     ("url", "blk", "block", "ctx_iri", "error")))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            yield rows_from_results(
-                result_of(url, blk, block, ctx_iri, err)
-                for url, blk, block, ctx_iri, err in zip(
-                    batch["url"], batch["blk"], batch["block"],
-                    batch["ctx_iri"], batch["error"]))
-
-    return gated.mapInPandas(run, QUAD_SCHEMA)
+    return _parse_stage(gated, block_rows, ctx_cache, rdf_direction)

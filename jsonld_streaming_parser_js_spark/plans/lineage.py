@@ -89,14 +89,6 @@ def _read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
         raise
 
 
-def completed_buckets(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """Buckets whose lineage row exists (i.e. committed)."""
-    lineage = _read_lineage(spark, out_dir)
-    if lineage is None:
-        return None
-    return lineage.select("bucket").distinct()
-
-
 def parquet_quad_sink(sorted_quads: DataFrame, out_dir: str) -> None:
     """The quad sink: parquet + dynamic partition overwrite (idempotent
     per-bucket re-runs).
@@ -448,7 +440,7 @@ def run_with_resume(spark: SparkSession, pages: DataFrame, out_dir: str,
                     ctx_cache: dict, buckets: int = 64,
                     rdf_direction: str | None = None,
                     snapshot_id: str = "",
-                    memo: bool | str = False) -> dict:
+                    memo: bool = False) -> dict:
     """Process only urls in not-yet-committed buckets; returns stats.
 
     ``pages -> filter(uncommitted bucket) -> extract+parse -> write``.
@@ -461,13 +453,8 @@ def run_with_resume(spark: SparkSession, pages: DataFrame, out_dir: str,
     ``memo=True`` parses via the distinct-block memo (operators/memo.py)
     — same output protocol including the error channel, one kernel call
     per distinct block; worth it when the crawl repeats site-template
-    blocks (measured break-even ~50x duplication). ``memo='auto'``
-    (r7) decides from the data: one cheap approx-distinct agg over the
-    extracted blocks measures the duplication ratio and memoizes iff it
-    clears the measured break-even — both regimes produce identical
-    output (pytest: test_build_kg_memo_auto_*)."""
-    from ..operators.parse import extract_and_parse
-
+    blocks. Otherwise the fused ``extract_and_parse`` stage parses every
+    block occurrence."""
     pages_b = with_bucket(pages, buckets)
     check_snapshot(spark, out_dir, snapshot_id)
     # the one lineage read: prior totals for the stats, and the committed
@@ -482,72 +469,45 @@ def run_with_resume(spark: SparkSession, pages: DataFrame, out_dir: str,
         done = lineage.select("bucket").distinct()
         pages_b = pages_b.join(F.broadcast(done), "bucket", "left_anti")
 
-    memo_ratio = None
-    blocks = None
-    if memo == "auto":
-        from ..operators.extract import extract_blocks
-        from ..operators.memo import should_memoize
-        # extract ONCE: the pre-pass agg and the chosen parse path share
-        # one materialized block table (localCheckpoint) instead of
-        # running the extraction regex over the crawl twice
-        blocks = extract_blocks(pages_b).localCheckpoint()
-        memo, memo_ratio = should_memoize(blocks)
     if memo:
         from ..operators.extract import extract_blocks
         from ..operators.memo import parse_blocks_memo
-        if blocks is None:
-            blocks = extract_blocks(pages_b)
-        parsed = parse_blocks_memo(blocks, ctx_cache, rdf_direction)
-    elif blocks is not None:
-        # auto decided against the memo: parse the already-materialized
-        # blocks (same output protocol as the fused extract_and_parse)
-        from ..operators.parse import parse_blocks
-        parsed = parse_blocks(blocks, ctx_cache, rdf_direction)
+        parsed = parse_blocks_memo(extract_blocks(pages_b), ctx_cache,
+                                   rdf_direction)
     else:
+        from ..operators.parse import extract_and_parse
         parsed = extract_and_parse(pages_b, ctx_cache, rdf_direction)
-    parsed_b = with_bucket(parsed, buckets)
-    commit = write_bucketed(parsed_b, out_dir, snapshot_id)
-    stats = {"buckets_total": buckets,
-             "buckets_previously_done": prior["buckets"],
-             "buckets_done": prior["buckets"] + commit["buckets"],
-             "n_quads": prior["n_quads"] + commit["n_quads"],
-             "n_errors": prior["n_errors"] + commit["n_errors"],
-             "memo_used": bool(memo)}
-    if memo_ratio is not None:
-        stats["memo_duplication_ratio"] = round(memo_ratio, 2)
-    return stats
+    commit = write_bucketed(with_bucket(parsed, buckets), out_dir,
+                            snapshot_id)
+    return {"buckets_total": buckets,
+            "buckets_previously_done": prior["buckets"],
+            "buckets_done": prior["buckets"] + commit["buckets"],
+            "n_quads": prior["n_quads"] + commit["n_quads"],
+            "n_errors": prior["n_errors"] + commit["n_errors"]}
 
 
 def run_in_waves(spark: SparkSession, pages: DataFrame, out_dir: str,
                  ctx_cache: dict, buckets: int = 64,
                  waves: int = 4,
                  rdf_direction: str | None = None,
-                 snapshot_id: str = "") -> list[dict]:
+                 snapshot_id: str = "",
+                 memo: bool = False) -> list[dict]:
     """Process the corpus in `waves` independently-committed bucket ranges.
 
-    Each wave write+commit is atomic at the wave level, so a crash between
-    waves leaves a committed prefix that the next invocation's
-    ``run_with_resume`` skips — the operational checkpoint cadence for
-    multi-day 100 TB backfills (waves ~ hours, recovery loses at most one
-    wave).
+    Each wave is one ``run_with_resume`` over the pages of its bucket
+    range, so its write+commit is atomic at the wave level: a crash
+    between waves leaves a committed prefix that the next invocation
+    skips — the operational checkpoint cadence for multi-day 100 TB
+    backfills (waves ~ hours, recovery loses at most one wave).
     """
-    from ..operators.parse import extract_and_parse
-
     stats = []
-    pages_b = with_bucket(pages, buckets)
     per_wave = (buckets + waves - 1) // waves
-    check_snapshot(spark, out_dir, snapshot_id)
-    done = completed_buckets(spark, out_dir)
     for w in range(waves):
         lo, hi = w * per_wave, min((w + 1) * per_wave, buckets)
-        wave_pages = pages_b.where(F.col("bucket").between(lo, hi - 1))
-        if done is not None:
-            wave_pages = wave_pages.join(F.broadcast(done), "bucket",
-                                         "left_anti")
-        parsed = with_bucket(
-            extract_and_parse(wave_pages.drop("bucket"), ctx_cache,
-                              rdf_direction), buckets)
-        write_bucketed(parsed, out_dir, snapshot_id)
+        wave_pages = pages.where(bucket_expr("url", buckets)
+                                 .between(lo, hi - 1))
+        run_with_resume(spark, wave_pages, out_dir, ctx_cache, buckets,
+                        rdf_direction, snapshot_id, memo)
         stats.append({"wave": w, "buckets": [lo, hi]})
     return stats
 

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import canonicalize as canon
-from ..operators.parse import extract_and_parse, quads_only
+from ..operators.parse import quads_only
 from . import lineage as lin
 
 
@@ -29,9 +29,7 @@ class PipelineConfig:
     rdf_direction: str | None = None
     ctx_cache: dict = field(default_factory=dict)
     snapshot_id: str = ""  # input table version tag recorded in lineage
-    # distinct-block parse memo (operators/memo.py): False / True /
-    # "auto" (measure the duplication ratio, memoize past break-even)
-    memo: bool | str = False
+    memo: bool = False  # distinct-block parse memo (operators/memo.py)
 
 
 def build_kg(spark: SparkSession, pages: DataFrame,

@@ -38,38 +38,6 @@ def read_pages_stream(spark: SparkSession, pages_dir: str,
     return reader.load(pages_dir)
 
 
-def start_memo_quads_sink(pages_stream: DataFrame, out_dir: str,
-                          checkpoint_dir: str,
-                          ctx_cache: dict | None = None,
-                          available_now: bool = True):
-    """Streaming x memo composition: each micro-batch of pages runs the
-    distinct-block parse memo (operators/memo.py) via ``foreachBatch`` —
-    the memo's distinct/join machinery is unsupported inside a streaming
-    plan, but a micro-batch is a plain DataFrame, so the batch operator
-    applies verbatim. Per-site template duplication concentrates WITHIN
-    a crawl wave, so the memo's hit rate inside one micro-batch matches
-    the batch case.
-
-    Delivery: foreachBatch is at-least-once under retries; the
-    deterministic skolemizer makes replays byte-identical, so the
-    standard downstream 6-column dedup restores exactly-once semantics
-    (same contract as the batch pipeline's idempotent bucket re-runs)."""
-    from ..operators.extract import extract_blocks
-    from ..operators.memo import parse_blocks_memo
-
-    def process(batch_df: DataFrame, _epoch_id: int) -> None:
-        parsed = parse_blocks_memo(extract_blocks(batch_df), ctx_cache)
-        (parsed.write.mode("append")
-         .option("compression", "zstd")  # same codec as the batch
-         .parquet(out_dir))              # quad sink (parquet_quad_sink)
-
-    writer = (pages_stream.writeStream.foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def start_quads_sink(quads_stream: DataFrame, out_dir: str,
                      checkpoint_dir: str, available_now: bool = True):
     """writeStream -> parquet with checkpoint; availableNow drains the

@@ -103,11 +103,13 @@ def _kg_quads_memo(spark, work):
     corpus (7 distinct blocks, with an anonymous member node) checks the
     per-(url, blk) skolem-prefix rewrite across occurrences."""
     from jsonld_streaming_parser_js_spark.operators.memo import (
-        pages_to_quads_memo, parse_blocks_memo)
+        parse_blocks_memo)
     from jsonld_streaming_parser_js_spark.sources.pages import (
         shared_org_blocks)
-    pages_leg = (pages_to_quads_memo(_pages(spark), CONTEXTS)
-                 .withColumn("corpus", F.lit("pages")))
+    pages_leg = (quads_only(
+        parse_blocks_memo(extract_blocks(_pages(spark)), CONTEXTS))
+        .dropDuplicates(["url", "blk", "subj", "pred", "obj", "graph"])
+        .withColumn("corpus", F.lit("pages")))
     shared_leg = (quads_only(
         parse_blocks_memo(shared_org_blocks(spark, SF), {}))
         .withColumn("corpus", F.lit("shared")))

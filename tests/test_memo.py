@@ -112,83 +112,33 @@ def test_run_with_resume_memo_twin(spark, tmp_path):
     assert outs[True][1] > 0  # error channel present through the memo
 
 
-def test_build_kg_memo_auto_picks_by_measured_duplication(spark, tmp_path):
-    """memo='auto' (r7 verdict ask #5): the duplication pre-pass turns
-    the memo ON for a high-dup corpus and OFF for the standard low-dup
-    pages, and the committed store is value-identical either way."""
-    from jsonld_streaming_parser_js_spark.plans import lineage as lin
-    from jsonld_streaming_parser_js_spark.sources.pages import (
-        pages_from_documents, shared_org_blocks)
-
-    # low-dup: the standard pages corpus (every block embeds its url) —
-    # auto must NOT memoize, and the store equals the plain-parse store
-    pages = pages_from_documents(spark, SF)
-    out_auto = str(tmp_path / "auto_low")
-    stats = lin.run_with_resume(spark, pages, out_auto, CONTEXTS,
-                                buckets=8, memo="auto")
-    assert stats["memo_used"] is False
-    assert stats["memo_duplication_ratio"] < memo.MEMO_BREAK_EVEN_DUPLICATION
-    out_plain = str(tmp_path / "plain_low")
-    lin.run_with_resume(spark, pages, out_plain, CONTEXTS, buckets=8)
-    cols = ["url", "blk", "subj", "pred", "obj", "graph", "error"]
-    a = set(map(tuple, spark.read.parquet(f"{out_auto}/quads")
-                .select(*cols).collect()))
-    b = set(map(tuple, spark.read.parquet(f"{out_plain}/quads")
-                .select(*cols).collect()))
-    assert a == b and len(a) > 3000
-
-    # high-dup decision: 500 pages / 7 distinct templates (~71x) clears
-    # the ~50x break-even (decision-level check on the shared pre-pass;
-    # memo-vs-plain value identity at the store level is
-    # test_run_with_resume_memo_twin)
-    blocks = shared_org_blocks(spark, SF)
-    on, ratio = memo.should_memoize(blocks)
-    assert on and ratio > memo.MEMO_BREAK_EVEN_DUPLICATION
-
-
-def test_streaming_memo_sink_matches_batch(spark, tmp_path):
-    """The memo parse composed into Structured Streaming (foreachBatch
-    per micro-batch) must produce exactly the batch memo/plain result
-    across micro-batch boundaries."""
-    import os
-    from jsonld_streaming_parser_js_spark.sources.pages import (
-        pages_from_documents)
-    from jsonld_streaming_parser_js_spark.streaming.stream import (
-        read_pages_stream, start_memo_quads_sink)
-    from tests.kg_helpers import write_ordered_slices
-    pages = pages_from_documents(spark, SF).cache()
-    work = str(tmp_path)
-    # 3 mtime-ordered micro-batches split by url hash
-    part = F.pmod(F.xxhash64("url"), F.lit(3))
-    write_ordered_slices([pages.where(part == i) for i in range(3)],
-                         work, os.path.join(work, "input"))
-    stream = read_pages_stream(spark, os.path.join(work, "input"),
-                               max_files_per_trigger=1)
-    q = start_memo_quads_sink(stream, os.path.join(work, "out"),
-                              os.path.join(work, "ckpt"), CONTEXTS)
-    q.awaitTermination(180)
-    got = set(map(tuple, spark.read.parquet(os.path.join(work, "out"))
-                  .select("url", "blk", "subj", "pred", "obj", "graph",
-                          "error").collect()))
-    want = set(map(tuple,
-                   memo.parse_blocks_memo(
-                       _std_blocks(spark, pages), CONTEXTS).collect()))
-    assert got == want and len(got) > 3000
-    pages.unpersist()
-
-
-def _std_blocks(spark, pages):
+def test_should_memoize_picks_by_measured_duplication(spark):
+    """The duplication pre-pass: 500 pages / 7 distinct templates (~71x)
+    clear the ~50x break-even; the standard pages, where every block
+    embeds its url, do not (memo-vs-plain value identity at the store
+    level is test_run_with_resume_memo_twin)."""
     from jsonld_streaming_parser_js_spark.operators.extract import (
         extract_blocks)
-    return extract_blocks(pages)
+    from jsonld_streaming_parser_js_spark.sources.pages import (
+        pages_from_documents)
+    on, ratio = memo.should_memoize(shared_org_blocks(spark, SF))
+    assert on and ratio > memo.MEMO_BREAK_EVEN_DUPLICATION
+    on, ratio = memo.should_memoize(
+        extract_blocks(pages_from_documents(spark, SF)))
+    assert not on and ratio < memo.MEMO_BREAK_EVEN_DUPLICATION
 
 
 def test_memo_pages_twin_matches_plain(spark):
+    """The memo parse of the standard pages, deduplicated like the plain
+    pages_to_quads, equals it."""
+    from jsonld_streaming_parser_js_spark.operators.extract import (
+        extract_blocks)
     from jsonld_streaming_parser_js_spark.operators.parse import (
-        pages_to_quads)
+        pages_to_quads, quads_only)
     from jsonld_streaming_parser_js_spark.sources.pages import (
         pages_from_documents)
     pages = pages_from_documents(spark, SF)
-    a = set(map(tuple, memo.pages_to_quads_memo(pages, CONTEXTS).collect()))
+    a = set(map(tuple, quads_only(memo.parse_blocks_memo(
+        extract_blocks(pages), CONTEXTS)).collect()))
     b = set(map(tuple, pages_to_quads(pages, CONTEXTS).collect()))
     assert a == b and len(a) > 3000

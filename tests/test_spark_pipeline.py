@@ -519,20 +519,68 @@ def test_resume_skips_completed_buckets(spark, pages):
         shutil.rmtree(out, ignore_errors=True)
 
 
-def test_run_in_waves_equals_single_shot(spark, pages):
-    out = tempfile.mkdtemp(prefix="kg_waves_")
+def test_run_in_waves_equals_single_shot(spark, pages, monkeypatch):
+    """Waves commit through run_with_resume, plain or memoized: with
+    memo=True every wave takes the memo parse, and either way the store
+    equals the single-shot parse."""
+    from jsonld_streaming_parser_js_spark.operators import memo
+    memo_calls = []
+    real_memo = memo.parse_blocks_memo
+
+    def counting_memo(*args, **kwargs):
+        memo_calls.append(1)
+        return real_memo(*args, **kwargs)
+
+    monkeypatch.setattr(memo, "parse_blocks_memo", counting_memo)
+    clean = set(map(tuple,
+                    pages_to_quads(pages, CONTEXTS)
+                    .select("subj", "pred", "obj", "graph").collect()))
+    for use_memo in (False, True):
+        out = tempfile.mkdtemp(prefix="kg_waves_")
+        try:
+            lin.run_in_waves(spark, pages, out, CONTEXTS, buckets=16,
+                             waves=3, memo=use_memo)
+            assert len(memo_calls) == (3 if use_memo else 0)
+            waved = set(map(tuple,
+                            pipe.quads_table(spark, out)
+                            .select("subj", "pred", "obj", "graph")
+                            .collect()))
+            assert waved == clean
+            assert lin.verify_lineage(spark, out).count() == 0
+        finally:
+            shutil.rmtree(out, ignore_errors=True)
+
+
+def test_map_parallelism_probe_runs_no_job(spark, tmp_path):
+    """ensure_map_parallelism decides without executing anything: on a
+    join-rooted frame (a resume's broadcast anti-join) it launches no
+    Spark job and returns the frame as it is; on a one-partition scan
+    the floor still fires and adds its round-robin Exchange."""
+    from jsonld_streaming_parser_js_spark.operators.parse import (
+        ensure_map_parallelism)
+    path = str(tmp_path / "one_file")
+    (spark.range(2000).selectExpr("CAST(id AS STRING) AS url")
+     .coalesce(1).write.parquet(path))
+    scan = spark.read.parquet(path)
+    assert scan.rdd.getNumPartitions() == 1
+    spark.createDataFrame([(0,), (3,)], "bucket long").write.parquet(
+        str(tmp_path / "done"))
+    done = spark.read.parquet(str(tmp_path / "done"))
+    joined = (lin.with_bucket(scan, 8)
+              .join(F.broadcast(done), "bucket", "left_anti"))
+    sc = spark.sparkContext
+    sc.setJobGroup("map-parallelism-probe", "probe")
     try:
-        lin.run_in_waves(spark, pages, out, CONTEXTS, buckets=16, waves=3)
-        waved = set(map(tuple,
-                        pipe.quads_table(spark, out)
-                        .select("subj", "pred", "obj", "graph").collect()))
-        clean = set(map(tuple,
-                        pages_to_quads(pages, CONTEXTS)
-                        .select("subj", "pred", "obj", "graph").collect()))
-        assert waved == clean
-        assert lin.verify_lineage(spark, out).count() == 0
+        probed = ensure_map_parallelism(joined, factor=2)
     finally:
-        shutil.rmtree(out, ignore_errors=True)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(
+        "map-parallelism-probe") == []
+    assert probed is joined
+    floored = ensure_map_parallelism(scan, factor=2)
+    plan = floored._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" in plan, plan
+    assert floored.rdd.getNumPartitions() >= 2
 
 
 def test_canonicalization_merges_site_authors(spark, pages):
