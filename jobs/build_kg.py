@@ -27,9 +27,10 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--waves", type=int, default=1)
     ap.add_argument("--canonicalize", action="store_true")
     ap.add_argument("--memo", action="store_true",
-                    help="distinct-block parse memo: one kernel call per "
-                         "DISTINCT block (worth it when the crawl repeats "
-                         "site-template blocks)")
+                    help="block memo in the parse stage: one kernel call "
+                         "per distinct block per partition, no shuffle "
+                         "(worth it when the crawl repeats site-template "
+                         "blocks)")
     ap.add_argument("--snapshot-id", default="",
                     help="input table version tag recorded in lineage; "
                          "resume refuses a mismatched snapshot")

@@ -30,6 +30,7 @@ from .to_rdf import (
     apply_default_graph,
     emit_quads,
     generate_node_map,
+    skolemize_label,
     skolemize_quads,
 )
 
@@ -183,3 +184,70 @@ def parse_block(block_text: str, url: str, blk: int,
             skolemize_quads(quads, url, blk), default_graph), None
     except Exception as exc:  # noqa: BLE001 — same backstop for skolemizer
         return [], f"internal error: {type(exc).__name__}: {exc}"
+
+
+# --- block memo ------------------------------------------------------------
+# A block is parsed once under a placeholder base and reused for every
+# occurrence when the parse is provably base-independent. Reserved-TLD
+# (`.invalid`, RFC 2606) placeholder: no real crawl URL shares its
+# authority, so its host in an output term marks base-dependence.
+MEMO_URL = "https://jsonld-memo-placeholder.invalid/base"
+MEMO_HOST = "jsonld-memo-placeholder.invalid"
+# skolem namespace the placeholder parse emits: 's<md5(MEMO_URL)[:16]>x0'
+MEMO_LABEL = skolemize_label(MEMO_URL, 0)
+MEMO_BNODE_PREFIX = "_:" + MEMO_LABEL + "x"
+# entries per block memo; a full memo is cleared (one re-parse per
+# template block per clear)
+MEMO_MAX_BLOCKS = 4096
+
+
+def is_memoizable(quads: list[Quad], err: str | None) -> bool:
+    """A placeholder parse is reusable iff it did not fail (an error may
+    depend on what a relative context IRI resolved to), no term resolved
+    against the placeholder base, and the placeholder label occurs only
+    as THE prefix of plain bnode terms (not inside quoted triples or
+    literals), which the prefix relabel rewrites soundly."""
+    if err is not None:
+        return False
+    for quad in quads:
+        for t in quad:
+            if MEMO_HOST in t:
+                return False
+            if MEMO_LABEL in t and not (
+                    t.startswith(MEMO_BNODE_PREFIX)
+                    and MEMO_LABEL not in t[len(MEMO_BNODE_PREFIX):]):
+                return False
+    return True
+
+
+def relabel_memo(quads: list[Quad], url: str, blk: int) -> list[Quad]:
+    """Placeholder skolem prefix -> the ``(url, blk)`` prefix: exact
+    prefix surgery, the rule of ``operators/memo._rewrite_prefix``."""
+    bp = "_:" + skolemize_label(url, blk) + "x"
+    n = len(MEMO_BNODE_PREFIX)
+    return [tuple(bp + t[n:] if t.startswith(MEMO_BNODE_PREFIX) else t
+                  for t in q) for q in quads]
+
+
+def parse_block_memo(memo: dict, block_text: str, url: str, blk: int,
+                     ctx_cache: dict | None = None,
+                     rdf_direction: str | None = None,
+                     parser_options: ParserOptions | None = None
+                     ) -> tuple[list[Quad], str | None]:
+    """:func:`parse_block` through ``memo`` (block text -> placeholder
+    quads, or None for a non-memoizable block): a miss parses under
+    ``MEMO_URL`` and classifies; a memoizable block is relabeled to
+    ``(url, blk)``, any other is parsed per occurrence. The key is the
+    block text alone, so the root context must not vary per call."""
+    if block_text not in memo:
+        if len(memo) >= MEMO_MAX_BLOCKS:
+            memo.clear()
+        quads, err = parse_block(block_text, MEMO_URL, 0, ctx_cache,
+                                 rdf_direction,
+                                 parser_options=parser_options)
+        memo[block_text] = quads if is_memoizable(quads, err) else None
+    quads = memo[block_text]
+    if quads is None:
+        return parse_block(block_text, url, blk, ctx_cache, rdf_direction,
+                           parser_options=parser_options)
+    return relabel_memo(quads, url, blk), None

@@ -72,13 +72,3 @@ def ndjson_blocks(docs: DataFrame, url_col: str = "url",
                     .alias("blk", "block"))
             .where(F.trim(F.col("block")) != ""))
 
-
-def extracted_text(pages: DataFrame) -> DataFrame:
-    """Reassembled text per url (newline-joined payloads) — checked
-    byte-identical against the ``text`` column (input_hint invariant)."""
-    return (pages
-            .select("url", "text",
-                    _extract_udf("html").alias("blocks"))
-            .select("url", "text",
-                    F.array_join("blocks", "\n").alias("extracted"))
-            .withColumn("match", F.col("text") == F.col("extracted")))

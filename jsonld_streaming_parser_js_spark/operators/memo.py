@@ -1,46 +1,30 @@
-"""Distinct-block parse memo: dedupe-before-parse.
+"""Shuffle memo: parse each distinct block once, across the corpus.
 
-Real crawls repeat identical JSON-LD blocks across thousands of pages per
-site (the same Organization/WebSite schema block on every page of a host).
-The kernel parse is the pipeline's dominant cost (~80k quads/s/core), so
-parsing each *distinct* block exactly once is the single biggest
-real-world throughput lever above the per-core kernel plateau. This is
-the Spark-shaped analog of the reference processing each document once —
-there a crawl driver would deduplicate upstream; here it's an operator.
+The build does NOT use this module. ``run_with_resume(memo=True)`` parses
+through the in-worker block memo of the one Arrow parse stage
+(``operators/parse.extract_and_parse(memo=True)``, kernel side in
+``functions/parser.parse_block_memo``), which adds no shuffle.
+:func:`should_memoize`, :func:`parse_distinct_blocks` and
+:func:`parse_blocks_memo` stay only for the benchmark's traced sweep
+(``kgbench/layers.py``) and the tests.
 
 Mechanics (all post-parse work is JVM-side):
 
-1. key every block by ``md5(block)`` and parse only the DISTINCT blocks,
-   under a fixed placeholder base URL (``MEMO_URL``) with ``blk=0``;
-2. classify each distinct block as *memoizable* iff its parse is provably
-   independent of the base IRI: base-dependence manifests exactly as the
-   placeholder's (high-entropy, reserved ``.invalid`` TLD) host appearing
-   in an output term — every RFC 3986 resolution against base embeds the
-   base's scheme+authority — or as an error (errors may depend on which
-   remote context IRI a relative reference resolved to). Blocks whose
-   terms contain the placeholder *skolem prefix* anywhere except as a
-   bnode-label prefix (quoted triples, pathological literal content) are
-   conservatively non-memoizable too, which closes the rewrite's only
-   textual-collision hole;
+1. key every block by ``md5(block)`` and parse only the DISTINCT blocks
+   under the placeholder base ``MEMO_URL`` with ``blk=0``;
+2. classify each distinct parse with ``is_memoizable`` (the same rule as
+   the in-worker memo: no error, no term resolved against the
+   placeholder, the placeholder label only as a plain bnode prefix);
 3. join memoizable parses back to the (url, blk) occurrences and rewrite
    the skolem bnode prefix ``_:s{md5(MEMO_URL)[:16]}x0x`` to the real
-   ``_:s{md5(url)[:16]}x{blk}x`` — pure string surgery, sound because the
-   deterministic skolemizer (functions/to_rdf.skolemize_label) makes
-   bnode labels a pure function of (url, blk, local counter);
+   ``_:s{md5(url)[:16]}x{blk}x`` — sound because the deterministic
+   skolemizer (functions/to_rdf.skolemize_label) makes bnode labels a
+   pure function of (url, blk, local counter);
 4. every non-memoizable block falls back to the ordinary per-occurrence
-   :func:`..operators.parse.parse_blocks` path (identical output protocol,
-   error channel included).
+   :func:`..operators.parse.parse_blocks` path.
 
-Scale design (100 TB):
-- the only new shuffles are keyed on ``md5(block)`` — uniformly
-  distributed by construction, never skewed;
-- the memo table (distinct blocks' quads) is orders of magnitude smaller
-  than the corpus at real-world duplication rates, so AQE broadcasts the
-  hit join; at worst it degrades to a shuffle equi-join on bkey;
-- the fallback semi-join ships only block *keys*, not payloads.
-Cost model: plain parse = O(occurrences) kernel calls; memo parse =
-O(distinct) kernel calls + one bkey shuffle. The memo wins whenever the
-duplication factor exceeds the (cheap) shuffle overhead.
+Cost: an ``md5(block)`` distinct shuffle, a materialized distinct parse,
+a hit join, a fallback semi-join and a second parse stage.
 """
 
 from __future__ import annotations
@@ -53,18 +37,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as ST
 
 from ..functions.context import validate_context_cache
-from ..functions.parser import parse_block
-from ..functions.to_rdf import skolemize_label
+from ..functions.parser import (
+    MEMO_BNODE_PREFIX,
+    MEMO_URL,
+    is_memoizable,
+    parse_block,
+)
 from .parse import parse_blocks
-
-# Reserved-TLD (`.invalid`, RFC 2606) placeholder base: no real crawl URL
-# can share its authority, so its host appearing in an output term is an
-# unambiguous base-dependence marker.
-MEMO_URL = "https://jsonld-memo-placeholder.invalid/base"
-MEMO_HOST = "jsonld-memo-placeholder.invalid"
-# skolem namespace the placeholder parse emits: 's<md5(MEMO_URL)[:16]>x0'
-MEMO_LABEL = skolemize_label(MEMO_URL, 0)
-_MEMO_BNODE_PREFIX = "_:" + MEMO_LABEL + "x"
 
 _MEMO_SCHEMA = ST.StructType([
     ST.StructField("bkey", ST.StringType()),
@@ -76,45 +55,24 @@ _MEMO_SCHEMA = ST.StructType([
 ])
 
 
-# Break-even of the memo, measured at sf0.1 with an earlier benchmark
-# harness (before kgbench): below ~50x mean duplication the bkey shuffle
-# + hit join cost more than the saved kernel calls.
+# duplication threshold of should_memoize's decision (kgbench's traced
+# sweep reports the measured ratio; the build does not decide by it)
 MEMO_BREAK_EVEN_DUPLICATION = 50.0
 
 
 def should_memoize(blocks: DataFrame,
                    break_even: float = MEMO_BREAK_EVEN_DUPLICATION
                    ) -> tuple[bool, float]:
-    """Data-driven memo decision (r7 verdict ask #5): ONE cheap agg over
-    the block corpus measures the mean duplication ratio
-    ``occurrences / distinct(md5(block))`` and compares it to the
-    measured break-even. ``approx_count_distinct`` (HLL++, one pass, no
+    """ONE cheap agg over the block corpus measures the mean duplication
+    ratio ``occurrences / distinct(md5(block))`` and compares it to
+    ``break_even``. ``approx_count_distinct`` (HLL++, one pass, no
     distinct shuffle) keeps the pre-pass O(scan); rsd=0.02 pins the
-    sketch error to ~2% — the break-even itself is an order-of-magnitude
-    threshold, so a 2% estimate cannot flip a non-borderline decision.
-    Returns (memoize?, measured_ratio)."""
+    sketch error to ~2%. Returns (memoize?, measured_ratio)."""
     row = blocks.agg(
         F.count("*").alias("n"),
         F.approx_count_distinct(F.md5("block"), rsd=0.02).alias("d")).first()
     ratio = row["n"] / max(row["d"], 1)
     return ratio >= break_even, ratio
-
-
-def _is_memoizable(quads: list[tuple], err: str | None) -> bool:
-    if err is not None:
-        return False
-    for quad in quads:
-        for t in quad:
-            if MEMO_HOST in t:
-                return False  # base-dependent resolution
-            if MEMO_LABEL in t and not (
-                    t.startswith(_MEMO_BNODE_PREFIX)
-                    and MEMO_LABEL not in t[len(_MEMO_BNODE_PREFIX):]):
-                # placeholder label anywhere but as THE bnode prefix of a
-                # plain bnode term (quoted triples / adversarial content):
-                # the JVM rewrite couldn't relabel it soundly -> fallback
-                return False
-    return True
 
 
 def parse_distinct_blocks(distinct: DataFrame, ctx_cache: dict | None = None,
@@ -138,7 +96,7 @@ def parse_distinct_blocks(distinct: DataFrame, ctx_cache: dict | None = None,
                 quads, err = parse_block(
                     block, MEMO_URL, 0, cache, rdf_direction,
                     parser_options=parser_options)
-                if not _is_memoizable(quads, err):
+                if not is_memoizable(quads, err):
                     out["bkey"].append(bkey)
                     for k in ("subj", "pred", "obj", "graph"):
                         out[k].append(None)
@@ -167,9 +125,9 @@ def _rewrite_prefix(col: str) -> F.Column:
         F.lit("x"), F.col("blk").cast("string"), F.lit("x"))
     c = F.col(col)
     return F.when(
-        c.startswith(_MEMO_BNODE_PREFIX),
+        c.startswith(MEMO_BNODE_PREFIX),
         F.concat(new_prefix,
-                 c.substr(F.lit(len(_MEMO_BNODE_PREFIX) + 1),
+                 c.substr(F.lit(len(MEMO_BNODE_PREFIX) + 1),
                           F.length(c)))).otherwise(c).alias(col)
 
 
@@ -178,10 +136,8 @@ def parse_blocks_memo(blocks: DataFrame, ctx_cache: dict | None = None,
                       parser_options=None) -> DataFrame:
     """Memoized twin of :func:`..operators.parse.parse_blocks` — same
     input (url, blk, block), same output protocol (QUAD_SCHEMA incl. the
-    error channel), value-identical results (the ``kg_quads_memo`` lane
-    in tests/test_lane_oracles.py is hash-checked against the non-memo
-    oracle), one kernel call per DISTINCT block instead of per
-    occurrence."""
+    error channel), value-identical results (tests/test_memo.py), one
+    kernel call per DISTINCT block instead of per occurrence."""
     keyed = blocks.withColumn("bkey", F.md5("block"))
     distinct = keyed.select("bkey", "block").dropDuplicates(["bkey"])
     # localCheckpoint (eager): BOTH consumers below (hits join + fallback

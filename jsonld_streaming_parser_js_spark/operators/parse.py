@@ -35,7 +35,7 @@ from pyspark.sql import types as ST
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions.context import validate_context_cache
-from ..functions.parser import parse_block
+from ..functions.parser import parse_block, parse_block_memo
 
 QUAD_SCHEMA = ST.StructType([
     ST.StructField("url", ST.StringType()),
@@ -87,8 +87,8 @@ BlockRow = tuple
 def _parse_stage(df: DataFrame, block_rows: Callable[[pa.RecordBatch],
                                                      Iterable[BlockRow]],
                  ctx_cache: dict | None, rdf_direction: str | None = None,
-                 parser_options=None, dedup_blocks: bool = False
-                 ) -> DataFrame:
+                 parser_options=None, dedup_blocks: bool = False,
+                 memo: bool = False) -> DataFrame:
     """The one parse-emit protocol: ``block_rows(batch)`` names the blocks
     of each Arrow input batch; each is parsed by ``parse_block`` and
     emitted as QUAD_SCHEMA rows. Quad rows carry error NULL; a failed
@@ -97,17 +97,25 @@ def _parse_stage(df: DataFrame, block_rows: Callable[[pa.RecordBatch],
 
     ``dedup_blocks`` collapses duplicate quad emissions within each block
     (ordered-set semantics, first occurrence kept; see
-    :func:`extract_and_parse`)."""
+    :func:`extract_and_parse`). ``memo`` parses through one bounded
+    block memo per partition (``functions/parser.parse_block_memo``);
+    it keys by block text alone, so only callers with no root context
+    may set it."""
     validate_context_cache(ctx_cache or {})  # fail ONCE at the driver
     bc = df.sparkSession.sparkContext.broadcast(ctx_cache or {})
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         cache = bc.value
+        blocks_seen: dict = {}
         for batch in batches:
             cols = tuple([] for _ in QUAD_SCHEMA)
             urls, blks, subj_l, pred_l, obj_l, graph_l, err_l = cols
             for url, blk, block, context, err in block_rows(batch):
-                if err is None:
+                if err is None and memo:
+                    quads, err = parse_block_memo(
+                        blocks_seen, block, url, blk, cache, rdf_direction,
+                        parser_options)
+                elif err is None:
                     quads, err = parse_block(block, url, blk, cache,
                                              rdf_direction, context=context,
                                              parser_options=parser_options)
@@ -159,7 +167,8 @@ def quads_only(parsed: DataFrame) -> DataFrame:
 
 def extract_and_parse(pages: DataFrame, ctx_cache: dict | None = None,
                       rdf_direction: str | None = None,
-                      dedup_blocks: bool = False) -> DataFrame:
+                      dedup_blocks: bool = False,
+                      memo: bool = False) -> DataFrame:
     """Fused extract+parse: ONE ``mapInArrow`` stage over pages.
 
     Halves the JVM<->Python Arrow crossings vs extract_blocks ->
@@ -180,6 +189,11 @@ def extract_and_parse(pages: DataFrame, ctx_cache: dict | None = None,
     redundant (guide §2.4: remove shuffles outright). At 100 TB that is a
     full shuffle of the quad corpus removed for the cost of one small
     dict per block.
+
+    ``memo``: parse each distinct block once per partition and relabel
+    its bnodes for every further occurrence; base-dependent and erroring
+    blocks are parsed per occurrence. The rows equal ``memo=False``'s as
+    a multiset; it pays off when pages repeat site-template blocks.
     """
     from .extract import extract_blocks_from_html
 
@@ -191,7 +205,7 @@ def extract_and_parse(pages: DataFrame, ctx_cache: dict | None = None,
 
     return _parse_stage(ensure_map_parallelism(pages.select("url", "html")),
                         block_rows, ctx_cache, rdf_direction,
-                        dedup_blocks=dedup_blocks)
+                        dedup_blocks=dedup_blocks, memo=memo)
 
 
 def pages_to_quads(pages: DataFrame, ctx_cache: dict | None = None,

@@ -450,11 +450,10 @@ def run_with_resume(spark: SparkSession, pages: DataFrame, out_dir: str,
     totals ``write_bucketed`` observes on its commit; ``lineage/`` is not
     read back after the commit.
 
-    ``memo=True`` parses via the distinct-block memo (operators/memo.py)
-    — same output protocol including the error channel, one kernel call
-    per distinct block; worth it when the crawl repeats site-template
-    blocks. Otherwise the fused ``extract_and_parse`` stage parses every
-    block occurrence."""
+    The parse is the one fused ``extract_and_parse`` stage. ``memo=True``
+    adds its in-worker block memo (one kernel call per distinct block
+    per partition, no added shuffle; the same rows as a multiset), worth
+    it when the crawl repeats site-template blocks."""
     pages_b = with_bucket(pages, buckets)
     check_snapshot(spark, out_dir, snapshot_id)
     # the one lineage read: prior totals for the stats, and the committed
@@ -469,14 +468,8 @@ def run_with_resume(spark: SparkSession, pages: DataFrame, out_dir: str,
         done = lineage.select("bucket").distinct()
         pages_b = pages_b.join(F.broadcast(done), "bucket", "left_anti")
 
-    if memo:
-        from ..operators.extract import extract_blocks
-        from ..operators.memo import parse_blocks_memo
-        parsed = parse_blocks_memo(extract_blocks(pages_b), ctx_cache,
-                                   rdf_direction)
-    else:
-        from ..operators.parse import extract_and_parse
-        parsed = extract_and_parse(pages_b, ctx_cache, rdf_direction)
+    from ..operators.parse import extract_and_parse
+    parsed = extract_and_parse(pages_b, ctx_cache, rdf_direction, memo=memo)
     commit = write_bucketed(with_bucket(parsed, buckets), out_dir,
                             snapshot_id)
     return {"buckets_total": buckets,

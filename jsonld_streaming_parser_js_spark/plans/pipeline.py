@@ -29,7 +29,7 @@ class PipelineConfig:
     rdf_direction: str | None = None
     ctx_cache: dict = field(default_factory=dict)
     snapshot_id: str = ""  # input table version tag recorded in lineage
-    memo: bool = False  # distinct-block parse memo (operators/memo.py)
+    memo: bool = False  # in-worker block memo of the parse stage
 
 
 def build_kg(spark: SparkSession, pages: DataFrame,

@@ -1,11 +1,17 @@
 """Test-side helpers: a declarative upsert to check the physical one
-against, and an ordered micro-batch writer for file-source streams."""
+against, an ordered micro-batch writer for file-source streams, and the
+reassembled extraction text of the pages."""
 
 from __future__ import annotations
 
 import os
 
+import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from jsonld_streaming_parser_js_spark.operators.extract import (
+    extract_blocks_from_html)
 
 
 def upsert_quads(base: DataFrame, wave: DataFrame,
@@ -38,3 +44,14 @@ def write_ordered_slices(slices: list[DataFrame], work_dir: str,
         dst = os.path.join(in_dir, f"{i:03d}.parquet")
         os.replace(os.path.join(tmp, src), dst)
         os.utime(dst, (mtime + i, mtime + i))
+
+
+def extracted_text(pages: DataFrame) -> DataFrame:
+    """Reassembled text per url (newline-joined payloads) — checked
+    byte-identical against the ``text`` column (input_hint invariant)."""
+    @F.pandas_udf("string")
+    def joined(html: pd.Series) -> pd.Series:
+        return html.map(lambda h: "\n".join(extract_blocks_from_html(h)))
+
+    return (pages.select("url", "text", joined("html").alias("extracted"))
+            .withColumn("match", F.col("text") == F.col("extracted")))

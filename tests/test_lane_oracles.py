@@ -98,21 +98,27 @@ def _kg_quads(spark, work):
 
 
 def _kg_quads_memo(spark, work):
-    """Distinct-block parse memo. corpus='pages': the memoized parse of
-    the standard pages equals kg_quads. corpus='shared': the site-template
-    corpus (7 distinct blocks, with an anonymous member node) checks the
-    per-(url, blk) skolem-prefix rewrite across occurrences."""
-    from jsonld_streaming_parser_js_spark.operators.memo import (
-        parse_blocks_memo)
+    """The build's block memo (extract_and_parse(memo=True)).
+    corpus='pages': the memoized parse of the standard pages equals
+    kg_quads. corpus='shared': the site-template corpus (7 distinct
+    blocks, with an anonymous member node) checks the per-(url, blk)
+    skolem-prefix relabel across occurrences; a zero-quad block ahead of
+    it puts it at blk 1 on odd documents."""
     from jsonld_streaming_parser_js_spark.sources.pages import (
         shared_org_blocks)
     pages_leg = (quads_only(
-        parse_blocks_memo(extract_blocks(_pages(spark)), CONTEXTS))
+        extract_and_parse(_pages(spark), CONTEXTS, memo=True))
         .dropDuplicates(["url", "blk", "subj", "pred", "obj", "graph"])
         .withColumn("corpus", F.lit("pages")))
-    shared_leg = (quads_only(
-        parse_blocks_memo(shared_org_blocks(spark, SF), {}))
-        .withColumn("corpus", F.lit("shared")))
+    script = '<script type="application/ld+json">'
+    shared_pages = shared_org_blocks(spark, SF).select(
+        "url", F.concat(
+            F.when(F.col("blk") == 1, F.lit(script + "{}</script>"))
+            .otherwise(F.lit("")),
+            F.lit(script), F.col("block"), F.lit("</script>"))
+        .alias("html"))
+    shared_leg = (quads_only(extract_and_parse(shared_pages, {}, memo=True))
+                  .withColumn("corpus", F.lit("shared")))
     return pages_leg.unionByName(shared_leg)
 
 

@@ -1,14 +1,21 @@
-"""Distinct-block parse memo (operators/memo.py): the memoized parse must
-be observationally identical to the per-occurrence parse — across shared
-blocks, base-dependent blocks, error blocks and @base-carrying blocks —
-while parsing each distinct block only once."""
+"""Block memos: the in-worker memo of the parse stage
+(``extract_and_parse(memo=True)``, the build's) and the shuffle memo
+(operators/memo.py). Each must be observationally identical to the
+per-occurrence parse — across shared blocks, base-dependent blocks,
+error blocks, quoted triples and @base-carrying blocks — while parsing
+each distinct block only once."""
 
 from __future__ import annotations
 
+from collections import Counter
+
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
+from jsonld_streaming_parser_js_spark.functions import parser
 from jsonld_streaming_parser_js_spark.operators import memo
-from jsonld_streaming_parser_js_spark.operators.parse import parse_blocks
+from jsonld_streaming_parser_js_spark.operators.parse import (
+    extract_and_parse, parse_blocks)
 from jsonld_streaming_parser_js_spark.sources.pages import (
     CONTEXTS, shared_org_blocks)
 
@@ -22,6 +29,57 @@ REL_ID = ('{"@context":{"@vocab":"http://schema.org/"},'
 WITH_BASE = ('{"@context":{"@base":"http://b.org/",'
              '"@vocab":"http://schema.org/"},"@id":"x","name":"based"}')
 MALFORMED = '{"@id": broken'
+# JSON-LD-star: bnodes inside a quoted triple are never memoized
+QUOTED = ('{"@id":{"@id":"_:e","http://e.org/p":"o"},'
+          '"http://e.org/q":{"@id":"_:f","http://e.org/r":"v"}}')
+ZERO_QUADS = '{"@context":{"@vocab":"http://schema.org/"}}'
+MEMO_BLOCKS = (ORG, REL_ID, WITH_BASE, MALFORMED, QUOTED, ZERO_QUADS)
+
+
+def _html(blocks) -> str:
+    return "".join(f'<script type="application/ld+json">{b}</script>'
+                   for b in blocks)
+
+
+@settings(max_examples=10, deadline=None, derandomize=True)
+@given(st.lists(st.lists(st.sampled_from(MEMO_BLOCKS), min_size=1,
+                         max_size=4), min_size=1, max_size=5))
+def test_memo_stage_equals_plain_as_multisets(spark, page_blocks):
+    """The build's memo (extract_and_parse(memo=True)) gives the rows of
+    the per-occurrence parse as a MULTISET on all seven columns: each
+    drawn page repeats on three hosts, and one page carries every drawn
+    block twice (repeats inside one partition, at other blk)."""
+    rows = [(f"https://ex{h}.example.org/page/{i}", _html(blocks))
+            for i, blocks in enumerate(page_blocks) for h in range(3)]
+    every = [b for blocks in page_blocks for b in blocks]
+    rows.append(("https://ex9.example.org/all", _html(every + every)))
+    pages = spark.createDataFrame(rows, "url string, html string")
+    got, want = (Counter(map(tuple, extract_and_parse(
+        pages, {}, memo=use_memo).collect())) for use_memo in (True, False))
+    assert got == want
+
+
+def test_memo_kernel_parses_each_block_once_and_is_bounded(monkeypatch):
+    """parse_block_memo: one placeholder parse per distinct block, a
+    per-occurrence parse for base-dependent ones, and the memo never
+    holds more than MEMO_MAX_BLOCKS entries."""
+    calls = Counter()
+    real = parser.parse_block
+
+    def counting(block, url, *args, **kwargs):
+        calls[block, url == parser.MEMO_URL] += 1
+        return real(block, url, *args, **kwargs)
+
+    monkeypatch.setattr(parser, "parse_block", counting)
+    seen: dict = {}
+    for i in range(5):
+        for blk, block in enumerate((ORG, REL_ID)):
+            parser.parse_block_memo(seen, block, f"https://a.org/{i}", blk)
+    assert calls == {(ORG, True): 1, (REL_ID, True): 1, (REL_ID, False): 5}
+    monkeypatch.setattr(parser, "MEMO_MAX_BLOCKS", 2)
+    for block in MEMO_BLOCKS:
+        parser.parse_block_memo(seen, block, "https://a.org/x", 0)
+        assert len(seen) <= 2
 
 
 def _mixed_blocks(spark):
@@ -66,7 +124,7 @@ def test_memo_classification(spark):
     # with the placeholder prefix the JVM rewrite replaces
     for r in rows:
         if r["memoizable"] and r["subj"] and r["subj"].startswith("_:"):
-            assert r["subj"].startswith(memo._MEMO_BNODE_PREFIX)
+            assert r["subj"].startswith(memo.MEMO_BNODE_PREFIX)
 
 
 def test_memo_shared_corpus_parses_each_block_once(spark):
@@ -93,8 +151,9 @@ def test_memo_shared_corpus_parses_each_block_once(spark):
 
 
 def test_run_with_resume_memo_twin(spark, tmp_path):
-    """The lineage-committed store built with memo=True is quad-for-quad
-    identical to the plain-parse store (incl. error rows in lineage)."""
+    """The lineage-committed store built with memo=True is row-for-row
+    identical to the plain-parse store, compared as multisets (the
+    lineage checksum xors quads, so it cannot see a lost duplicate)."""
     from jsonld_streaming_parser_js_spark.plans import lineage as lin
     from jsonld_streaming_parser_js_spark.sources.pages import (
         pages_from_documents)
@@ -104,9 +163,9 @@ def test_run_with_resume_memo_twin(spark, tmp_path):
         out = str(tmp_path / f"memo_{mode}")
         stats = lin.run_with_resume(spark, pages, out, CONTEXTS,
                                     buckets=8, memo=mode)
-        rows = set(map(tuple, spark.read.parquet(f"{out}/quads")
-                       .select("url", "blk", "subj", "pred", "obj",
-                               "graph", "error").collect()))
+        rows = Counter(map(tuple, spark.read.parquet(f"{out}/quads")
+                           .select("url", "blk", "subj", "pred", "obj",
+                                   "graph", "error").collect()))
         outs[mode] = (stats["n_quads"], stats["n_errors"], rows)
     assert outs[False] == outs[True]
     assert outs[True][1] > 0  # error channel present through the memo

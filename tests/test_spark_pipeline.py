@@ -14,8 +14,6 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from jsonld_streaming_parser_js_spark.operators.extract import (
-    extracted_text)
 from jsonld_streaming_parser_js_spark.operators.parse import (
     extract_and_parse, pages_to_quads)
 from jsonld_streaming_parser_js_spark.operators import canonicalize as canon
@@ -23,7 +21,8 @@ from jsonld_streaming_parser_js_spark.plans import lineage as lin
 from jsonld_streaming_parser_js_spark.plans import pipeline as pipe
 from jsonld_streaming_parser_js_spark.sources.pages import (
     CONTEXTS, pages_from_documents)
-from tests.kg_helpers import upsert_quads, write_ordered_slices
+from tests.kg_helpers import (
+    extracted_text, upsert_quads, write_ordered_slices)
 
 SF = "/root/testdata/sf0.001"
 
@@ -520,27 +519,28 @@ def test_resume_skips_completed_buckets(spark, pages):
 
 
 def test_run_in_waves_equals_single_shot(spark, pages, monkeypatch):
-    """Waves commit through run_with_resume, plain or memoized: with
-    memo=True every wave takes the memo parse, and either way the store
-    equals the single-shot parse."""
-    from jsonld_streaming_parser_js_spark.operators import memo
-    memo_calls = []
-    real_memo = memo.parse_blocks_memo
+    """Waves commit through run_with_resume, plain or memoized: each
+    wave makes one extract_and_parse call carrying the memo flag, and
+    either way the store equals the single-shot parse."""
+    from jsonld_streaming_parser_js_spark.operators import parse
+    memo_flags = []
+    real_parse = parse.extract_and_parse
 
-    def counting_memo(*args, **kwargs):
-        memo_calls.append(1)
-        return real_memo(*args, **kwargs)
+    def recording_parse(*args, memo=False, **kwargs):
+        memo_flags.append(memo)
+        return real_parse(*args, memo=memo, **kwargs)
 
-    monkeypatch.setattr(memo, "parse_blocks_memo", counting_memo)
     clean = set(map(tuple,
                     pages_to_quads(pages, CONTEXTS)
                     .select("subj", "pred", "obj", "graph").collect()))
+    monkeypatch.setattr(parse, "extract_and_parse", recording_parse)
     for use_memo in (False, True):
         out = tempfile.mkdtemp(prefix="kg_waves_")
         try:
             lin.run_in_waves(spark, pages, out, CONTEXTS, buckets=16,
                              waves=3, memo=use_memo)
-            assert len(memo_calls) == (3 if use_memo else 0)
+            assert memo_flags == [use_memo] * 3
+            memo_flags.clear()
             waved = set(map(tuple,
                             pipe.quads_table(spark, out)
                             .select("subj", "pred", "obj", "graph")

@@ -7,6 +7,8 @@ regresses (a plan-shape unit test, runnable in CI):
   kernel-local) — extract+parse is a narrow fused stage
 - commit: one hash Exchange on bucket (one file per bucket); the lineage
   aggregate reuses it
+- memo build (``run_with_resume(memo=True)``): the same one fused parse
+  stage under the commit's bucket Exchange
 - canonical relabel, memo, wave diff and BGP: the join/shuffle shapes
   each relies on
 """
@@ -109,6 +111,29 @@ def main() -> None:
           f"commit hash/range Exchange x{_shuffles(p_commit)} "
           f"({commit_key}), lineage x{_shuffles(p_lin)} "
           "(the commit's, cached)")
+
+    # memo build: run_with_resume(memo=True) parses inside the one fused
+    # extract+parse stage, so the frame it commits has one MapInArrow, no
+    # MapInPandas, no join and no hash/range Exchange but the bucket one
+    real_write = lin.write_bucketed
+    lin.write_bucketed = (lambda quads, out, snapshot_id="": real_write(
+        quads, out, snapshot_id, quad_sink=recording_sink))
+    memo_dir = tempfile.mkdtemp(prefix="audit_memo_")
+    try:
+        lin.run_with_resume(spark, pages_from_documents(spark, sf),
+                            memo_dir, CONTEXTS, buckets=64, memo=True)
+    finally:
+        lin.write_bucketed = real_write
+        shutil.rmtree(memo_dir, ignore_errors=True)
+    p_memo = seen["commit"].split("== Initial Plan ==")[0]
+    n_arrow = p_memo.count("MapInArrow")
+    check("memo build: one fused parse stage, no Exchange before bucket's",
+          _shuffles(p_memo) == 1 and "hashpartitioning(bucket#" in p_memo
+          and n_arrow == 1 and "MapInPandas" not in p_memo
+          and "Join" not in p_memo,
+          f"hash/range Exchange x{_shuffles(p_memo)} (the bucket one), "
+          f"MapInArrow x{n_arrow}, MapInPandas x"
+          f"{p_memo.count('MapInPandas')}, Join x{p_memo.count('Join')}")
 
     # canonical relabel: the mapping join carries NO forced broadcast hint
     # (unbounded at web scale -> OOM risk); the small-mapping case must
