@@ -101,9 +101,9 @@ def block_d_sql(url: str = "url") -> str:
 def shared_org_block_sql() -> str:
     """Site-template block: content keyed ONLY by the site (doc_id % 7),
     so every page of a site carries a byte-identical block — the
-    real-crawl duplication shape the distinct-block parse memo
-    (operators/memo.py) exploits. Includes an anonymous node so the
-    memo's skolem-prefix rewrite is exercised across urls/blks."""
+    real-crawl duplication shape the block memos exploit. Includes an
+    anonymous node so the memo's skolem-prefix rewrite is exercised
+    across urls/blks."""
     k = "CAST(doc_id % 7 AS STRING)"
     return (
         "'{\"@context\":{\"@vocab\":\"http://schema.org/\"},"
