@@ -11,7 +11,8 @@ Layout under ``out_dir``:
                 bucket). Each commit writes ONE file per bucket it
                 touches: the rows are clustered by bucket before the
                 write, so one task writes each bucket, and the file
-                count is B, not tasks x B.
+                count is B, not tasks x B. Read only through
+                :func:`read_store`, which declares ``STORE_SCHEMA``.
 - ``lineage/``  one row per completed bucket — ``bucket``,
                 ``snapshot_id``, ``n_quads``, ``n_errors`` and an
                 order-insensitive ``checksum`` (xor of xxhash64 over the
@@ -24,12 +25,39 @@ against B completed bucket ids — a broadcast anti-join, no shuffle of the
 pages table. Clustering by bucket is what keeps the commit at B files at
 that scale: with thousands of parse tasks, an unclustered dynamic-partition
 write would open a file per task per bucket.
+
+Point lookups (``read_url_quads``, ``read_subject_quads``) cache what they
+derive from ``lineage/`` and ``subj_index_meta/`` (the lineage row count,
+the store fingerprint, the index meta row), keyed by directory path. Each
+call first lists that directory (a Hadoop FileSystem call, no Spark job)
+and reuses the cached value only while every file's (name, length, mtime)
+is unchanged. That signature is enough because no writer edits a file in
+place: ``write_bucketed`` appends, and ``upsert_wave`` and
+``write_subject_index`` overwrite, and each of them writes new part files
+with fresh UUID names, so every commit changes the listing.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as ST
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from ..operators.parse import QUAD_SCHEMA, quads_only
+
+# the committed ``quads/`` columns: the parse rows plus the partition
+# column (inferred as int from the ``bucket=k`` directory names)
+STORE_SCHEMA = ST.StructType(
+    QUAD_SCHEMA.fields + [ST.StructField("bucket", ST.IntegerType())])
+_INDEX_SCHEMA = "subj string, url string, bucket long, sbucket int"
+_QUAD_KEY = ["url", "blk", "subj", "pred", "obj", "graph"]
+
+# entries of the lookup cache (one per lineage or index-meta directory);
+# the cache is cleared when full
+FACTS_MAX_DIRS = 256
+_facts: dict[str, tuple[tuple, object]] = {}
 
 
 def bucket_expr(col: str, buckets: int):
@@ -244,7 +272,7 @@ def upsert_wave(spark: SparkSession, out_dir: str,
         affected = with_bucket(keys, buckets).select("bucket").distinct()
         cols = ["url", "blk", "subj", "pred", "obj", "graph", "error",
                 "bucket"]
-        stored = (spark.read.parquet(f"{out_dir}/quads")
+        stored = (read_store(spark, out_dir)
                   .withColumn("bucket", F.col("bucket").cast("long"))
                   .select(*cols))
         keep = (stored
@@ -276,52 +304,115 @@ def upsert_wave(spark: SparkSession, out_dir: str,
         wave_b.unpersist()
 
 
+def read_store(spark: SparkSession, out_dir: str,
+               bucket_ids: list[int] | None = None) -> DataFrame:
+    """The one reader of the committed ``quads/`` table, with
+    ``STORE_SCHEMA`` declared (no footer schema-inference job).
+
+    With ``bucket_ids``, only those ``bucket=k`` directories are listed
+    (no partition discovery over the other buckets), and the bucket
+    filter stays on the frame so the scan's PartitionFilters carry it."""
+    return _read_partitions(spark, f"{out_dir}/quads", STORE_SCHEMA,
+                            "bucket", bucket_ids)
+
+
+def _read_partitions(spark: SparkSession, table: str, schema,
+                     part: str, keys: list[int] | None) -> DataFrame:
+    reader = spark.read.schema(schema)
+    if keys is None:
+        return reader.parquet(table)
+    return (reader.option("basePath", table)
+            .parquet(*[f"{table}/{part}={k}" for k in keys])
+            .where(F.col(part).isin(keys)))
+
+
+def _dir_signature(spark: SparkSession, path: str) -> tuple | None:
+    """(name, length, mtime) of every file directly under ``path``, or
+    None when it does not exist — one FileSystem listing, no Spark job."""
+    sc = spark.sparkContext
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
+    if not fs.exists(p):
+        return None
+    return tuple(sorted((s.getPath().getName(), s.getLen(),
+                         s.getModificationTime())
+                        for s in fs.listStatus(p)))
+
+
+def _cached(spark: SparkSession, path: str, compute):
+    """``compute()``, re-run only when ``path``'s signature changed since
+    the cached call (module docstring). The signature is taken BEFORE
+    the compute, so a commit racing it can only cause a recompute."""
+    sig = _dir_signature(spark, path)
+    hit = _facts.get(path)
+    if sig is not None and hit is not None and hit[0] == sig:
+        return hit[1]
+    value = compute()  # a missing directory raises here, from Spark
+    if len(_facts) >= FACTS_MAX_DIRS:
+        _facts.clear()
+    _facts[path] = (sig, value)
+    return value
+
+
+def _lineage_facts(spark: SparkSession, out_dir: str) -> tuple:
+    """(row count, xor of checksums, total quads) of ``lineage/``."""
+    def compute():
+        r = (spark.read.parquet(f"{out_dir}/lineage")
+             .agg(F.count("*"), F.expr("bit_xor(checksum)"),
+                  F.sum("n_quads")).first())
+        return tuple(r)
+    return _cached(spark, f"{out_dir}/lineage", compute)
+
+
+def _bucket_of(spark: SparkSession, key: str, buckets: int) -> int:
+    """``key``'s bucket through the writer's own ``with_bucket``, over a
+    one-row Arrow (local) relation: the optimizer folds the hash, so
+    no Spark job runs (a list-built frame is RDD-backed: 2 jobs)."""
+    one = spark.createDataFrame(pa.table({"key": [key]}))
+    return int(with_bucket(one, buckets, col="key").first()["bucket"])
+
+
 def read_url_quads(spark: SparkSession, out_dir: str, url: str,
                    buckets: int) -> DataFrame:
     """Point lookup: one url's quads WITHOUT scanning the store, with
     the store's canonical quad semantics (error rows filtered, quad
     columns, deduplicated — matching plans/pipeline.quads_table). The
     url's bucket is computed through the writer's OWN ``with_bucket``
-    (one 1-row JVM job — a drift between reader and writer hashing
-    would silently return empty lookups), then the read filters on the
-    bucket PARTITION column + the url, so the scan touches exactly one
-    ``bucket=k`` directory (partition pruning, plan-asserted) and
-    parquet pushes the url predicate into it. At 100 TB with B buckets
-    this reads ~1/B of the store's files — the access path a serving
-    layer uses for per-document retrieval.
+    over a local one-row relation (no Spark job; a drift between reader
+    and writer hashing would silently return empty lookups). Only that
+    ``bucket=k`` directory is listed and read, the bucket PARTITION
+    filter stays in the plan, and parquet gets the url predicate. The
+    rows are one url's, so they are deduplicated in ONE partition: no
+    Exchange, and the warm lookup is one Spark job with one task. At
+    100 TB with B buckets this reads ~1/B of the store's files — the
+    access path a serving layer uses for per-document retrieval.
 
     ``buckets`` must be the writer's bucket count: it is validated
     against the store's lineage row count (one row per NON-EMPTY
     bucket — with url-hash bucketing every bucket is occupied beyond
     trivial store sizes, so a sparse toy store trips this guard
     loudly rather than a wrong modulus returning an empty result
-    indistinguishable from "url absent")."""
-    buckets_written = spark.read.parquet(f"{out_dir}/lineage").count()
+    indistinguishable from "url absent"). The count is cached while
+    ``lineage/`` is unchanged (module docstring)."""
+    buckets_written = _lineage_facts(spark, out_dir)[0]
     if buckets != buckets_written:
         raise ValueError(
             f"buckets={buckets} but the store's lineage records "
             f"{buckets_written} buckets — a mismatched modulus would "
             "silently return empty lookups")
-    k = with_bucket(spark.createDataFrame([(url,)], "url string"),
-                    buckets).first()["bucket"]
-    from ..operators.parse import quads_only
-    return (quads_only(
-                spark.read.parquet(f"{out_dir}/quads")
-                .where((F.col("bucket") == int(k))
-                       & (F.col("url") == url)))
-            .dropDuplicates(["url", "blk", "subj", "pred", "obj",
-                             "graph"]))
+    k = _bucket_of(spark, url, buckets)
+    return (quads_only(read_store(spark, out_dir, [k])
+                       .where(F.col("url") == url))
+            .coalesce(1).dropDuplicates(_QUAD_KEY))
 
 
 def _store_fingerprint(spark: SparkSession, out_dir: str) -> str:
     """Cheap content identity of the committed store, derived from the
     lineage table (rows are REPLACED on upsert, so any mutation moves
-    this): row count, xor of per-bucket checksums, total quads."""
-    r = (spark.read.parquet(f"{out_dir}/lineage")
-         .agg(F.count("*").alias("n"),
-              F.expr("bit_xor(checksum)").alias("x"),
-              F.sum("n_quads").alias("q")).first())
-    return f"{r['n']}:{r['x']}:{r['q']}"
+    this): row count, xor of per-bucket checksums, total quads. Cached
+    while ``lineage/`` is unchanged."""
+    n, x, q = _lineage_facts(spark, out_dir)
+    return f"{n}:{x}:{q}"
 
 
 def write_subject_index(spark: SparkSession, out_dir: str,
@@ -343,7 +434,7 @@ def write_subject_index(spark: SparkSession, out_dir: str,
     stale index (store mutated since the build) — both failure modes
     would otherwise be silent empty/incomplete dereferences."""
     idx_b = index_buckets or buckets
-    quads = (spark.read.parquet(f"{out_dir}/quads")
+    quads = (read_store(spark, out_dir)
              .where(F.col("error").isNull())
              .select("subj", "url", F.col("bucket").cast("long")
                      .alias("bucket")).distinct())
@@ -360,19 +451,24 @@ def write_subject_index(spark: SparkSession, out_dir: str,
 
 def read_subject_quads(spark: SparkSession, out_dir: str, subj: str,
                        max_fanout: int = 10_000) -> DataFrame:
-    """Entity dereference via the subject index: prune ONE sbucket
+    """Entity dereference via the subject index: read ONE sbucket
     directory for the subject's (url, bucket) pairs (a driver collect
-    bounded by ``max_fanout``), then read exactly those url-buckets
-    with the subject predicate pushed down. Canonical quad semantics
-    (error-filtered, deduplicated). Never scans the store; both reads
-    are partition-pruned.
+    bounded by ``max_fanout``), then read exactly those url-bucket
+    directories with the subject predicate pushed down. Canonical quad
+    semantics (error-filtered, deduplicated in one partition, so no
+    Exchange). Never scans the store; both reads list only their own
+    directories and keep their partition filters, so a warm lookup is
+    two Spark jobs. A subject absent from the index returns an empty
+    frame with no further read.
 
     The index modulus comes from the index's own meta row (never a
     caller guess — a wrong modulus would prune the wrong directory and
     return empty), and the meta's store fingerprint must match the
     current lineage: a store mutated after the index build (upsert
     wave, resume) raises STALE instead of silently omitting the new
-    documents' quads.
+    documents' quads. The meta row and the fingerprint are cached while
+    their directories are unchanged (module docstring), so the STALE
+    check runs on every call without a Spark job.
 
     ``max_fanout`` guards the point-lookup shape: a hub entity
     referenced from more documents than this is not a point lookup any
@@ -380,40 +476,35 @@ def read_subject_quads(spark: SparkSession, out_dir: str, subj: str,
     function raises with guidance instead of silently materializing a
     huge url list on the driver — dereference such subjects with a
     distributed join against the index (index.where(subj) ⋈ store)."""
-    from ..operators.parse import quads_only
-
-    meta = spark.read.parquet(f"{out_dir}/subj_index_meta").first()
+    meta_dir = f"{out_dir}/subj_index_meta"
+    idx_b, indexed_fp = _cached(spark, meta_dir, lambda: tuple(
+        spark.read.parquet(meta_dir)
+        .select("index_buckets", "store_fingerprint").first()))
     fp = _store_fingerprint(spark, out_dir)
-    if meta["store_fingerprint"] != fp:
+    if indexed_fp != fp:
         raise ValueError(
             "subject index is STALE (store fingerprint "
-            f"{fp} != indexed {meta['store_fingerprint']}) — rebuild "
+            f"{fp} != indexed {indexed_fp}) — rebuild "
             "with write_subject_index after mutating the store")
-    idx_b = int(meta["index_buckets"])
-    sb = with_bucket(spark.createDataFrame([(subj,)], "subj string"),
-                     idx_b, col="subj").first()["bucket"]
-    pruned = (spark.read.parquet(f"{out_dir}/subj_index")
-              .where((F.col("sbucket") == int(sb))
-                     & (F.col("subj") == subj))
-              .select("url", "bucket"))
-    hits = pruned.limit(max_fanout + 1).collect()
+    sb = _bucket_of(spark, subj, int(idx_b))
+    hits = (_read_partitions(spark, f"{out_dir}/subj_index",
+                             _INDEX_SCHEMA, "sbucket", [sb])
+            .where(F.col("subj") == subj).select("url", "bucket")
+            .limit(max_fanout + 1).collect())
     if len(hits) > max_fanout:
         raise ValueError(
             f"subject {subj!r} appears in > {max_fanout} documents — "
             "a hub entity is not a point lookup; join the store "
             "against the pruned index instead")
     if not hits:
-        return quads_only(
-            spark.read.parquet(f"{out_dir}/quads").limit(0))
+        return quads_only(spark.createDataFrame(
+            to_arrow_schema(STORE_SCHEMA).empty_table()))
     bucket_set = sorted({int(r["bucket"]) for r in hits})
     url_set = sorted({r["url"] for r in hits})
-    return (quads_only(
-                spark.read.parquet(f"{out_dir}/quads")
-                .where(F.col("bucket").isin(bucket_set)
-                       & F.col("url").isin(url_set)
-                       & (F.col("subj") == subj)))
-            .dropDuplicates(["url", "blk", "subj", "pred", "obj",
-                             "graph"]))
+    return (quads_only(read_store(spark, out_dir, bucket_set)
+                       .where(F.col("url").isin(url_set)
+                              & (F.col("subj") == subj)))
+            .coalesce(1).dropDuplicates(_QUAD_KEY))
 
 
 def check_snapshot(spark: SparkSession, out_dir: str,
@@ -508,7 +599,7 @@ def run_in_waves(spark: SparkSession, pages: DataFrame, out_dir: str,
 def verify_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     """Recompute per-bucket stats from the quads table and diff against the
     lineage records — the audit every resume can run cheaply."""
-    quads = spark.read.parquet(f"{out_dir}/quads")
+    quads = read_store(spark, out_dir)
     recomputed = bucket_lineage(quads).drop("snapshot_id")
     recorded = spark.read.parquet(f"{out_dir}/lineage")
     return (recomputed.alias("a")

@@ -69,6 +69,5 @@ def assert_no_errors(parsed: DataFrame, sample: int = 5) -> None:
 
 def quads_table(spark: SparkSession, out_dir: str) -> DataFrame:
     """The committed quads (error rows filtered), deduplicated."""
-    parsed = spark.read.parquet(f"{out_dir}/quads")
-    return (quads_only(parsed)
+    return (quads_only(lin.read_store(spark, out_dir))
             .dropDuplicates(["url", "blk", "subj", "pred", "obj", "graph"]))

@@ -275,6 +275,11 @@ def test_read_url_quads_prunes_to_one_bucket(spark, pages):
         pushed = plan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
         assert "bucket" in part, part
         assert "url" in pushed, pushed
+        # only the url's bucket directory is listed, and the one-url
+        # dedup runs in one partition: no shuffle
+        assert "InMemoryFileIndex(1 paths)" in plan, plan
+        assert "/quads/bucket=" in plan, plan
+        assert "Exchange" not in plan, plan
         # canonical quad semantics: equals quads_table filtered to the
         # url (error rows excluded, deduplicated)
         from jsonld_streaming_parser_js_spark.plans.pipeline import (
@@ -286,6 +291,16 @@ def test_read_url_quads_prunes_to_one_bucket(spark, pages):
         # a mismatched modulus fails loudly, never an empty lookup
         with pytest.raises(ValueError, match="bucket"):
             lin.read_url_quads(spark, out, url, buckets * 2)
+        # the cached lineage count follows the directory: a store
+        # rebuilt at the same path with another modulus is refused
+        # for the old one and served for the new one
+        shutil.rmtree(out)
+        lin.write_bucketed(lin.with_bucket(parsed, buckets // 2), out,
+                           snapshot_id="snap-P")
+        with pytest.raises(ValueError, match="bucket"):
+            lin.read_url_quads(spark, out, url, buckets)
+        again = lin.read_url_quads(spark, out, url, buckets // 2)
+        assert sorted(map(tuple, again.collect())) == rows
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
@@ -345,6 +360,52 @@ def test_subject_index_dereference(spark, pages):
                         wave_keys=pages.select("url").limit(1))
         with pytest.raises(ValueError, match="STALE"):
             lin.read_subject_quads(spark, out, subj)
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def _jobs_run(spark, group: str, action) -> int:
+    """Spark jobs that ``action()`` runs, counted in its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_point_lookups_run_one_and_two_jobs(spark, pages):
+    """Warm point lookups run a fixed, small number of Spark jobs: the
+    lineage and index-meta facts come from the cache, the key's bucket
+    from a local relation, so a url lookup is its one read and an
+    entity lookup is its index read plus its store read. A subject
+    absent from the index costs the index read only."""
+    out = tempfile.mkdtemp(prefix="kg_jobs_")
+    try:
+        buckets = 16
+        parsed = extract_and_parse(pages, CONTEXTS)
+        lin.write_bucketed(lin.with_bucket(parsed, buckets), out)
+        lin.write_subject_index(spark, out, buckets)
+        url = pages.select("url").first()["url"]
+        subj = (pipe.quads_table(spark, out).where(F.col("url") == url)
+                .where(F.col("subj").startswith("<"))
+                .select("subj").first()["subj"])
+        miss = "<http://nowhere.example.org/none>"
+
+        def url_op():
+            return lin.read_url_quads(spark, out, url, buckets).collect()
+
+        def subj_op():
+            return lin.read_subject_quads(spark, out, subj).collect()
+
+        def miss_op():
+            return lin.read_subject_quads(spark, out, miss).collect()
+
+        assert url_op() and subj_op() and not miss_op()  # warm the cache
+        assert _jobs_run(spark, "lookup-url", url_op) == 1
+        assert _jobs_run(spark, "lookup-subject", subj_op) == 2
+        assert _jobs_run(spark, "lookup-miss", miss_op) == 1
     finally:
         shutil.rmtree(out, ignore_errors=True)
 

@@ -11,6 +11,8 @@ regresses (a plan-shape unit test, runnable in CI):
   stage under the commit's bucket Exchange
 - canonical relabel, memo, wave diff and BGP: the join/shuffle shapes
   each relies on
+- warm point lookups (url, entity): every query they execute reads only
+  its key's partition directories and has no Exchange
 """
 
 from __future__ import annotations
@@ -38,6 +40,33 @@ def _shuffles(p: str) -> int:
                if ("Exchange hashpartitioning" in ln
                    or "Exchange rangepartitioning" in ln)
                and "ReusedExchange" not in ln)
+
+
+def executed_plans(spark, action) -> list[str]:
+    """Formatted physical plans of every SQL query ``action()``
+    executes, in order, from the session's SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions() -> dict:
+        it, found = store.executionsList().iterator(), {}
+        while it.hasNext():
+            e = it.next()
+            found[e.executionId()] = e
+        return found
+
+    before = set(executions())
+    action()
+    # the status store is fed by the listener bus, asynchronously
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return [e.physicalPlanDescription()
+            for i, e in sorted(executions().items()) if i not in before]
+
+
+def _locations(plans: list[str]) -> list[str]:
+    """The scanned locations of ``plans``, one entry per scan."""
+    return [ln.split("InMemoryFileIndex ", 1)[1]
+            for p in plans for ln in p.splitlines()
+            if ln.startswith("Location: ")]
 
 
 def main() -> None:
@@ -220,6 +249,69 @@ def main() -> None:
               f"BNLJ x{p.count('BroadcastNestedLoopJoin')}")
     finally:
         shutil.rmtree(_bgpd, ignore_errors=True)
+
+    # warm point lookups (the serving path): after one call has cached
+    # the lineage and index-meta facts, a url lookup scans only the url's
+    # bucket=k directory, and an entity lookup scans one sbucket=s index
+    # directory, then only the subject's bucket directories; no query
+    # shuffles (the dedup is one partition). The key's bucket is one
+    # more query, over a local relation: no scan and no Spark job.
+    from pyspark.sql import functions as F
+    from jsonld_streaming_parser_js_spark.plans.pipeline import quads_table
+    _lookd = tempfile.mkdtemp(prefix="audit_lookup_")
+
+    def warm_lookup(action) -> tuple[int, list[str], int]:
+        """(queries, store-relative scan locations, Exchange count) of
+        ``action()`` run a second time, after a first run warmed it."""
+        action()
+        plans = executed_plans(spark, action)
+        return (len(plans),
+                [loc.replace(f"file:{_lookd}/", "")
+                 for loc in _locations(plans)],
+                sum(p.count("Exchange") for p in plans))
+
+    try:
+        lin.write_bucketed(lin.with_bucket(extract_and_parse(
+            pages_from_documents(spark, sf), CONTEXTS), 64), _lookd)
+        lin.write_subject_index(spark, _lookd, 64)
+        _url = quads_table(spark, _lookd).first()["url"]
+        # the subject referenced from the most documents
+        _subj = (quads_table(spark, _lookd)
+                 .where(F.col("subj").startswith("<")).groupBy("subj")
+                 .agg(F.countDistinct("url").alias("n"))
+                 .orderBy(F.desc("n"), "subj").first()["subj"])
+
+        n_q, locs, n_ex = warm_lookup(lambda: lin.read_url_quads(
+            spark, _lookd, _url, 64).collect())
+        check("url lookup: one bucket path, zero Exchange",
+              len(locs) == 1 and "[quads/bucket=" in locs[0]
+              and ", " not in locs[0] and n_ex == 0,
+              f"queries x{n_q}, scans {locs}, Exchange x{n_ex}")
+
+        got = {}
+
+        def subj_op():
+            got["df"] = lin.read_subject_quads(spark, _lookd, _subj)
+            return got["df"].collect()
+
+        n_q, locs, n_ex = warm_lookup(subj_op)
+        n_buckets = len({r["bucket"] for r in
+                         spark.read.parquet(f"{_lookd}/quads")
+                         .where(F.col("subj") == _subj)
+                         .select("bucket").collect()})
+        n_paths = re.findall(r"InMemoryFileIndex\((\d+) paths\)",
+                             plan_of(got["df"])
+                             .split("== Initial Plan ==")[0])
+        check("entity lookup: one sbucket path, then the subject's bucket "
+              "paths, zero Exchange",
+              len(locs) == 2 and "[subj_index/sbucket=" in locs[0]
+              and ", " not in locs[0] and "[quads/bucket=" in locs[1]
+              and n_paths == [str(n_buckets)] and n_ex == 0,
+              f"queries x{n_q}, index scan {locs[:1]}, store scan "
+              f"paths {n_paths} for the subject's {n_buckets} bucket(s), "
+              f"Exchange x{n_ex}")
+    finally:
+        shutil.rmtree(_lookd, ignore_errors=True)
 
     with open(os.path.join(ROOT, "EXPLAIN.md"), "w") as f:
         f.write("# EXPLAIN audit — physical-plan invariants\n\n")
