@@ -11,8 +11,9 @@ Layout under ``out_dir``:
                 bucket). Each commit writes ONE file per bucket it
                 touches: the rows are clustered by bucket before the
                 write, so one task writes each bucket, and the file
-                count is B, not tasks x B. Read only through
-                :func:`read_store`, which declares ``STORE_SCHEMA``.
+                count is B, not tasks x B. Read only with
+                ``STORE_SCHEMA`` declared: :func:`read_store` for the
+                whole table, :func:`_read_partitions` for a lookup.
 - ``lineage/``  one row per completed bucket — ``bucket``,
                 ``snapshot_id``, ``n_quads``, ``n_errors`` and an
                 order-insensitive ``checksum`` (xor of xxhash64 over the
@@ -51,8 +52,15 @@ from ..operators.parse import QUAD_SCHEMA, quads_only
 # column (inferred as int from the ``bucket=k`` directory names)
 STORE_SCHEMA = ST.StructType(
     QUAD_SCHEMA.fields + [ST.StructField("bucket", ST.IntegerType())])
-_INDEX_SCHEMA = "subj string, url string, bucket long, sbucket int"
-_QUAD_KEY = ["url", "blk", "subj", "pred", "obj", "graph"]
+# the ``subj_index/`` columns, written and read with this one layout;
+# ``sbucket`` is the partition column
+INDEX_SCHEMA = ST.StructType([
+    ST.StructField("subj", ST.StringType()),
+    ST.StructField("url", ST.StringType()),
+    ST.StructField("bucket", ST.LongType()),
+    ST.StructField("sbucket", ST.IntegerType())])
+# the columns a committed quad is deduplicated on
+QUAD_KEY = ["url", "blk", "subj", "pred", "obj", "graph"]
 
 # entries of the lookup cache (one per lineage or index-meta directory);
 # the cache is cleared when full
@@ -103,9 +111,8 @@ def _read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
     An absent directory is checked first rather than read and caught:
     once the session has run an ``observe`` (``write_bucketed``), Spark
     logs every failed query, so a fresh store would log a stack trace."""
-    sc = spark.sparkContext
-    path = sc._jvm.org.apache.hadoop.fs.Path(f"{out_dir}/lineage")
-    if not path.getFileSystem(sc._jsc.hadoopConfiguration()).exists(path):
+    fs, path = _fs_path(spark, f"{out_dir}/lineage")
+    if not fs.exists(path):
         return None
     try:
         return spark.read.parquet(f"{out_dir}/lineage")
@@ -304,34 +311,74 @@ def upsert_wave(spark: SparkSession, out_dir: str,
         wave_b.unpersist()
 
 
-def read_store(spark: SparkSession, out_dir: str,
-               bucket_ids: list[int] | None = None) -> DataFrame:
-    """The one reader of the committed ``quads/`` table, with
-    ``STORE_SCHEMA`` declared (no footer schema-inference job).
-
-    With ``bucket_ids``, only those ``bucket=k`` directories are listed
-    (no partition discovery over the other buckets), and the bucket
-    filter stays on the frame so the scan's PartitionFilters carry it."""
-    return _read_partitions(spark, f"{out_dir}/quads", STORE_SCHEMA,
-                            "bucket", bucket_ids)
+def read_store(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The one reader of the whole committed ``quads/`` table, with
+    ``STORE_SCHEMA`` declared (no footer schema-inference job). Point
+    lookups read only their keys' directories (:func:`_read_partitions`)
+    with the same schema."""
+    return spark.read.schema(STORE_SCHEMA).parquet(f"{out_dir}/quads")
 
 
-def _read_partitions(spark: SparkSession, table: str, schema,
-                     part: str, keys: list[int] | None) -> DataFrame:
-    reader = spark.read.schema(schema)
-    if keys is None:
-        return reader.parquet(table)
-    return (reader.option("basePath", table)
-            .parquet(*[f"{table}/{part}={k}" for k in keys])
-            .where(F.col(part).isin(keys)))
+def _fs_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) of ``path``: the one way this module
+    looks at directories (JVM calls, never a Spark job)."""
+    sc = spark.sparkContext
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(sc._jsc.hadoopConfiguration()), p
+
+
+def _empty(spark: SparkSession, schema: ST.StructType) -> DataFrame:
+    """An empty frame of ``schema``: a local relation, no Spark job."""
+    return spark.createDataFrame(to_arrow_schema(schema).empty_table())
+
+
+def _read_partitions(spark: SparkSession, table: str,
+                     schema: ST.StructType, part: str,
+                     keys: list[int]) -> tuple[DataFrame, bool]:
+    """The ``part=k`` directories of ``table`` for ``keys``, read with
+    ``schema`` declared, and whether they fit in one scan split.
+
+    Only the directories that exist are listed: a writer creates a
+    partition directory only for a key that holds rows, and Spark
+    refuses a named path that does not exist. With none left, the frame
+    is empty. The ``isin`` filter stays on the frame, so the scan's
+    PartitionFilters carry it. Existence comes from one glob, no Spark
+    job.
+
+    "Fits in one split" means the listed files' bytes (the relation's
+    size, from the file listing Spark makes when the frame is built) are
+    at most ``spark.sql.files.maxPartitionBytes``: the most Spark's own
+    scan planning gives one task, so reading them in one task loses no
+    scan parallelism."""
+    fs, pattern = _fs_path(
+        spark, f"{table}/{part}={{{','.join(map(str, keys))}}}")
+    found = fs.globStatus(pattern) or []
+    if not found:
+        return _empty(spark, schema), True
+    frame = (spark.read.schema(schema).option("basePath", table)
+             .parquet(*[st.getPath().toString() for st in found]))
+    size = frame._jdf.queryExecution().analyzed().stats().sizeInBytes()
+    limit = (spark._jsparkSession.sessionState().conf()
+             .filesMaxPartitionBytes())
+    return frame.where(F.col(part).isin(keys)), size <= limit
+
+
+def _canonical(rows: DataFrame, one_split: bool) -> DataFrame:
+    """A lookup's rows with the store's canonical quad semantics (error
+    rows filtered, quad columns, deduplicated on ``QUAD_KEY``). Rows
+    that fit in one scan split are deduplicated in ONE partition: the
+    scan, filter and dedup are one stage with one task, no Exchange. A
+    larger read keeps the parallel scan and dedups through a shuffle."""
+    quads = quads_only(rows)
+    if one_split:
+        quads = quads.coalesce(1)
+    return quads.dropDuplicates(QUAD_KEY)
 
 
 def _dir_signature(spark: SparkSession, path: str) -> tuple | None:
     """(name, length, mtime) of every file directly under ``path``, or
     None when it does not exist — one FileSystem listing, no Spark job."""
-    sc = spark.sparkContext
-    p = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs, p = _fs_path(spark, path)
     if not fs.exists(p):
         return None
     return tuple(sorted((s.getPath().getName(), s.getLen(),
@@ -381,11 +428,13 @@ def read_url_quads(spark: SparkSession, out_dir: str, url: str,
     over a local one-row relation (no Spark job; a drift between reader
     and writer hashing would silently return empty lookups). Only that
     ``bucket=k`` directory is listed and read, the bucket PARTITION
-    filter stays in the plan, and parquet gets the url predicate. The
-    rows are one url's, so they are deduplicated in ONE partition: no
-    Exchange, and the warm lookup is one Spark job with one task. At
-    100 TB with B buckets this reads ~1/B of the store's files — the
-    access path a serving layer uses for per-document retrieval.
+    filter stays in the plan, and parquet gets the url predicate. When
+    the bucket's files fit in one scan split (:func:`_read_partitions`),
+    the dedup runs in ONE partition: no Exchange, and the warm lookup
+    is one Spark job with one task; a larger bucket keeps the parallel
+    scan and dedups through a shuffle. At 100 TB with B buckets this
+    reads ~1/B of the store's files — the access path a serving layer
+    uses for per-document retrieval.
 
     ``buckets`` must be the writer's bucket count: it is validated
     against the store's lineage row count (one row per NON-EMPTY
@@ -401,9 +450,9 @@ def read_url_quads(spark: SparkSession, out_dir: str, url: str,
             f"{buckets_written} buckets — a mismatched modulus would "
             "silently return empty lookups")
     k = _bucket_of(spark, url, buckets)
-    return (quads_only(read_store(spark, out_dir, [k])
-                       .where(F.col("url") == url))
-            .coalesce(1).dropDuplicates(_QUAD_KEY))
+    rows, one_split = _read_partitions(spark, f"{out_dir}/quads",
+                                       STORE_SCHEMA, "bucket", [k])
+    return _canonical(rows.where(F.col("url") == url), one_split)
 
 
 def _store_fingerprint(spark: SparkSession, out_dir: str) -> str:
@@ -436,9 +485,10 @@ def write_subject_index(spark: SparkSession, out_dir: str,
     idx_b = index_buckets or buckets
     quads = (read_store(spark, out_dir)
              .where(F.col("error").isNull())
-             .select("subj", "url", F.col("bucket").cast("long")
-                     .alias("bucket")).distinct())
-    idx = quads.withColumn("sbucket", bucket_expr("subj", idx_b))
+             .select("subj", "url", "bucket").distinct())
+    idx = (quads.withColumn("sbucket", bucket_expr("subj", idx_b))
+           .select(*[F.col(f.name).cast(f.dataType)
+                     for f in INDEX_SCHEMA.fields]))
     (idx.repartition("sbucket")
         .sortWithinPartitions("sbucket", "subj")
         .write.mode("overwrite").partitionBy("sbucket")
@@ -455,11 +505,14 @@ def read_subject_quads(spark: SparkSession, out_dir: str, subj: str,
     directory for the subject's (url, bucket) pairs (a driver collect
     bounded by ``max_fanout``), then read exactly those url-bucket
     directories with the subject predicate pushed down. Canonical quad
-    semantics (error-filtered, deduplicated in one partition, so no
-    Exchange). Never scans the store; both reads list only their own
-    directories and keep their partition filters, so a warm lookup is
-    two Spark jobs. A subject absent from the index returns an empty
-    frame with no further read.
+    semantics (error-filtered, deduplicated; in one partition with no
+    Exchange while the url-bucket files fit in one scan split, else
+    through a shuffle over the parallel scan). Never scans the store;
+    both reads list only their own directories and keep their
+    partition filters, so a warm lookup within one split is two Spark
+    jobs. A subject absent from the index, including one whose sbucket
+    directory holds no subject at all, returns an empty frame with no
+    further read.
 
     The index modulus comes from the index's own meta row (never a
     caller guess — a wrong modulus would prune the wrong directory and
@@ -487,9 +540,9 @@ def read_subject_quads(spark: SparkSession, out_dir: str, subj: str,
             f"{fp} != indexed {indexed_fp}) — rebuild "
             "with write_subject_index after mutating the store")
     sb = _bucket_of(spark, subj, int(idx_b))
-    hits = (_read_partitions(spark, f"{out_dir}/subj_index",
-                             _INDEX_SCHEMA, "sbucket", [sb])
-            .where(F.col("subj") == subj).select("url", "bucket")
+    index, _ = _read_partitions(spark, f"{out_dir}/subj_index",
+                                INDEX_SCHEMA, "sbucket", [sb])
+    hits = (index.where(F.col("subj") == subj).select("url", "bucket")
             .limit(max_fanout + 1).collect())
     if len(hits) > max_fanout:
         raise ValueError(
@@ -497,14 +550,13 @@ def read_subject_quads(spark: SparkSession, out_dir: str, subj: str,
             "a hub entity is not a point lookup; join the store "
             "against the pruned index instead")
     if not hits:
-        return quads_only(spark.createDataFrame(
-            to_arrow_schema(STORE_SCHEMA).empty_table()))
+        return quads_only(_empty(spark, STORE_SCHEMA))
     bucket_set = sorted({int(r["bucket"]) for r in hits})
     url_set = sorted({r["url"] for r in hits})
-    return (quads_only(read_store(spark, out_dir, bucket_set)
-                       .where(F.col("url").isin(url_set)
-                              & (F.col("subj") == subj)))
-            .coalesce(1).dropDuplicates(_QUAD_KEY))
+    rows, one_split = _read_partitions(spark, f"{out_dir}/quads",
+                                       STORE_SCHEMA, "bucket", bucket_set)
+    return _canonical(rows.where(F.col("url").isin(url_set)
+                                 & (F.col("subj") == subj)), one_split)
 
 
 def check_snapshot(spark: SparkSession, out_dir: str,

@@ -70,4 +70,4 @@ def assert_no_errors(parsed: DataFrame, sample: int = 5) -> None:
 def quads_table(spark: SparkSession, out_dir: str) -> DataFrame:
     """The committed quads (error rows filtered), deduplicated."""
     return (quads_only(lin.read_store(spark, out_dir))
-            .dropDuplicates(["url", "blk", "subj", "pred", "obj", "graph"]))
+            .dropDuplicates(lin.QUAD_KEY))

@@ -352,6 +352,20 @@ def test_subject_index_dereference(spark, pages):
         assert miss.count() == 0
         assert miss.columns == ["url", "blk", "subj", "pred", "obj",
                                 "graph"]
+        # the index writer creates an sbucket=k directory only for a k
+        # that holds a subject: with far more index buckets than
+        # subjects, an absent subject that hashes to a missing
+        # directory is still an empty lookup, not a missing-path error
+        lin.write_subject_index(spark, out, buckets, 4096)
+        present = set(os.listdir(f"{out}/subj_index"))
+        miss = next(
+            s for s in (f"<http://nowhere.example.org/none{i}>"
+                        for i in range(100))
+            if f"sbucket={lin._bucket_of(spark, s, 4096)}" not in present)
+        got = lin.read_subject_quads(spark, out, miss)
+        assert got.count() == 0
+        assert got.columns == ["url", "blk", "subj", "pred", "obj",
+                               "graph"]
         # a store mutation after the index build must raise STALE, not
         # silently omit the new documents' quads
         wave = extract_and_parse(
@@ -407,6 +421,40 @@ def test_point_lookups_run_one_and_two_jobs(spark, pages):
         assert _jobs_run(spark, "lookup-subject", subj_op) == 2
         assert _jobs_run(spark, "lookup-miss", miss_op) == 1
     finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def test_lookups_past_one_split_keep_parallel_scan(spark, pages):
+    """A lookup dedups in one partition only while its directories fit
+    in one scan split (``spark.sql.files.maxPartitionBytes``). Past
+    that, the scan stays parallel and the dedup shuffles: the plan has
+    an Exchange and the rows are the same."""
+    out = tempfile.mkdtemp(prefix="kg_split_")
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    try:
+        buckets = 16
+        parsed = extract_and_parse(pages, CONTEXTS)
+        lin.write_bucketed(lin.with_bucket(parsed, buckets), out)
+        lin.write_subject_index(spark, out, buckets)
+        url = pages.select("url").first()["url"]
+        subj = (pipe.quads_table(spark, out).where(F.col("url") == url)
+                .where(F.col("subj").startswith("<"))
+                .select("subj").first()["subj"])
+
+        def lookups():
+            return (lin.read_url_quads(spark, out, url, buckets),
+                    lin.read_subject_quads(spark, out, subj))
+
+        small = [sorted(map(tuple, df.collect())) for df in lookups()]
+        spark.conf.set(key, "1k")
+        for df, want in zip(lookups(), small):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange" in plan, plan
+            assert sorted(map(tuple, df.collect())) == want
+        assert all(small)
+    finally:
+        spark.conf.set(key, old)
         shutil.rmtree(out, ignore_errors=True)
 
 

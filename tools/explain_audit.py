@@ -254,7 +254,8 @@ def main() -> None:
     # the lineage and index-meta facts, a url lookup scans only the url's
     # bucket=k directory, and an entity lookup scans one sbucket=s index
     # directory, then only the subject's bucket directories; no query
-    # shuffles (the dedup is one partition). The key's bucket is one
+    # shuffles (the audit store's reads fit in one scan split, so the
+    # dedup is one partition). The key's bucket is one
     # more query, over a local relation: no scan and no Spark job.
     from pyspark.sql import functions as F
     from jsonld_streaming_parser_js_spark.plans.pipeline import quads_table
